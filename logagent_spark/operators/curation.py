@@ -314,13 +314,6 @@ def chunk_tokens(
     )
 
 
-def shingle_hashes(text: Column, k: int = 5) -> Column:
-    """Per-doc DISTINCT md5 hashes of k-word shingles (scan-side
-    dedup before any explode, so repeated n-grams inside one doc cost
-    one row downstream, not one per occurrence)."""
-    return F.array_distinct(F.transform(ts.shingles(text, k), F.md5))
-
-
 def _shingle_hash_rows(
     df: DataFrame, id_cols: list, text_col: str, k: int
 ) -> DataFrame:

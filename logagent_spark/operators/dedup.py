@@ -16,8 +16,8 @@ Scale design (the whole point — 10^12 docs):
     codegen; near-dup pairs via banded key join on 16-bit chunks
     (Hamming<=3 => at least one of 4 chunks equal — pigeonhole);
   * embedding near-dup: random-hyperplane LSH with seeded literal
-    hyperplanes — sign-bit bucket as a Column expression, cosine check
-    within buckets only.
+    hyperplanes — banded sign-bit keys from one Arrow/numpy pass, cosine
+    check within buckets only (one applyInPandas call per bucket).
 """
 
 from __future__ import annotations
@@ -573,16 +573,6 @@ def hyperplane_bits(emb: Column, planes: np.ndarray) -> list[Column]:
     return bits
 
 
-def hyperplane_bucket(
-    emb: Column, dim: int, n_planes: int = 16, seed: int = 42
-) -> Column:
-    """Full sign-bucket id (all planes concatenated)."""
-    bucket = F.lit(0)
-    for b in hyperplane_bits(emb, seeded_planes(n_planes, dim, seed)):
-        bucket = bucket * 2 + b
-    return bucket
-
-
 def plane_chunks(n_planes: int, n_chunks: int = 3) -> list[list[int]]:
     """Split plane indices into n_chunks contiguous bands (multi-probe
     pigeonhole: two buckets within hamming <= n_chunks - 1 of each other
@@ -609,16 +599,21 @@ def _hyperplane_band_keys_pandas(
     trap). Each plane's dot accumulates as a sequential left fold over
     DIMENSIONS, vectorized across rows x planes — one rounded multiply
     + one rounded add per step, the exact rounding sequence of the
-    expression fold, so band keys are bit-identical for valid vectors.
-    Invalid vectors (NULL, ragged length, NULL element) take key 0 in
-    every band, matching the expr's NULL-propagating fold under
-    `when(dot >= 0, 1).otherwise(0)`; a NaN dot reached from inf
-    arithmetic takes bit 1 (Spark orders NaN above every number). A
-    literal-NaN ELEMENT is indistinguishable from a NULL element after
-    Arrow and yields key 0 where the expr would emit all-ones bits —
-    the documented assign_buckets_pandas divergence, unreachable on a
-    real embedding corpus. The band explode rides the same pass: one
-    (id, emb, band, key) row per band comes straight out of Arrow."""
+    expression fold (`hyperplane_bits`, the test reference), so band
+    keys are bit-identical for valid vectors. Invalid vectors (NULL,
+    ragged length, NULL element) take key 0 in every band, matching the
+    expr's NULL-propagating fold under `when(dot >= 0, 1).otherwise(0)`;
+    a NaN dot reached from inf arithmetic takes bit 1 (Spark orders NaN
+    above every number). A literal-NaN ELEMENT is indistinguishable from
+    a NULL element after Arrow and yields key 0 where the expr would
+    emit all-ones bits — the documented assign_buckets_pandas
+    divergence, unreachable on a real embedding corpus. Keys accumulate
+    in int32 (`key * 2 + bit`, most significant plane first), so a
+    32-bit band (the `suggest_lsh_config` maximum) is the two's-
+    complement int32 of its sign bits: the wrap is a bijection, and
+    bucket equality is all banding needs. The band explode rides the
+    same pass: one (id, emb, band, key) row per band comes straight out
+    of Arrow."""
     planes = np.asarray(planes, dtype=np.float64)
     n_planes, dim = planes.shape
     n_chunks = len(chunks)
@@ -686,7 +681,6 @@ def embedding_candidate_pairs(
     seed: int = 42,
     n_chunks: int = 3,
     max_bucket_size: int = 4096,
-    strategy: str = "pandas",
 ) -> DataFrame:
     """Candidate embedding pairs (a, b, cos) via banded hyperplane LSH.
 
@@ -696,116 +690,41 @@ def embedding_candidate_pairs(
     guaranteed found (single-probe bucketing misses any pair straddling
     ONE hyperplane; banding trades more candidates for that recall).
 
-    Two scoring strategies with BIT-IDENTICAL cos values (the same
-    sequential-fold rounding sequence — the knn_join_ivf precedent):
-
-    * ``pandas`` (default, the scale path) — embeddings ride the band
-      explode once, buckets score ALL their pairs in one Arrow/numpy
-      pass per (band, key) group (`_seq` folds over dimensions,
-      vectorized across the pair matrix), and the oversized-bucket cap
-      is a per-group length check — no per-pair join ever materializes
-      vectors. The band keys themselves come from the same Arrow
-      family (`_hyperplane_band_keys_pandas`): n_planes interpreted
-      zip_with/aggregate folds per row became one numpy pass with the
-      identical fold rounding sequence (r7). r6's expr path joined the 66.7M-candidate pair list back
-      to the embeddings (TWO shuffles of vectors keyed by pair id) and
-      scored each pair with an INTERPRETED HOF fold (~10 us/pair; see
-      CLAUDE.md) — that join + fold dominated the 100k-vector bench.
-    * ``expr`` — the r6 shape (skinny pair self-join, embeddings
-      re-attached, JVM Column fold). Kept because it is the
-      oracle-shaped plan and the right form when vectors are huge
-      relative to the candidate count.
-
-    Degenerate buckets (near-constant embedding clusters) are capped in
-    both strategies — they are exact-dup clusters in disguise.
+    The band keys come from one Arrow/numpy pass
+    (`_hyperplane_band_keys_pandas`), and the embeddings ride that band
+    explode once: each (band, key) bucket scores ALL its pairs in one
+    applyInPandas call (sequential folds over dimensions, vectorized
+    across the pair matrix), so no per-pair join ever materializes
+    vectors. The cos values are bit-identical to the `cosine()` Column
+    fold and the DuckDB oracle's fold (same rounding sequence; pinned by
+    test_dedup). Degenerate buckets (near-constant embedding clusters,
+    exact-dup clusters in disguise) are capped by a per-group length
+    check at `max_bucket_size` rows.
     """
-    if strategy == "pandas":
-        with_keys = _hyperplane_band_keys_pandas(
-            df, id_col, emb_col,
-            seeded_planes(n_planes, dim, seed),
-            plane_chunks(n_planes, n_chunks),
-        )
-        scored = with_keys.groupBy("band", "key").applyInPandas(
-            _score_bucket_pairs_fn(max_bucket_size),
-            T.StructType([
-                T.StructField("a", df.schema[id_col].dataType),
-                T.StructField("b", df.schema[id_col].dataType),
-                T.StructField("cos", T.DoubleType()),
-            ]),
-        )
-        return scored.distinct()
-    if strategy != "expr":
-        raise ValueError(f"unknown strategy `{strategy}`")
-
-    bits = hyperplane_bits(F.col(emb_col), seeded_planes(n_planes, dim, seed))
-    chunk_keys = []
-    for c, idxs in enumerate(plane_chunks(n_planes, n_chunks)):
-        key = F.lit(0)
-        for i in idxs:
-            key = key * 2 + bits[i]
-        chunk_keys.append(
-            F.struct(F.lit(c).alias("band"), key.alias("key"))
-        )
-
-    skinny = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array(*chunk_keys)).alias("_bk"),
-    ).select("_id", "_bk.band", "_bk.key")
-
-    sizes = skinny.groupBy("band", "key").agg(F.count(F.lit(1)).alias("_n"))
-    bounded = skinny.join(
-        sizes.filter(F.col("_n") <= max_bucket_size), ["band", "key"]
+    with_keys = _hyperplane_band_keys_pandas(
+        df, id_col, emb_col,
+        seeded_planes(n_planes, dim, seed),
+        plane_chunks(n_planes, n_chunks),
     )
-    a = bounded.select("band", "key", F.col("_id").alias("a"))
-    b = bounded.select("band", "key", F.col("_id").alias("b"))
-    pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    scored = with_keys.groupBy("band", "key").applyInPandas(
+        _score_bucket_pairs_fn(max_bucket_size),
+        T.StructType([
+            T.StructField("a", df.schema[id_col].dataType),
+            T.StructField("b", df.schema[id_col].dataType),
+            T.StructField("cos", T.DoubleType()),
+        ]),
     )
-
-    # norms hoisted to the per-VECTOR projection: computing them inside
-    # the per-pair cosine would evaluate two squared-sum folds per
-    # candidate pair (~2/3 of the verify cost at high cand_frac) instead
-    # of once per vector; the arithmetic is unchanged (dot / (na * nb))
-    # so results are bit-identical
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(emb_col), lambda x: x * x),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-    )
-    emb = df.select(
-        F.col(id_col).alias("_eid"), F.col(emb_col).alias("_e"),
-        norm.alias("_n"),
-    )
-    ea = emb.select(F.col("_eid").alias("a"), F.col("_e").alias("_ea"),
-                    F.col("_n").alias("_na"))
-    eb = emb.select(F.col("_eid").alias("b"), F.col("_e").alias("_eb"),
-                    F.col("_n").alias("_nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("_ea"), F.col("_eb"), lambda x, y: x * y),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
-    cos = F.when(
-        (F.col("_na") > 0) & (F.col("_nb") > 0),
-        dot / (F.col("_na") * F.col("_nb")),
-    ).otherwise(F.lit(0.0))
-    return (
-        pairs.join(ea, "a")
-        .join(eb, "b")
-        .select("a", "b", cos.alias("cos"))
-    )
+    return scored.distinct()
 
 
 def _fold_cos_pair(va, vb):
-    """Scalar twin of the expr-path cosine for one pair, reproducing the
-    JVM fold's NULL semantics exactly: a NULL/None-element vector has a
-    NULL norm (cos -> 0.0 via the otherwise branch), a zero norm yields
-    0.0, and a LENGTH-MISMATCHED pair with valid norms yields NULL
-    (zip_with pads with null, the fold goes sticky-null). Python float
-    arithmetic is the same IEEE double sequence as the fold."""
+    """Scalar twin of `cosine()` (and the DuckDB oracle's fold) for one
+    pair, reproducing the JVM fold's NULL semantics exactly: a
+    NULL/None-element vector has a NULL norm (cos -> 0.0 via the
+    otherwise branch), a zero norm yields 0.0, and a LENGTH-MISMATCHED
+    pair with valid norms yields NULL (zip_with pads with null, the fold
+    goes sticky-null). Python float arithmetic is the same IEEE double
+    sequence as the fold."""
     def norm2(v):
         if v is None:
             return None
@@ -832,7 +751,7 @@ def _fold_cos_pair(va, vb):
 
 def _score_bucket_pairs_fn(max_bucket_size: int):
     """applyInPandas scorer for one LSH bucket: all pairs (a < b) with
-    the sequential-fold cosine (bit-identical to the expr strategy).
+    the sequential-fold cosine (bit-identical to `_fold_cos_pair`).
     Groups over the cap emit nothing (the degenerate-bucket guard)."""
 
     def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -848,7 +767,7 @@ def _score_bucket_pairs_fn(max_bucket_size: int):
             for v in vecs
         )
         ii, jj = np.triu_indices(n, k=1)
-        keep = ids[ii] != ids[jj]  # a < b is STRICT in the expr path
+        keep = ids[ii] != ids[jj]  # a < b is STRICT
         ii, jj = ii[keep], jj[keep]
         if uniform and len(vecs[0]) > 0:
             e = np.asarray(
@@ -955,6 +874,9 @@ def suggest_lsh_config(
     fraction stays under `max_cand_frac`; if no config can (low
     thresholds are inherently hard for hyperplane LSH), the constraint
     relaxes by doubling and the returned `expected_cand_frac` says so.
+
+    bits_per_band tops out at 32, the width of the int32 band key (see
+    `_hyperplane_band_keys_pandas`).
 
     Returns {n_planes, n_chunks, bits_per_band, expected_recall,
     expected_cand_frac, expected_cand_pairs (when n given)} — feed the

@@ -33,7 +33,6 @@ Semantics reproduced exactly:
 
 from __future__ import annotations
 
-import json
 import subprocess
 from dataclasses import dataclass, field
 
@@ -185,8 +184,3 @@ def compile_rewrite(spec: RewriteSpec, schema: Schema) -> CompiledRewrite:
         return CompiledRewrite(lookup=lk)
 
     raise ValueError(f"unsupported rewriter mode `{mode}`")
-
-
-def oracle_json_encode(value) -> bytes:
-    """Driver-side helper matching Go json.Marshal for oracle fixtures."""
-    return json.dumps(value, separators=(",", ":"), ensure_ascii=False).encode()

@@ -225,32 +225,25 @@ def kmeans_refine(
     centroids: np.ndarray,
     *,
     iters: int = 3,
-    strategy: str = "pandas",
 ) -> np.ndarray:
     """Distributed Lloyd refinement of the IVF centroids.
 
-    Each round: assignment is the scan-side argmax expression
-    (centroid_assignment — no UDF, no shuffle of vectors beyond the
-    groupBy on the tiny bucket key), the new centroid is one hash
-    aggregate of per-dimension means (dim `avg` exprs — map-side
-    partial aggregation makes this one skinny shuffle of k×dim
-    doubles). Only k×dim floats ever reach the driver per round; at
-    10^12 rows you run this on a sample first, then one final
+    Each round: assignment is one Arrow/numpy mapInPandas pass
+    (`assign_buckets_pandas` — bit-identical to the `centroid_assignment`
+    expression fold, without its C interpreted HOF folds per row), the
+    new centroid is one hash aggregate of per-dimension means (dim `avg`
+    exprs — map-side partial aggregation makes this one skinny shuffle
+    of k×dim doubles). Only k×dim floats ever reach the driver per
+    round; at 10^12 rows you run this on a sample first, then one final
     assignment pass. Empty clusters keep their previous centroid.
     Centroids are re-unit-normalized each round (the index uses
     dot-product probing on unit centroids)."""
     cents = np.asarray(centroids, dtype=float)
     k, dim = cents.shape
     for _ in range(iters):
-        if strategy == "pandas":
-            assigned = assign_buckets_pandas(
-                df.select(F.col(emb_col).alias("_e")), "_e", cents, "_b"
-            )
-        else:
-            assigned = df.select(
-                centroid_assignment(F.col(emb_col), cents).alias("_b"),
-                F.col(emb_col).alias("_e"),
-            )
+        assigned = assign_buckets_pandas(
+            df.select(F.col(emb_col).alias("_e")), "_e", cents, "_b"
+        )
         means = assigned.groupBy("_b").agg(
             *[F.avg(F.col("_e")[i]).alias(f"m{i}") for i in range(dim)]
         ).collect()

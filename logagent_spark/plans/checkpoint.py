@@ -200,12 +200,9 @@ class CheckpointedRunner:
         out = out.observe(obs, *metrics)
 
         data_dir = os.path.join(self.out_dir, "data", f"chunk={cid}")
-        # 2 tasks per core, same sizing as write_sinks (a no-op when the
-        # chunk has fewer partitions): bounds per-chunk task-commit and
-        # per-file writer overhead, which recurs once PER CHUNK here
-        spark = out.sparkSession
-        out = out.coalesce(2 * spark.sparkContext.defaultParallelism)
-        out.write.mode("overwrite").partitionBy(SINK_COL).parquet(data_dir)
+        # write_sinks' 2-tasks-per-core sizing matters more here: its
+        # per-task commit and per-file writer overhead recurs PER CHUNK
+        self.pipe.write_sinks(out, data_dir)
 
         got = obs.get
         sink_counts = {

@@ -22,7 +22,7 @@ Spark-first re-expression:
     ``struct(sink, rendered)`` for the sinks whose validator gate passes,
     then one ``explode``. One scan, one write job (``partitionBy(sink)``),
     regardless of sink count — at 100 TB this beats N filtered scans by
-    N× on input I/O. (A cache-per-sink strategy is kept for comparison.)
+    N× on input I/O.
   * Per-handler counters become ``groupBy(sink, lang, time_bucket).count()``
     over the exploded frame; dead letters are counted by reason.
 
@@ -398,58 +398,21 @@ class CompiledPipeline:
     # ------------------------------------------------------------------
     # stage 4: sinks
     # ------------------------------------------------------------------
-    def write_sinks(
-        self,
-        routed: DataFrame,
-        out_dir: str,
-        *,
-        strategy: str = "multiplex",
-        mode: str = "overwrite",
-    ) -> None:
-        """Write every sink in one job.
+    def write_sinks(self, routed: DataFrame, out_dir: str) -> None:
+        """Write every sink in one shuffle-free job partitioned by sink —
+        ``{out_dir}/sink=<name>/``, overwriting ``out_dir``. Table sinks
+        store their configured columns; text sinks store the rendered
+        line. The uniform parquet schema is the union (columnar storage
+        makes unused columns cheap).
 
-        multiplex: single shuffle-free write partitioned by sink —
-        ``{out_dir}/sink=<name>/``. Table sinks store their configured
-        columns; text sinks store the rendered line. The uniform parquet
-        schema is the union (columnar storage makes unused columns cheap).
-
-        cache: persist + one filtered write per sink (the reference's
-        handler loop shape) — kept for benchmarking the strategies.
-
-        The multiplex write coalesces to 2 tasks per core (no shuffle):
-        one task per scan split means one commit + one parquet file per
-        task per sink, and that per-task/per-file overhead is a
-        parallelism-independent floor the scaling ratio pays at every
-        cluster size (measured at local[32]/local[8]: efficiency 0.877
-        vs 0.805 in one interleaved window; one wave has no straggler
-        headroom and measured worse).
+        The write coalesces to 2 tasks per core (no shuffle; a no-op
+        when the frame has fewer partitions): one task per scan split
+        means one commit + one parquet file per task per sink, and that
+        per-task/per-file overhead is a parallelism-independent floor
+        the scaling ratio pays at every cluster size (measured at
+        local[32]/local[8]: efficiency 0.877 vs 0.805 in one interleaved
+        window; one wave has no straggler headroom and measured worse).
         """
-        if strategy == "multiplex":
-            spark = routed.sparkSession
-            routed = routed.coalesce(
-                2 * spark.sparkContext.defaultParallelism
-            )
-            routed.write.mode(mode).partitionBy(SINK_COL).parquet(out_dir)
-            return
-        if strategy == "cache":
-            routed.persist()
-            try:
-                for i, h in enumerate(self.spec.handlers):
-                    name = h.sink_name(i)
-                    sink_df = routed.filter(F.col(SINK_COL) == name)
-                    if h.mode == "database" and h.columns:
-                        # missing configured column => NULL (database.go:96-100)
-                        sink_df = sink_df.select(*[
-                            F.col(c) if c in routed.columns
-                            else F.lit(None).alias(c)
-                            for c in h.columns
-                        ])
-                    else:
-                        sink_df = sink_df.select(RENDERED_COL)
-                    sink_df.write.mode(mode).parquet(
-                        f"{out_dir}/sink={name}"
-                    )
-            finally:
-                routed.unpersist()
-            return
-        raise ValueError(f"unknown write strategy `{strategy}`")
+        spark = routed.sparkSession
+        routed = routed.coalesce(2 * spark.sparkContext.defaultParallelism)
+        routed.write.mode("overwrite").partitionBy(SINK_COL).parquet(out_dir)

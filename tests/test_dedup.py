@@ -303,13 +303,15 @@ def test_embedding_near_duplicates_auto_config(spark):
 
 def test_hyperplane_band_keys_pandas_bit_identical(spark):
     """r7: the Arrow band-key pass must reproduce the expr fold's band
-    keys bit-exactly — sequential fold over dimensions, `dot >= 0` with
-    Spark's NaN-is-largest ordering — including edge vectors (NULL /
-    ragged / NULL-element -> key 0 in every band; inf arithmetic whose
-    dot goes NaN -> bit 1), and the two candidate strategies must emit
-    the same pair set. (cos VALUES on inf vectors differ NULL-vs-NaN in
-    the scorer's Arrow return — pre-existing, unreachable on real
-    embeddings, out of scope here.)"""
+    keys (`hyperplane_bits`) bit-exactly — sequential fold over
+    dimensions, `dot >= 0` with Spark's NaN-is-largest ordering —
+    including edge vectors (NULL / ragged / NULL-element -> key 0 in
+    every band; inf arithmetic whose dot goes NaN -> bit 1). The one
+    documented divergence, a literal-NaN element, is pinned too. The
+    candidate pairs must be exactly the a < b pairs sharing a bucket
+    under the cap, with `_fold_cos_pair` cos values. (cos VALUES on inf
+    vectors differ NULL-vs-NaN in the scorer's Arrow return —
+    unreachable on real embeddings, out of scope here.)"""
     dim, n_planes, n_chunks = 16, 8, 3
     rng = np.random.RandomState(7)
     rows = [(str(i), rng.randn(dim).tolist()) for i in range(120)]
@@ -320,6 +322,7 @@ def test_hyperplane_band_keys_pandas_bit_identical(spark):
         ("e_null", None),
         ("e_ragged", [1.0] * (dim - 1)),
         ("e_nullel", [None] + [1.0] * (dim - 1)),
+        ("e_nan", [float("nan")] + [1.0] * (dim - 1)),
         ("e_zero", [0.0] * dim),
         ("e_inf", [float("inf")] + [0.0] * (dim - 1)),
         ("e_infnan", [float("inf"), float("-inf")] + [1.0] * (dim - 2)),
@@ -346,22 +349,88 @@ def test_hyperplane_band_keys_pandas_bit_identical(spark):
         for r in df.select(*sel).collect()
         for c in range(n_chunks)
     }
-    assert got == exp
+    # documented divergence: after Arrow a literal-NaN element looks like
+    # a NULL element, so the pandas key is 0 where the expr fold's NaN
+    # dot sorts above 0 and sets every bit
+    for c, idxs in enumerate(chunks):
+        assert got[("e_nan", c)] == 0
+        assert exp[("e_nan", c)] == 2 ** len(idxs) - 1
+    assert {k: v for k, v in got.items() if k[0] != "e_nan"} == {
+        k: v for k, v in exp.items() if k[0] != "e_nan"
+    }
     # every edge vector really takes key 0 in every band
     for vid in ("e_null", "e_ragged", "e_nullel"):
         assert all(got[(vid, c)] == 0 for c in range(n_chunks))
 
-    pair_sets = [
-        {
-            (r["a"], r["b"])
-            for r in dedup.embedding_candidate_pairs(
-                df, "vid", "emb", dim=dim, n_planes=n_planes,
-                n_chunks=n_chunks, strategy=s,
-            ).collect()
-        }
-        for s in ("pandas", "expr")
-    ]
-    assert pair_sets[0] == pair_sets[1]
+    # expected candidates from the reference keys (plus the pinned NaN
+    # divergence): a < b sharing a (band, key) bucket of <= cap rows,
+    # with the cap at the median bucket size so some buckets are dropped
+    keys = dict(exp)
+    keys.update({("e_nan", c): 0 for c in range(n_chunks)})
+    buckets: dict = {}
+    for (vid, c), k in keys.items():
+        buckets.setdefault((c, k), []).append(vid)
+    sizes = sorted(len(m) for m in buckets.values())
+    cap = sizes[len(sizes) // 2]
+    assert sizes[-1] > cap
+    want = {
+        (a, b)
+        for m in buckets.values() if len(m) <= cap
+        for a in m for b in m if a < b
+    }
+    cand = dedup.embedding_candidate_pairs(
+        df, "vid", "emb", dim=dim, n_planes=n_planes,
+        n_chunks=n_chunks, max_bucket_size=cap,
+    ).collect()
+    assert {(r["a"], r["b"]) for r in cand} == want
+    vec = dict(rows)
+    regular = {
+        vid for vid, v in vec.items()
+        if v is not None and len(v) == dim
+        and all(x is not None and np.isfinite(x) for x in v)
+    }
+    checked = 0
+    for r in cand:
+        if r["a"] in regular and r["b"] in regular:
+            assert r["cos"] == dedup._fold_cos_pair(vec[r["a"]], vec[r["b"]])
+            checked += 1
+    assert checked > 0
+
+
+def test_embedding_candidate_pairs_32_bit_band(spark):
+    """`suggest_lsh_config` allows 32 bits per band: the int32 band key
+    is then the two's-complement of the 32 sign bits (no overflow
+    error), and a planted identical pair still shares its one bucket."""
+    dim, n_planes = 16, 32
+    rng = np.random.RandomState(11)
+    rows = [(i, rng.randn(dim).tolist()) for i in range(40)]
+    rows.append((40, rows[7][1]))
+    df = spark.createDataFrame(rows, "vid long, emb array<double>")
+
+    planes = dedup.seeded_planes(n_planes, dim, 42)
+    got = {
+        r["_id"]: r["key"]
+        for r in dedup._hyperplane_band_keys_pandas(
+            df, "vid", "emb", planes, [list(range(n_planes))]
+        ).collect()
+    }
+    bit_rows = df.select(
+        "vid", *[b.alias(f"b{i}") for i, b in
+                 enumerate(dedup.hyperplane_bits(F.col("emb"), planes))]
+    ).collect()
+    for r in bit_rows:
+        u = 0
+        for i in range(n_planes):
+            u = u * 2 + r[f"b{i}"]
+        assert got[r["vid"]] == (u - 2 ** 32 if u >= 2 ** 31 else u)
+    assert any(k < 0 for k in got.values())
+    assert got[7] == got[40]
+
+    cand = dedup.embedding_candidate_pairs(
+        df, "vid", "emb", dim=dim, n_planes=n_planes, n_chunks=1,
+    ).collect()
+    cos = {(r["a"], r["b"]): r["cos"] for r in cand}
+    assert cos[(7, 40)] == dedup._fold_cos_pair(rows[7][1], rows[7][1])
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
