@@ -17,7 +17,10 @@ Scale design (the whole point — 10^12 docs):
     (Hamming<=3 => at least one of 4 chunks equal — pigeonhole);
   * embedding near-dup: random-hyperplane LSH with seeded literal
     hyperplanes — banded sign-bit keys from one Arrow/numpy pass, cosine
-    check within buckets only (one applyInPandas call per bucket).
+    check within buckets only (one grouped applyInArrow call per bucket,
+    behind a (band, key) exchange with an explicit partition count:
+    pair work is quadratic in bucket rows, so AQE's byte-sized
+    coalescing of that small shuffle would leave one core scoring).
 """
 
 from __future__ import annotations
@@ -693,21 +696,34 @@ def embedding_candidate_pairs(
     The band keys come from one Arrow/numpy pass
     (`_hyperplane_band_keys_pandas`), and the embeddings ride that band
     explode once: each (band, key) bucket scores ALL its pairs in one
-    applyInPandas call (sequential folds over dimensions, vectorized
-    across the pair matrix), so no per-pair join ever materializes
-    vectors. The cos values are bit-identical to the `cosine()` Column
-    fold and the DuckDB oracle's fold (same rounding sequence; pinned by
-    test_dedup). Degenerate buckets (near-constant embedding clusters,
-    exact-dup clusters in disguise) are capped by a per-group length
-    check at `max_bucket_size` rows.
+    grouped applyInArrow call (sequential folds over dimensions,
+    vectorized across the pairs; a/b are Arrow `take`s of the sorted
+    ids), so no per-pair join ever materializes vectors. The cos values
+    are bit-identical to the `cosine()` Column fold and the DuckDB
+    oracle's fold (same rounding sequence; pinned by test_dedup).
+    Degenerate buckets (near-constant embedding clusters, exact-dup
+    clusters in disguise) are capped by a per-group length check at
+    `max_bucket_size` rows.
+
+    The (band, key) rows are hash-repartitioned to
+    `spark.sql.shuffle.partitions` partitions (AQE's pre-coalescing
+    count) before the grouped scorer. Pair work grows with the square of
+    bucket rows while AQE sizes a shuffle by its bytes, so AQE would
+    coalesce this ~1 MB shuffle into one partition and one core would
+    score every bucket. An explicit partition count is never coalesced,
+    and it already satisfies the groupBy's distribution, so no second
+    exchange appears.
     """
     with_keys = _hyperplane_band_keys_pandas(
         df, id_col, emb_col,
         seeded_planes(n_planes, dim, seed),
         plane_chunks(n_planes, n_chunks),
     )
-    scored = with_keys.groupBy("band", "key").applyInPandas(
-        _score_bucket_pairs_fn(max_bucket_size),
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    scored = with_keys.repartition(parts, "band", "key").groupBy(
+        "band", "key"
+    ).applyInArrow(
+        _score_bucket_pairs_arrow(max_bucket_size),
         T.StructType([
             T.StructField("a", df.schema[id_col].dataType),
             T.StructField("b", df.schema[id_col].dataType),
@@ -749,51 +765,67 @@ def _fold_cos_pair(va, vb):
     return acc / (na * nb)
 
 
-def _score_bucket_pairs_fn(max_bucket_size: int):
-    """applyInPandas scorer for one LSH bucket: all pairs (a < b) with
-    the sequential-fold cosine (bit-identical to `_fold_cos_pair`).
-    Groups over the cap emit nothing (the degenerate-bucket guard)."""
+def _score_bucket_pairs_arrow(max_bucket_size: int):
+    """applyInArrow scorer for one LSH bucket: all pairs (a < b, strict)
+    with the sequential-fold cosine (bit-identical to `_fold_cos_pair`).
+    Groups of fewer than 2 rows or over the cap emit nothing (the
+    degenerate-bucket guard). Ids are sorted with Arrow's stable sort
+    (NULLs last) and the a/b columns are `take`s of that sorted array,
+    so no per-pair Python object is made. A NULL element reads as NaN,
+    as it does after any Arrow-to-numpy transfer, and a NaN cos is
+    returned as NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
+    def score(tbl: "pa.Table") -> "pa.Table":
+        n = tbl.num_rows
+        id_type = tbl.schema.field("_id").type
         if n < 2 or n > max_bucket_size:
-            return pd.DataFrame({"a": [], "b": [], "cos": []})
-        pdf = pdf.sort_values("_id", kind="mergesort", ignore_index=True)
-        ids = pdf["_id"].to_numpy()
-        vecs = list(pdf["_e"])
-        uniform = all(
-            v is not None and len(v) == len(vecs[0])
-            and not any(x is None for x in v)
-            for v in vecs
-        )
+            return pa.table({
+                "a": pa.array([], id_type), "b": pa.array([], id_type),
+                "cos": pa.array([], pa.float64()),
+            })
+        tbl = tbl.take(pc.sort_indices(tbl["_id"]))
+        ids = tbl["_id"].combine_chunks()
+        emb = tbl["_e"].combine_chunks()
+        # equal ids (NULLs included) share a dense rank; they never pair
+        rank = pc.rank(ids, tiebreaker="dense").to_numpy()
         ii, jj = np.triu_indices(n, k=1)
-        keep = ids[ii] != ids[jj]  # a < b is STRICT
+        keep = rank[ii] != rank[jj]
         ii, jj = ii[keep], jj[keep]
-        if uniform and len(vecs[0]) > 0:
-            e = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in vecs]
-            )
+        off = emb.offsets.to_numpy()
+        vals = emb.values.to_numpy(zero_copy_only=False)
+        lens = np.diff(off)
+        if emb.null_count == 0 and lens[0] > 0 and (lens == lens[0]).all():
+            e = np.asarray(vals[off[0]:off[-1]], dtype=np.float64)
+            cols = e.reshape(n, lens[0]).T
             # sequential left folds over dimensions (vectorized across
-            # the pair matrix): one rounded multiply + one rounded add
+            # the kept pairs): one rounded multiply + one rounded add
             # per step, the exact expr/DuckDB rounding sequence
-            dot = np.zeros((n, n), dtype=np.float64)
+            dot = np.zeros(len(ii), dtype=np.float64)
             n2 = np.zeros(n, dtype=np.float64)
-            for d in range(e.shape[1]):
-                col = e[:, d]
-                dot += col[:, None] * col[None, :]
+            for col in cols:
+                dot += col[ii] * col[jj]
                 n2 += col * col
             en = np.sqrt(n2)
-            denom = en[:, None] * en[None, :]
+            na, nb = en[ii], en[jj]
             with np.errstate(divide="ignore", invalid="ignore"):
-                cosm = dot / denom
-            valid = (en[:, None] > 0) & (en[None, :] > 0)
-            cosm = np.where(valid, cosm, 0.0)
-            cos_vals = cosm[ii, jj]
+                cos_vals = np.where((na > 0) & (nb > 0), dot / (na * nb), 0.0)
+            cos = pa.array(cos_vals, pa.float64(), mask=np.isnan(cos_vals))
         else:
-            cos_vals = [
-                _fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)
+            null = emb.is_null().to_numpy(zero_copy_only=False)
+            vecs = [
+                None if null[k] else vals[off[k]:off[k + 1]]
+                for k in range(n)
             ]
-        return pd.DataFrame({"a": ids[ii], "b": ids[jj], "cos": cos_vals})
+            cos = pa.array(
+                [_fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)],
+                pa.float64(), from_pandas=True,
+            )
+        return pa.table({
+            "a": ids.take(pa.array(ii)), "b": ids.take(pa.array(jj)),
+            "cos": cos,
+        })
 
     return score
 

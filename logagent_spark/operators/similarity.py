@@ -235,9 +235,10 @@ def kmeans_refine(
     exprs — map-side partial aggregation makes this one skinny shuffle
     of k×dim doubles). Only k×dim floats ever reach the driver per
     round; at 10^12 rows you run this on a sample first, then one final
-    assignment pass. Empty clusters keep their previous centroid.
-    Centroids are re-unit-normalized each round (the index uses
-    dot-product probing on unit centroids)."""
+    assignment pass. Empty clusters keep their previous centroid, and
+    invalid vectors (NULL, ragged, NULL element), whose bucket is NULL,
+    move no centroid. Centroids are re-unit-normalized each round (the
+    index uses dot-product probing on unit centroids)."""
     cents = np.asarray(centroids, dtype=float)
     k, dim = cents.shape
     for _ in range(iters):
@@ -249,6 +250,8 @@ def kmeans_refine(
         ).collect()
         new = cents.copy()
         for r in means:
+            if r["_b"] is None:  # invalid vectors: no centroid to move
+                continue
             v = np.array([r[f"m{i}"] for i in range(dim)], dtype=float)
             n = np.linalg.norm(v)
             if n > 0:

@@ -471,3 +471,80 @@ def test_minhash_config_must_come_in_pairs(spark):
         dedup.minhash_near_duplicates(docs, "id", "text", num_hashes=32)
     with pytest.raises(ValueError, match="together"):
         dedup.minhash_near_duplicates(docs, "id", "text", bands=8)
+
+
+def _cos_key(c):
+    """NULL stays None; NaN compares equal to NaN."""
+    if c is None:
+        return None
+    return "NaN" if np.isnan(c) else c
+
+
+@pytest.mark.parametrize("id_type", ["string", "long"])
+def test_embedding_candidate_pairs_edge_scores(spark, id_type):
+    """The complete (a, b, cos) set over edge vectors: NULL, ragged,
+    NULL-element, literal-NaN, zero and inf vectors, an id repeated with
+    the same vector and one repeated with a different vector. Pairs are
+    the a < b (strict) pairs sharing a band-key bucket of 2..cap rows,
+    once each. cos is `_fold_cos_pair` of the two vectors, and a NaN cos
+    reads back as NULL (a NULL element reaches the scorer as NaN and,
+    like a literal NaN, scores 0.0; a ragged pair is NULL)."""
+    dim, n_planes, n_chunks = 8, 6, 2
+    rng = np.random.RandomState(5)
+    rows = [(f"r{i:02d}", rng.randn(dim).tolist()) for i in range(16)]
+    rows += [
+        ("e_null", None),
+        ("e_ragged", [1.0] * (dim - 1)),
+        ("e_nullel", [None] + [1.0] * (dim - 1)),
+        ("e_nan", [float("nan")] + [1.0] * (dim - 1)),
+        ("e_zero", [0.0] * dim),
+        ("e_inf", [float("inf")] + [0.5] * (dim - 1)),
+        ("e_inf2", [float("inf")] + [-0.5] * (dim - 1)),
+        ("d_same", rows[3][1]),
+        ("d_same", rows[3][1]),
+        ("d_diff", rows[5][1]),
+        ("d_diff", rng.randn(dim).tolist()),
+    ]
+    if id_type == "long":
+        code = {n: i for i, n in enumerate(sorted({n for n, _ in rows}))}
+        rows = [(code[n], v) for n, v in rows]
+    df = spark.createDataFrame(rows, f"vid {id_type}, emb array<double>")
+
+    # bucket membership by row, from the band-key pass
+    planes = dedup.seeded_planes(n_planes, dim, 42)
+    chunks = dedup.plane_chunks(n_planes, n_chunks)
+    buckets: dict = {}
+    for r in dedup._hyperplane_band_keys_pandas(
+        spark.createDataFrame(
+            [(i, v) for i, (_, v) in enumerate(rows)],
+            "row long, emb array<double>"),
+        "row", "emb", planes, chunks,
+    ).collect():
+        buckets.setdefault((r["band"], r["key"]), []).append(r["_id"])
+    sizes = sorted(len(m) for m in buckets.values())
+    cap = sizes[-1] - 1
+    # singleton buckets, and exactly one bucket over the cap
+    assert sizes[0] == 1 and sizes[-2] <= cap
+    want = set()
+    for m in buckets.values():
+        if len(m) > cap:
+            continue
+        for x, y in itertools.combinations(m, 2):
+            (ia, va), (ib, vb) = sorted([rows[x], rows[y]],
+                                        key=lambda t: t[0])
+            if ia != ib:
+                c = dedup._fold_cos_pair(va, vb)
+                want.add((ia, ib, None if _cos_key(c) == "NaN" else c))
+    got = [
+        (r["a"], r["b"], _cos_key(r["cos"]))
+        for r in dedup.embedding_candidate_pairs(
+            df, "vid", "emb", dim=dim, n_planes=n_planes,
+            n_chunks=n_chunks, max_bucket_size=cap,
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    # the frame really exercises every cos outcome
+    cos = [c for _, _, c in want]
+    assert None in cos and 0.0 in cos
+    assert any(isinstance(c, float) and c != 0.0 for c in cos)

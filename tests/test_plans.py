@@ -170,11 +170,12 @@ def test_inline_lookup_builds_without_shuffle(spark, pages_path):
     assert "SortAggregate" not in phys, phys
 
 
-def test_embedding_near_dup_plan_has_no_python_and_no_vector_buckets(spark):
-    """The banded-LSH near-dup plan must stay JVM-side (no Python eval
-    nodes) and must NOT collect embedding vectors into bucket rows
-    (collect_list of arrays was the r1 memory hazard — pairs join on
-    skinny (band,key,id) rows instead)."""
+def test_embedding_near_dup_plan_has_arrow_scorer_and_no_vector_buckets(spark):
+    """The banded-LSH near-dup plan is one band-key MapInPandas pass and
+    one grouped Arrow scorer per (band, key) bucket: no pair join
+    (CartesianProduct / BroadcastNestedLoopJoin), and embedding vectors
+    are never collected into bucket rows (collect_list of arrays was the
+    r1 memory hazard)."""
     import numpy as np
 
     from logagent_spark.operators.dedup import embedding_near_duplicates
@@ -184,8 +185,50 @@ def test_embedding_near_dup_plan_has_no_python_and_no_vector_buckets(spark):
     df = spark.createDataFrame(rows, "vid long, emb array<double>")
     out = embedding_near_duplicates(df, "vid", "emb", dim=16, threshold=0.5)
     plan = _plan(out)
-    assert "Python" not in plan and "ArrowEval" not in plan
+    assert "MapInPandas" in plan and "FlatMapGroupsInArrow" in plan
+    assert "EvalPython" not in plan  # no per-row Python UDF eval
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "collect_list" not in plan
+
+
+def test_embedding_scorer_exchange_is_not_coalesced(spark):
+    """Pair work grows with the square of bucket rows, so the scorer's
+    (band, key) shuffle must keep its explicit partition count (the
+    spark.sql.shuffle.partitions setting, one per task slot on this
+    session): after the run, the final adaptive plan has exactly one
+    hashpartitioning(band, key, n) exchange, read by the Arrow scorer
+    without an AQE coalescing read in between, and no pandas grouped
+    scorer."""
+    import re
+
+    import numpy as np
+
+    from logagent_spark.operators.dedup import embedding_candidate_pairs
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    rng = np.random.RandomState(0)
+    rows = [(i, rng.randn(16).tolist()) for i in range(50)]
+    df = spark.createDataFrame(rows, "vid long, emb array<double>")
+    out = embedding_candidate_pairs(df, "vid", "emb", dim=16)
+    out.collect()
+    plan = _plan(out)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    band_key = re.compile(
+        r"Exchange hashpartitioning\(band#\d+, key#\d+, (\d+)\)")
+    exchanges = [i for i, line in enumerate(final) if band_key.search(line)]
+    assert len(exchanges) == 1
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n == spark.sparkContext.defaultParallelism
+    assert band_key.search(final[exchanges[0]]).group(1) == str(n)
+    scorer = [i for i, line in enumerate(final)
+              if "FlatMapGroupsInArrow" in line]
+    assert len(scorer) == 1 and scorer[0] < exchanges[0]
+    between = final[scorer[0] + 1:exchanges[0]]
+    assert not any("Exchange" in line or "AQEShuffleRead" in line
+                   for line in between)
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_native_grok_dictionary_is_jvm_only(spark, pages_path):

@@ -393,3 +393,27 @@ def test_assign_buckets_pandas_matches_expr(spark):
     }
     assert got == want
     assert want[1000] is None and want[1001] is None and want[1002] is None
+
+
+@pytest.mark.parametrize("extra", [
+    [[None, 1.0, 2.0, 3.0]],
+    [[None, 1.0, 2.0, 3.0], [4.0, None, 2.0, 1.0]],
+], ids=["one_null_element", "null_elements_cover_every_dim"])
+def test_kmeans_refine_ignores_invalid_vectors(spark, extra):
+    """Invalid vectors get a NULL bucket. That group's means can still be
+    finite (NULL elements in different dimensions), and they must not
+    move any centroid: the frame plus NULL-element vectors refines to
+    exactly the centroids of the frame without them. Integer-valued
+    vectors keep every mean exact in any summation order."""
+    rng = np.random.RandomState(4)
+    base = [rng.randint(-5, 6, size=4).astype(float).tolist()
+            for _ in range(40)]
+    cents0 = sim.seeded_centroids(4, 3, seed=2)
+    schema = "embedding array<double>"
+    want = sim.kmeans_refine(
+        spark.createDataFrame([(v,) for v in base], schema),
+        "embedding", cents0, iters=2)
+    got = sim.kmeans_refine(
+        spark.createDataFrame([(v,) for v in base + extra], schema),
+        "embedding", cents0, iters=2)
+    assert np.array_equal(got, want)
