@@ -111,6 +111,9 @@ class RewriteSpec:
             raise SpecError("jsonify rewrite requires declared types")
         if m == "lookup" and not self.lookup:
             raise SpecError("lookup rewrite requires lookup config")
+        if m == "lookup" and "table" not in self.lookup \
+                and "path" not in self.lookup:
+            raise SpecError("lookup rewrite requires table or path")
 
 
 @dataclass

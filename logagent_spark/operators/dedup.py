@@ -560,22 +560,6 @@ def seeded_planes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return rng.randn(n_planes, dim)
 
 
-def hyperplane_bits(emb: Column, planes: np.ndarray) -> list[Column]:
-    """Sign bit (0/1) per hyperplane, as pure Column expressions: the
-    planes are literals, each dot is one zip_with/aggregate fold —
-    scan-side, no UDF, no shuffle."""
-    bits = []
-    for p in planes:
-        lit_vec = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(emb, lit_vec, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
-    return bits
-
-
 def plane_chunks(n_planes: int, n_chunks: int = 3) -> list[list[int]]:
     """Split plane indices into n_chunks contiguous bands (multi-probe
     pigeonhole: two buckets within hamming <= n_chunks - 1 of each other
@@ -601,16 +585,17 @@ def _hyperplane_band_keys_pandas(
     (HOF exprs never codegen — the per-ROW twin of CLAUDE.md's per-PAIR
     trap). Each plane's dot accumulates as a sequential left fold over
     DIMENSIONS, vectorized across rows x planes — one rounded multiply
-    + one rounded add per step, the exact rounding sequence of the
-    expression fold (`hyperplane_bits`, the test reference), so band
-    keys are bit-identical for valid vectors. Invalid vectors (NULL,
-    ragged length, NULL element) take key 0 in every band, matching the
+    + one rounded add per step (`_seq_dot_and_norm2`), the exact
+    rounding sequence of the expression fold (the tests'
+    `hyperplane_bits` reference), so band keys are bit-identical for
+    valid vectors. Invalid vectors (`_valid_vectors`: NULL, ragged
+    length, NULL element) take key 0 in every band, matching the
     expr's NULL-propagating fold under `when(dot >= 0, 1).otherwise(0)`;
     a NaN dot reached from inf arithmetic takes bit 1 (Spark orders NaN
     above every number). A literal-NaN ELEMENT is indistinguishable from
     a NULL element after Arrow and yields key 0 where the expr would
-    emit all-ones bits — the documented assign_buckets_pandas
-    divergence, unreachable on a real embedding corpus. Keys accumulate
+    emit all-ones bits — the documented `_valid_vectors` divergence,
+    unreachable on a real embedding corpus. Keys accumulate
     in int32 (`key * 2 + bit`, most significant plane first), so a
     32-bit band (the `suggest_lsh_config` maximum) is the two's-
     complement int32 of its sign bits: the wrap is a bijection, and
@@ -618,7 +603,7 @@ def _hyperplane_band_keys_pandas(
     same pass: one (id, emb, band, key) row per band comes straight out
     of Arrow."""
     planes = np.asarray(planes, dtype=np.float64)
-    n_planes, dim = planes.shape
+    dim = planes.shape[1]
     n_chunks = len(chunks)
     schema = T.StructType([
         T.StructField("_id", df.schema[id_col].dataType),
@@ -633,27 +618,15 @@ def _hyperplane_band_keys_pandas(
             if n == 0:
                 continue
             embs = list(pdf[emb_col])
-            vecs = [
-                None if v is None else np.asarray(v, dtype=np.float64)
-                for v in embs
-            ]
-            valid = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == dim
-                and not np.isnan(v).any()
-            ]
+            valid, e = _valid_vectors(embs, dim)
+            dots, _ = _seq_dot_and_norm2(e, planes.T)
+            bits = ((dots >= 0) | np.isnan(dots)).astype(np.int32)
             keys = np.zeros((n, n_chunks), dtype=np.int32)
-            if valid:
-                e = np.asarray([vecs[i] for i in valid])
-                dots = np.zeros((len(valid), n_planes), dtype=np.float64)
-                for d in range(dim):
-                    dots += e[:, d][:, None] * planes[:, d][None, :]
-                bits = ((dots >= 0) | np.isnan(dots)).astype(np.int32)
-                for c, idxs in enumerate(chunks):
-                    k = np.zeros(len(valid), dtype=np.int32)
-                    for i in idxs:
-                        k = k * 2 + bits[:, i]
-                    keys[valid, c] = k
+            for c, idxs in enumerate(chunks):
+                k = np.zeros(len(valid), dtype=np.int32)
+                for i in idxs:
+                    k = k * 2 + bits[:, i]
+                keys[valid, c] = k
             yield pd.DataFrame({
                 "_id": np.repeat(pdf[id_col].to_numpy(), n_chunks),
                 "_e": [v for v in embs for _ in range(n_chunks)],
@@ -763,6 +736,55 @@ def _fold_cos_pair(va, vb):
     for x, y in zip(va, vb):
         acc = acc + x * y
     return acc / (na * nb)
+
+
+def _valid_vectors(vecs, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """Split a batch of vectors into the row indices of the VALID ones
+    and their (n_valid, dim) float64 matrix. Valid means the sequential
+    fold is defined for it: not NULL, exactly `dim` elements, no NULL
+    element. A NULL element arrives as NaN after the Arrow transfer, so
+    a literal-NaN element is indistinguishable from it here and also
+    makes the vector invalid — a documented divergence from the
+    `cosine()` fold (where Spark orders NaN above every number), which
+    no real embedding corpus hits. Callers give invalid rows what the
+    NULL-propagating fold gives them (`_fold_cos_pair` for cosine)."""
+    rows = [None if v is None else np.asarray(v, dtype=np.float64)
+            for v in vecs]
+    valid = np.asarray(
+        [i for i, v in enumerate(rows)
+         if v is not None and len(v) == dim and not np.isnan(v).any()],
+        dtype=np.intp,
+    )
+    mat = np.asarray([rows[i] for i in valid], dtype=np.float64)
+    return valid, mat.reshape(len(valid), dim)
+
+
+def _seq_norm2(mat: np.ndarray) -> np.ndarray:
+    """Row sums of squares of an (n x dim) matrix as a sequential left
+    fold over dimensions (vectorized across rows) — the same rounding
+    sequence as `cosine()`'s F.aggregate and DuckDB, unlike numpy's
+    pairwise np.sum."""
+    acc = np.zeros(mat.shape[0], dtype=np.float64)
+    for col in mat.T:
+        acc += col * col
+    return acc
+
+
+def _seq_dot_and_norm2(e: np.ndarray, qmat: np.ndarray):
+    """(n x dim) rows vs (dim x Q) columns -> sequential-fold dot
+    (n x Q) and row sum-of-squares (n,). Each fold step is one rounded
+    multiply + one rounded add per element, in dimension order —
+    bit-identical to a scalar left fold (`_fold_cos_pair`) and to the
+    `cosine()`/DuckDB fold. BLAS dgemm uses blocked/pairwise summation,
+    which can land a few ulps off and flip a ppm floor or a sign bit."""
+    n, dim = e.shape
+    dot = np.zeros((n, qmat.shape[1]), dtype=np.float64)
+    n2 = np.zeros(n, dtype=np.float64)
+    for d in range(dim):
+        col = e[:, d]
+        dot += col[:, None] * qmat[d][None, :]
+        n2 += col * col
+    return dot, n2
 
 
 def _score_bucket_pairs_arrow(max_bucket_size: int):

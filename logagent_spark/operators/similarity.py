@@ -10,10 +10,17 @@ Two paths, per the scale doctrine:
     already does partial top-k map-side for orderBy+limit, which is the
     plan we want and get);
   * IVF-style bucketed ANN — assign every vector to its nearest of C
-    seeded centroids (literal arrays, scan-side), search only the
-    query's probe buckets. C and nprobe trade recall for scan fraction;
-    at 10^12 rows the bucket assignment is written once at ingest and
-    the query prunes partitions.
+    seeded centroids (one Arrow/numpy pass), search only the query's
+    probe buckets. C and nprobe trade recall for scan fraction; at
+    10^12 rows the bucket assignment is written once at ingest and the
+    query prunes partitions.
+
+Every Arrow/numpy scorer here is total over invalid vectors (NULL, NULL
+element, wrong length — `dedup._valid_vectors`): valid vectors take the
+sequential fold (`dedup._seq_dot_and_norm2`), bit-identical to the
+`cosine()` Column fold and the DuckDB oracle's, and any pair with an
+invalid side scores what `cosine()` gives it, through its scalar twin
+`dedup._fold_cos_pair`.
 """
 
 from __future__ import annotations
@@ -21,10 +28,16 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from logagent_spark.operators.dedup import cosine
+from logagent_spark.operators.dedup import (
+    _fold_cos_pair,
+    _seq_dot_and_norm2,
+    _seq_norm2,
+    _valid_vectors,
+    cosine,
+)
 
 
 def lit_vec(v) -> Column:
@@ -140,81 +153,38 @@ def seeded_centroids(dim: int, n_centroids: int, seed: int = 42) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
-def centroid_assignment(
-    emb: Column, centroids: np.ndarray
-) -> Column:
-    """argmax over centroid dot products, as a Column expression.
-
-    The dots land in ONE array literal and the argmax is
-    array_position(arr, array_max(arr)): each dot is evaluated exactly
-    once per row. (A greatest(...) + when-chain formulation re-emits
-    every dot expression 2-3x — Catalyst's subexpression elimination
-    does not reach inside higher-order-function lambdas.) Ties resolve
-    to the lowest centroid index, first-occurrence semantics."""
-    dots = F.array(*[
-        F.aggregate(
-            F.zip_with(emb, lit_vec(c), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for c in centroids
-    ])
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
 def assign_buckets_pandas(
     df: DataFrame, emb_col: str, centroids: np.ndarray, out_col: str
 ) -> DataFrame:
-    """centroid_assignment as one Arrow/numpy pass (mapInPandas): the
-    C dot products accumulate as a sequential left fold over DIMENSIONS,
-    vectorized across rows and centroids — each fold step is one rounded
-    multiply + one rounded add per (row, centroid), the exact rounding
-    sequence of the expression fold, and np.argmax is first-occurrence
-    like array_position(dots, array_max(dots)). Invalid vectors (NULL,
-    ragged length, NULL element) get a NULL bucket, matching the
-    NULL-propagating expr dots. The expr form runs INTERPRETED (HOFs
-    never codegen): C folds per row made assignment the dominant cost of
-    the IVF index build and the pandas join's corpus prep at 100k x 64
-    (r7, measured interleaved — see OPTIMIZATION_r07.md)."""
+    """Nearest-centroid bucket per row as one Arrow/numpy pass
+    (mapInPandas): argmax over the C centroid dot products. The dots
+    are the sequential fold over DIMENSIONS of `_seq_dot_and_norm2`,
+    vectorized across rows and centroids — the exact rounding sequence
+    of a zip_with/aggregate Column fold — and np.argmax is first-
+    occurrence, so ties resolve to the lowest centroid index. Invalid
+    vectors (`_valid_vectors`: NULL, ragged length, NULL element) get a
+    NULL bucket, as the NULL-propagating fold gives them. A Column-
+    expression argmax runs INTERPRETED (HOFs never codegen): C folds per
+    row made assignment the dominant cost of the IVF index build and the
+    k-NN join's corpus prep at 100k x 64 (r7, measured interleaved — see
+    OPTIMIZATION_r07.md)."""
     import pandas as pd
     from pyspark.sql import types as T
 
     cents = np.asarray(centroids, dtype=np.float64)
-    k, dim = cents.shape
+    dim = cents.shape[1]
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.IntegerType())]
     )
 
     def go(batches):
         for pdf in batches:
-            vecs = [
-                None if v is None
-                else np.asarray(v, dtype=np.float64)
-                for v in pdf[emb_col]
-            ]
-            out = np.full(len(vecs), None, dtype=object)
-            # NaN marks a NULL element after the Arrow transfer (nulls
-            # arrive as NaN): such vectors get a NULL bucket like the
-            # expr's NULL-propagating fold. A literal-NaN embedding is
-            # indistinguishable here and also yields NULL — documented
-            # divergence from the expr path's NaN ordering, which no
-            # real embedding corpus hits.
-            valid = [
-                i for i, v in enumerate(vecs)
-                if v is not None and len(v) == dim
-                and not np.isnan(v).any()
-            ]
-            if valid:
-                e = np.asarray([vecs[i] for i in valid])
-                dots = np.zeros((len(valid), k), dtype=np.float64)
-                for d in range(dim):
-                    dots += e[:, d][:, None] * cents[:, d][None, :]
-                idx = np.argmax(dots, axis=1)
-                for j, i in enumerate(valid):
-                    out[i] = int(idx[j])
-            res = pdf.copy()
-            res[out_col] = pd.array(out, dtype="Int32")
-            yield res
+            valid, e = _valid_vectors(pdf[emb_col], dim)
+            dots, _ = _seq_dot_and_norm2(e, cents.T)
+            bucket = pd.array([None] * len(pdf), dtype="Int32")
+            bucket[valid] = np.argmax(dots, axis=1)
+            pdf[out_col] = bucket
+            yield pdf
 
     return df.mapInPandas(go, schema)
 
@@ -229,8 +199,8 @@ def kmeans_refine(
     """Distributed Lloyd refinement of the IVF centroids.
 
     Each round: assignment is one Arrow/numpy mapInPandas pass
-    (`assign_buckets_pandas` — bit-identical to the `centroid_assignment`
-    expression fold, without its C interpreted HOF folds per row), the
+    (`assign_buckets_pandas` — bit-identical to a Column-expression
+    argmax fold, without its C interpreted HOF folds per row), the
     new centroid is one hash aggregate of per-dimension means (dim `avg`
     exprs — map-side partial aggregation makes this one skinny shuffle
     of k×dim doubles). Only k×dim floats ever reach the driver per
@@ -263,11 +233,10 @@ def kmeans_refine(
 def ivf_index(
     df: DataFrame, emb_col: str, centroids: np.ndarray, bucket_col: str = "ivf_bucket"
 ) -> DataFrame:
-    """Materialize the bucket assignment (at scale: write-partitioned by
-    this column so queries prune files)."""
-    return df.withColumn(
-        bucket_col, centroid_assignment(F.col(emb_col), centroids)
-    )
+    """Materialize the bucket assignment (`assign_buckets_pandas`; at
+    scale: write-partitioned by this column so queries prune files).
+    Invalid vectors get a NULL bucket, so no probe ever finds them."""
+    return assign_buckets_pandas(df, emb_col, centroids, bucket_col)
 
 
 def ivf_probes(
@@ -304,38 +273,15 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 # batched k-NN join (many queries at once)
 
-def _seq_norm2(mat: np.ndarray, axis_dim: int) -> np.ndarray:
-    """Sum of squares as a sequential left fold over dimensions
-    (vectorized across the other axis) — the same rounding sequence as
-    F.aggregate / DuckDB, unlike numpy's pairwise np.sum."""
-    mat = np.moveaxis(np.asarray(mat, dtype=np.float64), axis_dim, 0)
-    acc = np.zeros(mat.shape[1:], dtype=np.float64)
-    for d in range(mat.shape[0]):
-        acc += mat[d] * mat[d]
-    return acc
-
-
-def _seq_dot_and_norm2(e: np.ndarray, qmat: np.ndarray):
-    """(n x dim) rows vs (dim x Q) queries -> sequential-fold dot
-    (n x Q) and row sum-of-squares (n,). Each fold step is one rounded
-    multiply + one rounded add per element, in dimension order —
-    bit-identical to a scalar left fold."""
-    n, dim = e.shape
-    dot = np.zeros((n, qmat.shape[1]), dtype=np.float64)
-    n2 = np.zeros(n, dtype=np.float64)
-    for d in range(dim):
-        col = e[:, d]
-        dot += col[:, None] * qmat[d][None, :]
-        n2 += col * col
-    return dot, n2
-
-
 def probe_buckets(emb: Column, centroids: np.ndarray, nprobe: int) -> Column:
     """Top-nprobe centroid ids by dot product, as a pure Column
-    expression: the C dots land in ONE struct array (each dot evaluated
-    once per row — see centroid_assignment on the HOF-CSE gap),
-    array_sort orders by (-dot, cid) so ties resolve to the lowest
-    centroid id, and slice+transform yields the probe id list."""
+    expression: the C dots land in ONE struct array, so each dot is
+    evaluated once per row (Catalyst's subexpression elimination does
+    not reach inside higher-order-function lambdas, so a greatest(...)
+    formulation would re-emit every fold), array_sort orders by
+    (-dot, cid) so ties resolve to the lowest centroid id, and
+    slice+transform yields the probe id list. An invalid query vector
+    folds to NULL dots and probes buckets 0..nprobe-1."""
     entries = F.array(*[
         F.struct(
             (-F.aggregate(
@@ -363,44 +309,47 @@ def knn_join_ivf(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_emb_col: str = "qemb",
-    broadcast_queries: bool = True,
-    strategy: str = "expr",
+    strategy: str = "pandas",
 ) -> DataFrame:
     """k-NN join for the LARGE-Q regime knn_join's closure bound rules
     out: queries are a DataFrame, so Q is unbounded and nothing rides
     the task closure.
 
-    Plan shape: corpus rows get their single IVF bucket scan-side
-    (argmax Column expr — at 10^12 rows the assignment is materialized
-    once at ingest via ivf_index and the table is write-partitioned by
-    it); each query explodes to its nprobe probe buckets; candidates
-    meet on the bucket key; the global per-query top-k window shuffles
-    only skinny candidate rows, bounded by bucket occupancy * nprobe.
-    nprobe = len(centroids) is full probe — exact brute force, the
-    oracle configuration; partial probe trades recall for scan fraction
-    exactly like ivf_topk.
+    Plan shape: corpus rows get their single IVF bucket in one Arrow
+    pass (`assign_buckets_pandas` — at 10^12 rows the assignment is
+    materialized once at ingest via ivf_index and the table is
+    write-partitioned by it); each query explodes to its nprobe probe
+    buckets; both sides cogroup on the bucket key and each bucket is
+    scored by one Arrow-batched numpy pass that emits only its per-query
+    top-k (`_topk_ppm`). The corpus shuffles once on the bucket key (a
+    co-located join when the table is bucket-partitioned at ingest),
+    and the global per-query top-k window shuffles only skinny
+    candidate rows. nprobe = len(centroids) is full probe — exact
+    brute force, the oracle configuration; partial probe trades recall
+    for scan fraction exactly like ivf_topk. Per-bucket selection under
+    the window's (cos_ppm DESC NULLS LAST, id ASC) order keeps the
+    two-phase top-k exact.
 
-    Two scoring strategies with BIT-IDENTICAL ppm scores:
+    Scores are floor(cosine() * 1e6), bit-identical to the `cosine()`
+    Column fold and the DuckDB oracle's, for every query vector: an
+    invalid one (NULL, NULL element, wrong length) scores what
+    `cosine()` gives it — 0 for NULL or a NULL element, NULL for a wrong
+    length. Invalid corpus vectors have a NULL bucket and are never
+    candidates.
 
-    * ``expr`` — join then the JVM `cosine` Column per pair (same fold
-      order as the DuckDB oracle). Exact and oracle-friendly, but
-      higher-order-function expressions are evaluated INTERPRETED
-      (never whole-stage codegen), so per-pair cost is ~10 us — fine
-      for gate-scale candidate volumes, ruinous at millions of pairs
-      (measured: 31M pairs = ~460 s on 32 cores). With
-      `broadcast_queries` (default) the probed query side broadcasts
-      and the corpus is never shuffled.
-    * ``pandas`` — cogroup both sides on the bucket key and score each
-      bucket with one Arrow-batched numpy pass (the sequential-fold
-      dot of `_seq_dot_and_norm2`, bit-identical to the expr/DuckDB
-      fold), emitting only per-(query, bucket) top-k rows. The corpus
-      shuffles once on the bucket key — at 10^12 rows the table is
-      already bucket-partitioned at ingest, making this a co-located
-      join. This is the large-Q scale path: ~30x faster than expr at
-      31M pairs. Per-bucket selection under (ppm DESC, id ASC) keeps
-      the two-phase top-k exact."""
-    from pyspark.sql import Window
+    ``strategy`` has one accepted value, "pandas", and is kept only so
+    existing callers that name it keep working: the Column-expression
+    scorer it once chose between ran its folds interpreted (~10 us per
+    pair; 31M pairs took ~460 s on 32 cores) and is now the tests'
+    reference, not a product path."""
+    from pyspark.sql import types as T
 
+    if strategy != "pandas":
+        raise ValueError(
+            f"unknown strategy `{strategy}`: knn_join_ivf scores with "
+            "the Arrow/numpy path only (\"pandas\")"
+        )
+    dim = np.asarray(centroids).shape[1]
     probed = queries_df.select(
         F.col(query_id_col),
         F.col(query_emb_col).alias("_qe"),
@@ -408,39 +357,34 @@ def knn_join_ivf(
             probe_buckets(F.col(query_emb_col), centroids, nprobe)
         ).alias("_bkt"),
     )
-    if strategy == "pandas":
-        # the corpus-side bucket assignment rides the same Arrow boundary
-        # the scorer already pays; the interpreted C-fold expr was the
-        # prep cost of the cogroup input (r7)
-        indexed = assign_buckets_pandas(
-            corpus.select(F.col(id_col), F.col(emb_col).alias("_ce")),
-            "_ce", centroids, "_bkt",
-        )
-    else:
-        indexed = corpus.select(
-            F.col(id_col),
-            F.col(emb_col).alias("_ce"),
-            centroid_assignment(F.col(emb_col), centroids).alias("_bkt"),
+    # the NULL bucket of invalid vectors must not reach the cogroup: the
+    # probe key is non-nullable, so the cogroup's key ordering would
+    # compare a NULL bucket equal to bucket 0 and fail the task
+    indexed = assign_buckets_pandas(
+        corpus.select(F.col(id_col), F.col(emb_col).alias("_ce")),
+        "_ce", centroids, "_bkt",
+    ).filter(F.col("_bkt").isNotNull())
+
+    def score(qpdf, cpdf):
+        return _topk_ppm(
+            list(cpdf["_ce"]), cpdf[id_col].to_numpy(),
+            list(qpdf["_qe"]), qpdf[query_id_col].to_numpy(),
+            dim=dim, k=k, id_col=id_col, query_id_col=query_id_col,
         )
 
-    if strategy == "pandas":
-        scored = _score_buckets_pandas(
-            probed, indexed, k=k,
-            id_col=id_col, query_id_col=query_id_col,
-        )
-    elif strategy == "expr":
-        if broadcast_queries:
-            probed = F.broadcast(probed)
-        scored = probed.join(indexed, "_bkt").select(
-            query_id_col,
-            id_col,
-            F.floor(cosine(F.col("_qe"), F.col("_ce")) * 1_000_000)
-            .cast("long")
-            .alias("cos_ppm"),
-        )
-    else:
-        raise ValueError(f"unknown strategy `{strategy}`")
+    scored = probed.groupBy("_bkt").cogroup(indexed.groupBy("_bkt")) \
+        .applyInPandas(score, T.StructType([
+            T.StructField(query_id_col, probed.schema[query_id_col].dataType),
+            T.StructField(id_col, indexed.schema[id_col].dataType),
+            T.StructField("cos_ppm", T.LongType()),
+        ]))
+    return _rank_topk(scored, k, query_id_col, id_col)
 
+
+def _rank_topk(scored: DataFrame, k: int, query_id_col: str,
+               id_col: str) -> DataFrame:
+    """Global per-query top-k of (query, id, cos_ppm) candidate rows,
+    ranked under (cos_ppm DESC NULLS LAST, id ASC)."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_ppm").desc(), F.col(id_col).asc()
     )
@@ -450,66 +394,51 @@ def knn_join_ivf(
     )
 
 
-def _score_buckets_pandas(
-    probed: DataFrame,
-    indexed: DataFrame,
-    *,
-    k: int,
-    id_col: str,
-    query_id_col: str,
-) -> DataFrame:
-    """Per-bucket Arrow/numpy scoring for knn_join_ivf: cogroup the
-    probed queries and the bucketed corpus on the bucket key; each
-    bucket computes the sequential-fold cosine matrix (bit-identical to
-    the Column-expr fold) and emits only its per-query top-k."""
+def _topk_ppm(evecs, ids, qvecs, qids, *, dim: int, k: int,
+              id_col: str, query_id_col: str):
+    """Score every corpus row against every query and keep each query's
+    top-k rows -> pandas (query_id, id, cos_ppm).
+
+    cos_ppm is floor(cosine() * 1e6). Pairs of valid vectors take the
+    sequential fold (`_seq_dot_and_norm2`), bit-identical to
+    `cosine()`'s F.aggregate fold and DuckDB's list_cosine_similarity;
+    a pair with an invalid side (`_valid_vectors`) takes the scalar twin
+    `_fold_cos_pair`, and its NULL score is a NULL cos_ppm. The top-k
+    follows the global window's (cos_ppm DESC NULLS LAST, id ASC) order
+    via np.lexsort, so a two-phase top-k over these rows is exact."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    out_schema = T.StructType([
-        T.StructField(
-            query_id_col, probed.schema[query_id_col].dataType
-        ),
-        T.StructField(id_col, indexed.schema[id_col].dataType),
-        T.StructField("cos_ppm", T.LongType()),
-    ])
-    cols = [query_id_col, id_col, "cos_ppm"]
-
-    def score(qpdf: "pd.DataFrame", cpdf: "pd.DataFrame") -> "pd.DataFrame":
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(columns=cols)
-        e = np.asarray([np.asarray(v, dtype=np.float64) for v in cpdf["_ce"]])
-        qm = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in qpdf["_qe"]]
-        ).T  # dim x Qb
-        dot, n2 = _seq_dot_and_norm2(e, qm)
-        en = np.sqrt(n2)
-        en[en == 0] = 1.0
-        qn = np.sqrt(_seq_norm2(qm, 0))
-        qn[qn == 0] = 1.0
-        ppm = np.floor(dot / (en[:, None] * qn[None, :]) * 1_000_000)
-        ppm = ppm.astype(np.int64)
-        ids = cpdf[id_col].to_numpy()
-        top = min(k, len(ids))
-        n_q = qm.shape[1]
-        # per-query top-k via np.lexsort under the SAME (ppm DESC, id
-        # ASC) order as the global window (the knn_join batch pattern) —
-        # the r6 pandas DataFrame + sort_values per (query, bucket) was
-        # ~0.4 ms per query and dominated the large-Q join (r7)
-        sel = np.empty((n_q, top), dtype=np.int64)
-        for j in range(n_q):
-            sel[j] = np.lexsort((ids, -ppm[:, j]))[:top]
-        flat = sel.ravel()
-        return pd.DataFrame({
-            query_id_col: np.repeat(qpdf[query_id_col].to_numpy(), top),
-            id_col: ids[flat],
-            "cos_ppm": ppm[flat, np.repeat(np.arange(n_q), top)],
-        })
-
-    return (
-        probed.groupBy("_bkt")
-        .cogroup(indexed.groupBy("_bkt"))
-        .applyInPandas(score, out_schema)
-    )
+    n, n_q = len(ids), len(qids)
+    if n == 0 or n_q == 0:
+        return pd.DataFrame(columns=[query_id_col, id_col, "cos_ppm"])
+    ev, e = _valid_vectors(evecs, dim)
+    qv, q = _valid_vectors(qvecs, dim)
+    dot, en2 = _seq_dot_and_norm2(e, q.T)
+    en = np.sqrt(en2)
+    en[en == 0] = 1.0
+    qn = np.sqrt(_seq_norm2(q))
+    qn[qn == 0] = 1.0
+    cos = np.empty((n, n_q), dtype=np.float64)
+    cos[np.ix_(ev, qv)] = dot / (en[:, None] * qn[None, :])
+    e_bad = np.ones(n, dtype=bool)
+    e_bad[ev] = False
+    q_bad = np.ones(n_q, dtype=bool)
+    q_bad[qv] = False
+    for i, j in zip(*np.nonzero(e_bad[:, None] | q_bad[None, :])):
+        c = _fold_cos_pair(evecs[i], qvecs[j])
+        cos[i, j] = np.nan if c is None else c
+    ppm = np.floor(cos * 1_000_000)
+    # NaN is a NULL score: it sorts after every number, as NULLS LAST
+    desc = np.where(np.isnan(ppm), np.inf, -ppm)
+    top = min(k, n)
+    sel = np.stack([np.lexsort((ids, desc[:, j]))[:top] for j in range(n_q)])
+    rows = sel.ravel()
+    cols = np.repeat(np.arange(n_q), top)
+    return pd.DataFrame({
+        query_id_col: np.asarray(qids)[cols],
+        id_col: ids[rows],
+        "cos_ppm": pd.array(ppm[rows, cols], dtype="Int64"),
+    })
 
 
 def knn_join(
@@ -527,22 +456,22 @@ def knn_join(
     The single-query `brute_force_topk` gets TakeOrderedAndProject for
     free; the batched form cannot (per-key limits have no native
     operator), so this is the sanctioned mapInPandas pattern: each Arrow
-    batch computes ONE numpy matmul (batch x dim @ dim x Q) and emits
-    only its per-query top-k — at most Q*k skinny rows per batch leave
-    the scan, so the follow-up global top-k window shuffles
+    batch computes ONE sequential-fold score block (batch x Q) and emits
+    only its per-query top-k (`_topk_ppm`) — at most Q*k skinny rows per
+    batch leave the scan, so the follow-up global top-k window shuffles
     O(Q * k * n_batches) rows, never the corpus. Scores are quantized to
-    ppm (floor(cos * 1e6)) with (ppm DESC, id ASC) ordering so ranks are
-    deterministic and engine-portable; per-batch selection under the
-    SAME order makes the two-phase top-k exact, not approximate.
+    ppm (floor(cos * 1e6)) with (ppm DESC NULLS LAST, id ASC) ordering
+    so ranks are deterministic and engine-portable; per-batch selection
+    under the SAME order makes the two-phase top-k exact, not
+    approximate. An invalid corpus vector (NULL, NULL element, wrong
+    length) scores what `cosine()` gives it: 0, 0 or NULL. The query
+    vectors set the dimension, so they must all have the same length.
 
     Q (number of queries) rides the closure — fine for the dozens-of-
     queries regime, and `max_queries` makes that bound explicit (the
     closure broadcast is Q*dim floats and every batch materializes an
     n x Q score block). For larger Q use `knn_join_ivf`: queries become
     a DataFrame and candidates meet on IVF bucket keys."""
-    import pandas as pd
-
-    from pyspark.sql import Window
     from pyspark.sql import types as T
 
     if len(queries) > max_queries:
@@ -551,10 +480,9 @@ def knn_join(
             f"{max_queries}; use knn_join_ivf for the large-Q regime"
         )
 
-    qids = [int(q[0]) for q in queries]
-    qmat = np.asarray([q[1] for q in queries], dtype=np.float64).T  # dim x Q
-    qnorm = np.sqrt(_seq_norm2(qmat, 0))
-    qnorm[qnorm == 0] = 1.0
+    qids = np.asarray([int(q[0]) for q in queries], dtype=np.int64)
+    qmat = np.asarray([q[1] for q in queries], dtype=np.float64)  # Q x dim
+    qvecs = list(qmat)
 
     out_schema = T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -564,41 +492,12 @@ def knn_join(
 
     def part(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            e = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            )
-            ids = pdf[id_col].to_numpy()
-            # dot and norms as SEQUENTIAL left folds over dimensions
-            # (vectorized across rows): acc <- round(acc + round(x*y))
-            # per step — bit-identical to dedup.cosine()'s F.aggregate
-            # fold and DuckDB's list_cosine_similarity. BLAS dgemm uses
-            # blocked/pairwise summation, which can land a few ulps off
-            # and flip the ppm floor at integer boundaries.
-            dot, en2 = _seq_dot_and_norm2(e, qmat)
-            en = np.sqrt(en2)
-            en[en == 0] = 1.0
-            cos = dot / (en[:, None] * qnorm[None, :])
-            ppm = np.floor(cos * 1_000_000).astype(np.int64)
-            rows = []
-            for j, qid in enumerate(qids):
-                col = ppm[:, j]
-                top = min(k, n)
-                # exact per-batch top-k under (ppm desc, id asc)
-                order = np.lexsort((ids, -col))[:top]
-                rows.append(pd.DataFrame({
-                    "query_id": qid, id_col: ids[order],
-                    "cos_ppm": col[order],
-                }))
-            yield pd.concat(rows, ignore_index=True)
+            if len(pdf):
+                yield _topk_ppm(
+                    list(pdf[emb_col]), pdf[id_col].to_numpy(),
+                    qvecs, qids, dim=qmat.shape[1], k=k,
+                    id_col=id_col, query_id_col="query_id",
+                )
 
     partial = df.select(id_col, emb_col).mapInPandas(part, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_ppm").desc(), F.col(id_col).asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_topk(partial, k, "query_id", id_col)

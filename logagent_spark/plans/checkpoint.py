@@ -86,14 +86,12 @@ class CheckpointedRunner:
         n_chunks: int = 8,
         source_adapter: Callable[[DataFrame], DataFrame] | None = None,
         keep: list[str] | None = None,
-        repartition: int | None = None,
     ) -> None:
         self.pipe = pipe
         self.out_dir = out_dir
         self.n_chunks = n_chunks
         self.source_adapter = source_adapter
         self.keep = keep
-        self.repartition = repartition
         os.makedirs(self._manifest_dir, exist_ok=True)
 
     # ------------------------------------------------------------------
@@ -171,10 +169,6 @@ class CheckpointedRunner:
         rows_in = df.count()
         if self.source_adapter is not None:
             df = self.source_adapter(df)
-        if self.repartition:
-            # salted spread for host-domain skew: hash the whole row id
-            # space rather than trusting input file layout
-            df = df.repartition(self.repartition)
 
         result = self.pipe.transform(df)
         out = self.pipe.multiplexed(result, keep=self.keep)

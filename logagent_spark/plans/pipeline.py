@@ -74,12 +74,10 @@ class CompiledPipeline:
         spec: PipelineSpec,
         *,
         regex_strategy: str = "native",
-        lookup_frames: dict[str, DataFrame] | None = None,
     ) -> None:
         spec.validate()
         self.spec = spec
         self.regex_strategy = regex_strategy
-        self.lookup_frames = lookup_frames or {}
 
     # ------------------------------------------------------------------
     # stage 1: parse -> validate -> rewrite, with drop accounting
@@ -176,11 +174,7 @@ class CompiledPipeline:
                 ),
             ).select(key, *[c for c in out_cols])
         else:
-            if "frame" in lk:
-                lookup_df = self.lookup_frames[lk["frame"]]
-            else:
-                lookup_df = spark.read.parquet(lk["path"])
-            lookup_df = lookup_df.select(
+            lookup_df = spark.read.parquet(lk["path"]).select(
                 key, *[c for c in out_cols]
             ).dropDuplicates([key])
 

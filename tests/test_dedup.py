@@ -12,6 +12,23 @@ from pyspark.sql import functions as F
 
 from logagent_spark.operators import dedup
 
+
+def hyperplane_bits(emb, planes):
+    """Reference sign bit (0/1) per hyperplane as Column expressions:
+    each dot is one zip_with/aggregate fold over literal planes (the
+    `cosine()` fold), and a NULL dot — a NULL, ragged or NULL-element
+    vector — takes bit 0 through `when(dot >= 0, 1).otherwise(0)`."""
+    bits = []
+    for p in planes:
+        lit_vec = F.array(*[F.lit(float(x)) for x in p])
+        dot = F.aggregate(
+            F.zip_with(emb, lit_vec, lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
+    return bits
+
 BASE = [
     "the quick brown fox jumps over the lazy dog near the river bank today",
     "pack my box with five dozen liquor jugs before the evening train leaves",
@@ -337,7 +354,7 @@ def test_hyperplane_band_keys_pandas_bit_identical(spark):
             df, "vid", "emb", planes, chunks
         ).collect()
     }
-    bits = dedup.hyperplane_bits(F.col("emb"), planes)
+    bits = hyperplane_bits(F.col("emb"), planes)
     sel = [F.col("vid")]
     for c, idxs in enumerate(chunks):
         key = F.lit(0)
@@ -416,7 +433,7 @@ def test_embedding_candidate_pairs_32_bit_band(spark):
     }
     bit_rows = df.select(
         "vid", *[b.alias(f"b{i}") for i, b in
-                 enumerate(dedup.hyperplane_bits(F.col("emb"), planes))]
+                 enumerate(hyperplane_bits(F.col("emb"), planes))]
     ).collect()
     for r in bit_rows:
         u = 0

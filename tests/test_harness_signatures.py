@@ -11,6 +11,7 @@ import inspect
 from pathlib import Path
 
 from logagent_spark.operators import dedup, similarity
+from logagent_spark.plans.checkpoint import CheckpointedRunner
 from logagent_spark.plans.pipeline import CompiledPipeline
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -24,6 +25,7 @@ GUARDED = {
     "knn_join_ivf": (similarity.knn_join_ivf, False),
     "write_sinks": (CompiledPipeline.write_sinks, True),
     "CompiledPipeline": (CompiledPipeline, False),
+    "CheckpointedRunner": (CheckpointedRunner, False),
 }
 
 
@@ -58,4 +60,4 @@ def test_harness_calls_bind_to_product_signatures():
     assert not failures, "\n".join(failures)
     # the walk really reaches the harness's calls
     assert {"embedding_candidate_pairs", "kmeans_refine", "knn_join_ivf",
-            "CompiledPipeline"} <= seen
+            "CompiledPipeline", "CheckpointedRunner"} <= seen

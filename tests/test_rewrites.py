@@ -3,10 +3,11 @@ unjsonify/splicing composition order, drop accounting, lookup join."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
 from logagent_spark import oracle
-from logagent_spark.config import PipelineSpec, RewriteSpec
+from logagent_spark.config import PipelineSpec, RewriteSpec, SpecError
 from logagent_spark.plans.pipeline import DROP_COL, CompiledPipeline
 
 SCHEMA = T.StructType([
@@ -121,6 +122,45 @@ def test_lookup_broadcast_enrich(spark):
     _assert_parity(got, want, ["lang", "lang_name", "geo"])
     assert got[2][DROP_COL] == "lookup_miss:lang"
     assert got[3][DROP_COL] is None  # null key passes with null outputs
+
+
+def test_lookup_path_enrich(spark, tmp_path):
+    """The `path` lookup source: a parquet table, deduplicated on the
+    key, broadcast-joined like an inline `table`. A key missing from the
+    file (`xx`) drops the row as `lookup_miss:<key>`; a NULL key passes
+    with NULL outputs."""
+    path = str(tmp_path / "langs")
+    spark.createDataFrame(
+        [("en", "English", "US"), ("de", "German", "DE"),
+         ("en", "English", "US")],
+        "lang string, lang_name string, geo string",
+    ).write.parquet(path)
+    spec = PipelineSpec(rewrites=[RewriteSpec(mode="lookup", lookup={
+        "key": "lang", "path": path,
+        "output": {"lang_name": "string", "geo": "string"},
+        "on_miss": "drop",
+    })])
+    res = CompiledPipeline(spec).transform(
+        spark.createDataFrame(ROWS, schema=SCHEMA))
+    got = {r["id"]: (r["lang_name"], r["geo"], r[DROP_COL])
+           for r in res.frame.collect()}
+    assert got == {
+        0: ("English", "US", None),
+        1: ("German", "DE", None),
+        2: (None, None, "lookup_miss:lang"),
+        3: (None, None, None),
+        4: ("English", "US", None),
+    }
+
+
+def test_lookup_without_table_or_path_is_a_spec_error():
+    """A lookup must name its source: without `table` or `path` the spec
+    is rejected at validation, not with a KeyError at transform time."""
+    spec = PipelineSpec(rewrites=[RewriteSpec(mode="lookup", lookup={
+        "key": "lang", "output": {"lang_name": "string"},
+    })])
+    with pytest.raises(SpecError, match="table or path"):
+        CompiledPipeline(spec)
 
 
 def test_command_rewrite(spark):

@@ -5,8 +5,59 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from logagent_spark.operators import similarity as sim
+from logagent_spark.operators.dedup import cosine
+
+
+def centroid_assignment(emb, centroids):
+    """Reference IVF bucket as a Column expression: argmax over the
+    centroid dot products, each a zip_with/aggregate fold (the JVM fold
+    that `cosine()` and the DuckDB oracle share). Ties resolve to the
+    lowest centroid index; a NULL, ragged or NULL-element vector folds
+    to NULL dots and a NULL bucket."""
+    dots = F.array(*[
+        F.aggregate(
+            F.zip_with(emb, sim.lit_vec(c), lambda a, b: a * b),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        for c in centroids
+    ])
+    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
+
+
+def knn_join_ivf_reference(corpus, emb_col, queries_df, centroids, *, k,
+                           nprobe, id_col="vec_id"):
+    """Reference IVF k-NN join in Column expressions: the corpus bucket
+    from `centroid_assignment`, the query's probe buckets from
+    `probe_buckets`, a join on the bucket and `floor(cosine() * 1e6)`
+    per pair, ranked by (cos_ppm DESC NULLS LAST, id ASC)."""
+    probed = queries_df.select(
+        "query_id", F.col("qemb").alias("_qe"),
+        F.explode(sim.probe_buckets(F.col("qemb"), centroids, nprobe))
+        .alias("_bkt"),
+    )
+    indexed = corpus.select(
+        id_col, F.col(emb_col).alias("_ce"),
+        centroid_assignment(F.col(emb_col), centroids).alias("_bkt"),
+    )
+    scored = probed.join(indexed, "_bkt").select(
+        "query_id", id_col,
+        F.floor(cosine(F.col("_qe"), F.col("_ce")) * 1_000_000)
+        .cast("long").alias("cos_ppm"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_ppm").desc(), F.col(id_col).asc())
+    return scored.withColumn("rank", F.row_number().over(w)) \
+        .filter(F.col("rank") <= k)
+
+
+def _scored(df, id_col="vec_id"):
+    return {(r["query_id"], r[id_col]): (r["cos_ppm"], r["rank"])
+            for r in df.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -183,67 +234,122 @@ def test_knn_join_ivf_full_probe_equals_closure_join(spark):
     assert got == want
 
 
-def test_knn_join_ivf_pandas_strategy_equals_expr(spark):
-    """The per-bucket Arrow/numpy scoring path must reproduce the
-    Column-expr path EXACTLY — ids, ppm scores and ranks — at full and
-    partial probe (the sequential-fold numpy dot is bit-identical to
-    the interpreted HOF fold)."""
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_knn_join_ivf_equals_reference(spark, id_type):
+    """The per-bucket Arrow/numpy scoring must reproduce the Column-
+    expression reference EXACTLY — ids, ppm scores and ranks — at full
+    and partial probe (the sequential-fold numpy dot is bit-identical
+    to the interpreted HOF fold). Ten corpus rows repeat other rows'
+    vectors, so ppm ties are broken by id: with string ids (the bench
+    corpus keys by url) that is Spark's binary string order, where
+    "a10" sorts before "a2"."""
     rng = np.random.RandomState(13)
     base = rng.randn(60, 16)
-    rows = [(i, base[i].tolist()) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    from pyspark.sql import functions as F
-
-    corpus = df.filter(F.col("vec_id") >= 5)
-    qdf = df.filter(F.col("vec_id") < 5).select(
-        df.vec_id.alias("query_id"), df.embedding.alias("qemb"))
+    base[50:] = base[10:20]
+    ids = list(range(60)) if id_type == "long" \
+        else [f"a{i}" for i in range(60)]
+    df = spark.createDataFrame(
+        [(ids[i], base[i].tolist()) for i in range(60)],
+        f"vec_id {id_type}, embedding array<double>")
+    qdf = df.filter(F.col("vec_id").isin(ids[:5])).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
+    corpus = df.filter(~F.col("vec_id").isin(ids[:5]))
     cents = sim.seeded_centroids(16, 6, seed=3)
 
     for nprobe in (6, 2):
-        want = {
-            (r["query_id"], r["vec_id"]): (r["cos_ppm"], r["rank"])
-            for r in sim.knn_join_ivf(
-                corpus, "embedding", qdf, cents, k=4, nprobe=nprobe
-            ).collect()
-        }
-        got = {
-            (r["query_id"], r["vec_id"]): (r["cos_ppm"], r["rank"])
-            for r in sim.knn_join_ivf(
-                corpus, "embedding", qdf, cents, k=4, nprobe=nprobe,
-                strategy="pandas",
-            ).collect()
-        }
+        want = _scored(knn_join_ivf_reference(
+            corpus, "embedding", qdf, cents, k=4, nprobe=nprobe))
+        got = _scored(sim.knn_join_ivf(
+            corpus, "embedding", qdf, cents, k=4, nprobe=nprobe))
         assert got == want, nprobe
 
 
-def test_knn_join_ivf_pandas_string_ids(spark):
-    """String ids (the bench corpus keys by url): pandas-side ordering
-    must match Spark's binary string order for the ppm tie-break."""
-    rng = np.random.RandomState(17)
-    base = rng.randn(20, 8)
-    # id "a05" vs "a10" etc — lexicographic order differs from numeric
-    rows = [(f"a{i:02d}", base[i].tolist()) for i in range(20)]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("kind", ["null", "null_element", "ragged", "zero"])
+def test_knn_join_ivf_invalid_query_vectors(spark, kind):
+    """An invalid query vector scores what `cosine()` gives it, both
+    alone and sharing its probe buckets with valid queries: ppm 0 for a
+    NULL, NULL-element or zero query and NULL for a ragged one, ranked
+    (cos_ppm DESC NULLS LAST, id ASC) like the Column-expression
+    reference. (Its NULL dots probe buckets 0..nprobe-1.) Invalid corpus
+    vectors keep a NULL bucket and are never candidates; the invalid
+    query probes bucket 0, which pins that the NULL bucket never reaches
+    the cogroup, where the non-nullable probe key would compare it
+    equal to bucket 0 and fail the task."""
+    dim = 8
+    rng = np.random.RandomState(29)
+    cents = sim.seeded_centroids(dim, 4, seed=3)
+    base = rng.randn(40, dim)
+    corpus = spark.createDataFrame(
+        [(i, base[i].tolist()) for i in range(40)] + [
+            (100, None), (101, [1.0] * (dim - 1)),
+            (102, [None] + [1.0] * (dim - 1)),
+        ],
+        "vec_id long, embedding array<double>")
+    bad = {
+        "null": None,
+        "null_element": [None] + [1.0] * (dim - 1),
+        "ragged": [1.0] * (dim + 1),
+        "zero": [0.0] * dim,
+    }[kind]
+    # valid queries near centroids 0 and 1 share both of the invalid
+    # query's probe buckets
+    valid = [(j, (cents[j] + 0.1 * rng.randn(dim)).tolist())
+             for j in range(2)]
+    assert all(sim.ivf_probes(cents, v, 2)[0] == j for j, v in valid)
+    for queries in ([(50, bad)], [(50, bad)] + valid):
+        qdf = spark.createDataFrame(
+            queries, "query_id long, qemb array<double>")
+        got = _scored(sim.knn_join_ivf(
+            corpus, "embedding", qdf, cents, k=6, nprobe=2))
+        want = _scored(knn_join_ivf_reference(
+            corpus, "embedding", qdf, cents, k=6, nprobe=2))
+        assert got == want
+        assert not any(vid >= 100 for _, vid in got)
+        scores = [ppm for (qid, _), (ppm, _) in got.items() if qid == 50]
+        assert len(scores) == 6
+        assert set(scores) == {None if kind == "ragged" else 0}
 
-    qdf = df.limit(3).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb"))
-    cents = sim.seeded_centroids(8, 3, seed=2)
-    want = {(r["query_id"], r["rank"]): r["vec_id"]
-            for r in sim.knn_join_ivf(
-                df, "embedding", qdf, cents, k=5, nprobe=3).collect()}
-    got = {(r["query_id"], r["rank"]): r["vec_id"]
-           for r in sim.knn_join_ivf(
-               df, "embedding", qdf, cents, k=5, nprobe=3,
-               strategy="pandas").collect()}
-    assert got == want
+
+def test_knn_join_invalid_corpus_vectors(spark):
+    """NULL, NULL-element, ragged and zero corpus vectors score
+    floor(cosine() * 1e6) — 0, 0, NULL and 0 — ranked under the same
+    (cos_ppm DESC NULLS LAST, id ASC) order as a cross join with the
+    `cosine()` Column, both in one batch with the valid vectors and in
+    the default partitioning (invalid rows batched mostly together)."""
+    dim = 8
+    rng = np.random.RandomState(37)
+    rows = [(i, rng.randn(dim).tolist()) for i in range(20)] + [
+        (20, None), (21, [None] + [1.0] * (dim - 1)),
+        (22, [1.0] * (dim - 1)), (23, [1.0] * (dim + 1)),
+        (24, [0.0] * dim),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = [(j, rng.randn(dim).tolist()) for j in range(3)]
+    queries.append((3, [0.0] * dim))
+    k = len(rows)
+    qdf = spark.createDataFrame(queries, "query_id long, qemb array<double>")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_ppm").desc(), F.col("vec_id").asc())
+    want = _scored(
+        df.crossJoin(qdf).select(
+            "query_id", "vec_id",
+            F.floor(cosine(F.col("qemb"), F.col("embedding")) * 1_000_000)
+            .cast("long").alias("cos_ppm"),
+        ).withColumn("rank", F.row_number().over(w))
+    )
+    assert [want[(0, v)][0] for v in range(20, 25)] == [0, 0, None, None, 0]
+    for corpus in (df.coalesce(1), df):
+        assert _scored(sim.knn_join(corpus, "embedding", queries, k=k)) \
+            == want
 
 
 def test_knn_join_ivf_partial_probe_planted_clusters(spark):
     """Tight planted clusters around each centroid: with nprobe=1 every
     query's true top-k lives in its own bucket, so partial probe is
-    exact on this fixture — and the corpus side must not shuffle (the
-    probed query side broadcasts)."""
+    exact on this fixture. Plan shape: both sides cogroup on the bucket
+    key into one per-bucket Arrow scorer, and the corpus is exchanged
+    exactly once — three exchanges in all (probed queries, corpus, the
+    per-query top-k window) and no broadcast."""
     rng = np.random.RandomState(11)
     cents = sim.seeded_centroids(16, 4, seed=3)
     rows, rid = [], 0
@@ -260,7 +366,10 @@ def test_knn_join_ivf_partial_probe_planted_clusters(spark):
 
     got = sim.knn_join_ivf(corpus, "embedding", qdf, cents, k=6, nprobe=1)
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
+    assert plan.count("FlatMapCoGroupsInPandas") == 1
+    assert plan.count("Exchange hashpartitioning(_bkt") == 2
+    assert plan.count("Exchange") == 3
+    assert "Broadcast" not in plan
 
     by_q = _collect_ranked(got)
     truth = {r[0]: r[1] for r in rows}
@@ -295,8 +404,7 @@ def test_knn_join_ivf_planted_twin_recall_floor(spark):
 
     def planted_recall(nprobe):
         got = sim.knn_join_ivf(
-            corpus, "embedding", qdf, cents, k=k, nprobe=nprobe,
-            strategy="pandas")
+            corpus, "embedding", qdf, cents, k=k, nprobe=nprobe)
         by_q = {}
         for r in got.collect():
             by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -354,8 +462,7 @@ def test_suggest_ivf_config_hits_planted_floor(spark):
         [(i, base[i].tolist()) for i in range(nq)],
         "query_id long, qemb array<double>")
     got = sim.knn_join_ivf(
-        corpus, "embedding", qdf, cents, k=k, nprobe=cfg["nprobe"],
-        strategy="pandas")
+        corpus, "embedding", qdf, cents, k=k, nprobe=cfg["nprobe"])
     by_q = {}
     for r in got.collect():
         by_q.setdefault(r["query_id"], set()).add(r["vec_id"])
@@ -388,7 +495,7 @@ def test_assign_buckets_pandas_matches_expr(spark):
         r["vec_id"]: r["b"]
         for r in df.select(
             "vec_id",
-            sim.centroid_assignment(F.col("embedding"), cents).alias("b"),
+            centroid_assignment(F.col("embedding"), cents).alias("b"),
         ).collect()
     }
     assert got == want
