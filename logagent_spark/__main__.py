@@ -38,7 +38,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--keep", default=None,
                     help="comma-separated passthrough columns")
     ap.add_argument("--grok", action="store_true",
-                    help="use the pandas-UDF grok strategy for regex parse")
+                    help="parse regex and grok modes with the Arrow "
+                         "pandas-UDF kernel instead of native Column "
+                         "expressions")
     args = ap.parse_args(argv)
 
     specs = PipelineSpec.load_config(args.config)

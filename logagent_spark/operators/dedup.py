@@ -316,14 +316,18 @@ def connected_components(
 
     Two paths with identical semantics (pytest-pinned equal):
 
-    * **small graphs** (<= small_graph_edges undirected edges): one
-      collect + driver-side union-find. The pair graph is the
-      LSH-candidate output — usually orders of magnitude smaller than
-      the corpus — and below this threshold the distributed loop's cost
-      is pure fixed overhead (per-round jobs + checkpoints dwarf the
-      microseconds of actual work; the benched 25-pair graph spent ~7 s
-      on ~0 bytes). The collect is bounded by the threshold (~tens of
-      MB), not by corpus size.
+    * **small graphs** (<= small_graph_edges RAW pairs): one collect +
+      driver-side union-find. The threshold counts the pair list as
+      given — repeats and reversed pairs included — so a
+      duplicate-heavy list over it takes the distributed path even when
+      its distinct undirected edges would fit (same result; pinned by
+      test_dedup). The pair graph is the LSH-candidate output — usually
+      orders of magnitude smaller than the corpus — and below this
+      threshold the distributed loop's cost is pure fixed overhead
+      (per-round jobs + checkpoints dwarf the microseconds of actual
+      work; the benched 25-pair graph spent ~7 s on ~0 bytes). The
+      collect is bounded by the threshold (~tens of MB), not by corpus
+      size.
     * **large graphs**: iterative min-label propagation PLUS pointer
       jumping (the large-star/small-star "shortcut" step): each round
       every node adopts the min label in its neighborhood, then labels

@@ -1,28 +1,42 @@
-"""Parser compilers — csv / regex / jsonify over the `message` column.
+"""Parser compilers — csv / regex / grok / jsonify over the `message`
+column.
 
-Reproduces /root/reference/agent/task/task.go:201-254:
+Reproduces logagent's agent/task/task.go:201-254:
 
 * ``csv``   — ``strings.SplitN(message, delim, len(columns))``: the last
   column keeps remaining delimiters; fewer parts than columns leaves the
   trailing columns absent (NULL). Compiled to a single ``split`` +
   ``F.get`` projections (ANSI-safe, null on short rows).
-* ``regex`` — named-group extraction with unanchored search; NO match
-  leaves the row intact with all group columns absent (NULL); a matched
+* ``regex`` — named-group extraction with unanchored search; a matched
   row yields "" for non-participating groups (Go FindStringSubmatch).
-  Two physical strategies:
-    - native: per-group ``regexp_extract`` guarded by one ``rlike``
-      (whole-stage codegen; the regex literally runs k+1 times but stays
-      JVM-side — best for few groups);
-    - grok: ONE Arrow-batched pandas UDF evaluating a precompiled pattern
-      per batch (single ``re.search`` per row, all groups read off the
-      match object) returning a struct (the BASELINE north-star path;
-      best for dictionary-sized group sets).
+  Compiled as a grok dictionary of ONE pattern whose winner is not
+  recorded (no ``grok_pattern`` column).
+* ``grok``  — an ordered dictionary of named patterns (extension): the
+  first matching pattern wins, contributes its groups and lands its name
+  in ``grok_pattern``; a group only other patterns define yields nothing
+  for that row. ``%{NAME:field}`` references expand first (both modes).
 * ``jsonify`` — ``json.Unmarshal`` merged into the row. Schema-first:
   the spec declares columns+types; compiled to one ``from_json`` +
   flatten. A corrupt document is a parse error => row dropped from all
   sinks and counted (task.go:104-111). Go yields float64 for all JSON
   numbers — declare ``double`` for Go-parity (`number` validators then
   fail, matching validator.go:69-83).
+
+``regex`` and ``grok`` share ONE kernel per engine, picked by
+``regex_strategy``:
+
+* ``native`` — Column expressions (JVM, whole-stage codegen): every
+  output is a when-chain of ``rlike`` guards in dictionary order, each
+  group read by ``regexp_extract`` of the winning pattern;
+* ``grok``   — ONE Arrow-batched pandas UDF returning a struct: one
+  ``re.search`` per (row, pattern until the first hit), every group read
+  off the match object.
+
+Go leaves the row untouched where a parser yields nothing — a short csv
+split, an unmatched regex/grok row, a NULL message (task.go:216-236).
+``_keep_existing`` applies that rule once for csv, regex and grok: an
+output column that already exists as a STRING column keeps its value
+there.
 """
 
 from __future__ import annotations
@@ -70,52 +84,23 @@ def compile_parser(
     msg = F.col("message")
 
     if spec.mode == "csv":
-        delim = spec.delimiters or ","
-        n = len(spec.columns)
-        parts = escaped_split(msg, delim, n)
-        # Go leaves the row untouched where the split comes up short
-        # (task.go:216-222): a pre-existing STRING column keeps its value
-        # when its part is absent. (A pre-existing non-string column is
-        # still overwritten with NULL — columnar schemas are uniform;
-        # documented divergence, same family as the jsonify merge note.)
-        cols = []
-        for i, name in enumerate(spec.columns):
-            part = F.get(parts, i)
-            if name in schema and is_string(schema[name]):
-                part = F.coalesce(part, F.col(name))
-            cols.append((name, part))
-        return CompiledParser(
-            columns=cols,
+        parts = escaped_split(msg, spec.delimiters or ",", len(spec.columns))
+        return _keep_existing(CompiledParser(
+            columns=[(name, F.get(parts, i))
+                     for i, name in enumerate(spec.columns)],
             schema_updates={name: T.StringType() for name in spec.columns},
-        )
+        ), schema)
 
-    if spec.mode == "regex":
-        # `%{NAME:field}` grok references expand to named groups first
-        # (a pattern without references passes through untouched)
-        pattern = expand_grok(spec.regex)
-        groups = go_regex_groups(pattern)  # name -> idx (validates syntax)
-        if regex_strategy == "grok":
-            return _compile_grok(pattern, groups)
-        jpat = to_java_regex(pattern)
-        matched = msg.rlike(jpat)
-        # no-match leaves the row untouched (task.go:227-236): a
-        # pre-existing STRING column keeps its value on unmatched rows
-        # (non-string pre-existing columns: see the csv note above)
-        cols = []
-        for name, idx in groups.items():
-            extracted = F.when(matched, F.regexp_extract(msg, jpat, idx))
-            if name in schema and is_string(schema[name]):
-                extracted = extracted.otherwise(F.col(name))
-            cols.append((name, extracted))
-        return CompiledParser(
-            columns=cols,
-            schema_updates={name: T.StringType() for name in groups},
+    if spec.mode in ("regex", "grok"):
+        if regex_strategy not in _KERNELS:
+            raise ValueError(f"unsupported regex_strategy `{regex_strategy}`")
+        if spec.mode == "regex":
+            patterns, name_col = {"regex": spec.regex}, None
+        else:
+            patterns, name_col = spec.patterns, "grok_pattern"
+        return _keep_existing(
+            _KERNELS[regex_strategy](patterns, name_col), schema
         )
-
-    if spec.mode == "grok":
-        if regex_strategy == "native":
-            return _compile_grok_dictionary_native(spec.patterns)
-        return _compile_grok_dictionary(spec.patterns)
 
     if spec.mode == "jsonify":
         corrupt = "_corrupt"
@@ -177,80 +162,101 @@ def compile_parser(
     raise ValueError(f"unsupported parser mode `{spec.mode}`")
 
 
-def _compile_grok_dictionary_native(
+def _keep_existing(parsed: CompiledParser, schema: Schema) -> CompiledParser:
+    """Go's "leave the row untouched" rule: an output that already exists
+    as a STRING column becomes ``coalesce(extracted, col)``. Exact because
+    a parser yields NULL only where Go writes nothing — a matched
+    regex/grok row gives "" or a value for each of its own groups, never
+    NULL. (A pre-existing non-string column is still overwritten with
+    NULL — columnar schemas are uniform; documented divergence, same
+    family as the jsonify merge note.)"""
+    keep = {
+        name for name in parsed.schema_updates
+        if name in schema and is_string(schema[name])
+    }
+    parsed.columns = [
+        (name, F.coalesce(expr, F.col(name)) if name in keep else expr)
+        for name, expr in parsed.columns
+    ]
+    return parsed
+
+
+def _dictionary(
     patterns: dict[str, str]
-) -> CompiledParser:
-    """Grok dictionary compiled to pure Column expressions (JVM,
-    whole-stage codegen): `grok_pattern` is a when-chain of rlike guards
-    in dictionary order; each group column is a when-chain over ALL
-    patterns (a winning pattern that lacks the group yields NULL, same
-    as the UDF strategy). Each pattern's rlike literally appears in
-    several projections, but ProjectExec's runtime subexpression
-    elimination evaluates it once per row; the per-group regexp_extract
-    re-runs the winning regex — the JVM-vs-Python tradeoff both
-    strategies exist to let users measure (bench.py tracks it)."""
-    order: list[tuple[str, str, dict[str, int]]] = []
+) -> tuple[list[tuple[str, str, dict[str, int]]], list[str]]:
+    """(name, expanded pattern, group -> index) per pattern in dictionary
+    order, and every group name in first-seen order."""
+    entries = []
     all_groups: list[str] = []
     for name, p in patterns.items():
         pattern = expand_grok(p)
-        groups = go_regex_groups(pattern)
-        order.append((name, to_java_regex(pattern), groups))
-        for g in groups:
-            if g not in all_groups:
-                all_groups.append(g)
+        groups = go_regex_groups(pattern)  # validates syntax
+        entries.append((name, pattern, groups))
+        all_groups += [g for g in groups if g not in all_groups]
+    return entries, all_groups
 
+
+def _columns_kernel(
+    patterns: dict[str, str], name_col: str | None
+) -> CompiledParser:
+    """Dictionary compiled to pure Column expressions (JVM, whole-stage
+    codegen): `name_col` (when set) is a when-chain of rlike guards in
+    dictionary order; each group column is a when-chain over ALL
+    patterns (a winning pattern that lacks the group yields NULL, same
+    as the UDF kernel). Each pattern's rlike literally appears in
+    several projections, but ProjectExec's runtime subexpression
+    elimination evaluates it once per row; the per-group regexp_extract
+    re-runs the winning regex — the JVM-vs-Python tradeoff both kernels
+    exist to let users measure (bench.py tracks it)."""
+    entries, all_groups = _dictionary(patterns)
     msg = F.col("message")
-    name_expr = F.lit(None).cast(T.StringType())
-    chain = None
-    for name, jpat, _ in order:
-        m = msg.rlike(jpat)
-        chain = F.when(m, F.lit(name)) if chain is None else chain.when(
-            m, F.lit(name)
-        )
-    name_expr = chain if chain is not None else name_expr
+    guarded = []  # (name, rlike guard, JVM pattern, groups)
+    for name, pattern, groups in entries:
+        jpat = to_java_regex(pattern)
+        guarded.append((name, msg.rlike(jpat), jpat, groups))
 
-    cols: list[tuple[str, Column]] = [("grok_pattern", name_expr)]
-    updates: dict[str, T.DataType] = {"grok_pattern": T.StringType()}
+    def chain(branches: list[tuple[Column, Column]]) -> Column:
+        (m, val), *rest = branches
+        out = F.when(m, val)
+        for m, val in rest:
+            out = out.when(m, val)
+        return out
+
+    cols: list[tuple[str, Column]] = []
+    if name_col:
+        cols.append((name_col, chain(
+            [(m, F.lit(name)) for name, m, _, _ in guarded]
+        )))
     for g in all_groups:
-        gchain = None
-        for name, jpat, groups in order:
-            m = msg.rlike(jpat)
-            val = (
-                F.regexp_extract(msg, jpat, groups[g])
-                if g in groups
-                else F.lit(None).cast(T.StringType())
-            )
-            gchain = F.when(m, val) if gchain is None else gchain.when(m, val)
-        cols.append((g, gchain))
-        updates[g] = T.StringType()
-    return CompiledParser(columns=cols, schema_updates=updates)
-
-
-def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
-    """Grok DICTIONARY (BASELINE north-star): ordered named patterns,
-    first matching pattern wins and contributes its named groups; the
-    winning pattern's name lands in `grok_pattern`. One vectorized
-    pandas UDF evaluates the whole dictionary per Arrow batch — each
-    pattern runs only on the rows no earlier pattern matched.
-    `%{NAME:field}` grok references expand before compilation."""
-    compiled = {
-        name: re.compile(expand_grok(p)) for name, p in patterns.items()
-    }
-    all_groups: list[str] = []
-    for name, cre in compiled.items():
-        for g in cre.groupindex:
-            if g not in all_groups:
-                all_groups.append(g)
-    out_type = T.StructType(
-        [T.StructField("grok_pattern", T.StringType(), True)]
-        + [T.StructField(g, T.StringType(), True) for g in all_groups]
+        cols.append((g, chain([
+            (m, F.regexp_extract(msg, jpat, groups[g]) if g in groups
+             else F.lit(None).cast(T.StringType()))
+            for _, m, jpat, groups in guarded
+        ])))
+    return CompiledParser(
+        columns=cols,
+        schema_updates={name: T.StringType() for name, _ in cols},
     )
 
-    # (pattern name, bound search, [(group name, group idx)]) — resolved
+
+def _udf_kernel(
+    patterns: dict[str, str], name_col: str | None
+) -> CompiledParser:
+    """Dictionary compiled to ONE vectorized pandas UDF over Arrow
+    batches (the BASELINE north-star path): each pattern runs only on the
+    rows no earlier pattern matched, and the struct it returns carries
+    the winner's name only when `name_col` is set, so a one-pattern
+    regex parse ships just its groups back to the JVM."""
+    entries, all_groups = _dictionary(patterns)
+    out_type = T.StructType(
+        [T.StructField(c, T.StringType(), True)
+         for c in ([name_col] if name_col else []) + all_groups]
+    )
+    # (pattern name, bound search, [(group name, group idx)]) — compiled
     # once per executor so the batch loop touches no dicts.
     plan = [
-        (name, cre.search, list(cre.groupindex.items()))
-        for name, cre in compiled.items()
+        (name, re.compile(pattern).search, list(groups.items()))
+        for name, pattern, groups in entries
     ]
 
     @F.pandas_udf(out_type)
@@ -258,10 +264,12 @@ def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
         # One `re.search` per (row, pattern-until-first-hit): the match
         # object yields every group, so no second extract pass. This is
         # the minimum regex work the dictionary semantics permit.
+        # Go parity: in a matched row a non-participating group is "";
+        # in an unmatched/null row every output stays NULL.
         vals = s.to_numpy(dtype=object)
         n_rows = len(vals)
-        out = {c: np.empty(n_rows, dtype=object)
-               for c in ("grok_pattern", *all_groups)}
+        winner = np.empty(n_rows, dtype=object)
+        out = {g: np.empty(n_rows, dtype=object) for g in all_groups}
         for i, v in enumerate(vals):
             if type(v) is not str:
                 continue
@@ -269,66 +277,24 @@ def _compile_grok_dictionary(patterns: dict[str, str]) -> CompiledParser:
                 m = search(v)
                 if m is None:
                     continue
-                out["grok_pattern"][i] = name
+                winner[i] = name
                 g = m.group
                 for gname, gi in gitems:
                     val = g(gi)
                     out[gname][i] = val if val is not None else ""
                 break
+        if name_col:
+            out = {name_col: winner, **out}
         return pd.DataFrame(out, index=s.index)
 
     tmp = "_grokdict_parsed"
-    cols: list[tuple[str, Column]] = [(tmp, grok_dict(F.col("message")))]
-    updates: dict[str, T.DataType] = {"grok_pattern": T.StringType()}
-    cols.append(("grok_pattern", F.col(tmp).getField("grok_pattern")))
-    for g in all_groups:
-        cols.append((g, F.col(tmp).getField(g)))
-        updates[g] = T.StringType()
-    cols.append((tmp, None))
-    return CompiledParser(columns=cols, schema_updates=updates)
-
-
-# ---------------------------------------------------------------------------
-# grok path: one Arrow-vectorized pandas UDF per pattern
-
-def _compile_grok(pattern: str, groups: dict[str, int]) -> CompiledParser:
-    names = list(groups)
-    out_type = T.StructType(
-        [T.StructField(n, T.StringType(), True) for n in names]
-    )
-    # Precompile once per executor: the pattern is captured in the closure
-    # and compiled at UDF-definition time, not per batch (SURVEY.md §4).
-    cre = re.compile(pattern)
-
-    @F.pandas_udf(out_type)
-    def grok_extract(s: pd.Series) -> pd.DataFrame:
-        # One `re.search` per row; the match object yields every group
-        # (Series.str.extract + str.contains would run the regex twice —
-        # measured 2x slower on 1 KB prose docs at 100k rows).
-        # Go parity: in a matched row a non-participating group is "";
-        # in an unmatched/null row every group stays NULL.
-        search = cre.search
-        vals = s.to_numpy(dtype=object)
-        n_rows = len(vals)
-        out = {n: np.empty(n_rows, dtype=object) for n in names}
-        for i, v in enumerate(vals):
-            if type(v) is not str:
-                continue
-            m = search(v)
-            if m is None:
-                continue
-            g = m.group
-            for n, gi in groups.items():
-                val = g(gi)
-                out[n][i] = val if val is not None else ""
-        return pd.DataFrame(out, index=s.index)
-
-    tmp = "_grok_parsed"
-    cols: list[tuple[str, Column]] = [(tmp, grok_extract(F.col("message")))]
-    for n in names:
-        cols.append((n, F.col(tmp).getField(n)))
-    cols.append((tmp, None))
+    outputs = out_type.fieldNames()
     return CompiledParser(
-        columns=cols,
-        schema_updates={n: T.StringType() for n in names},
+        columns=[(tmp, grok_dict(F.col("message")))]
+        + [(c, F.col(tmp).getField(c)) for c in outputs]
+        + [(tmp, None)],
+        schema_updates={c: T.StringType() for c in outputs},
     )
+
+
+_KERNELS = {"native": _columns_kernel, "grok": _udf_kernel}

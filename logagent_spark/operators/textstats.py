@@ -302,8 +302,7 @@ def _resolve_auto_buckets(df: DataFrame, text_col: str, w: int):
 def _dup_window_occurrences(
     occ: DataFrame,
     *,
-    prefilter_buckets: "int | str | None" = None,
-    broadcast_hot: bool = True,
+    prefilter_buckets: "int | None" = None,
     metrics_sink: "list | None" = None,
 ) -> DataFrame:
     """Occurrence rows (any cols + raw window string `_s`) -> the subset
@@ -332,13 +331,11 @@ def _dup_window_occurrences(
 
     Sizing: a singleton window survives with p ~ T/W (T total windows),
     so W ~ 50x the corpus window count keeps false positives ~2%; the
-    hot-bucket set is ~(true repeats + T^2/2W collisions) longs. Pass
-    ``prefilter_buckets="auto"`` to derive W from the measured corpus
-    window count (one narrow count action over the occurrence set, then
-    `suggest_prefilter_buckets`). Leave `broadcast_hot` on while the
-    hot set fits the broadcast budget (it is longs only); at extreme T
-    switch it off for a shuffle join on the bucket key, or shard the
-    corpus and union per-shard survivors.
+    hot-bucket set is ~(true repeats + T^2/2W collisions) longs, and it
+    is always broadcast to the survivor join (longs only); at extreme T
+    shard the corpus and union per-shard survivors. Callers resolve
+    ``prefilter_buckets="auto"`` to W or None first
+    (`_resolve_auto_buckets`), where the doc frame is in hand.
 
     ``metrics_sink`` (ADVICE r5): the eager localCheckpoint runs the
     bucket-count shuffle and survivor join in a SEPARATE job at
@@ -346,12 +343,6 @@ def _dup_window_occurrences(
     the final plan. Pass a list to receive the pre-checkpoint frame
     (its executed plan carries those shuffles' metrics) so byte
     accounting can sum both contributions."""
-    if prefilter_buckets == "auto":
-        t = occ.count()
-        prefilter_buckets = (
-            suggest_prefilter_buckets(t)
-            if t >= AUTO_PREFILTER_MIN_WINDOWS else None
-        )
     if prefilter_buckets:
         b = F.pmod(F.xxhash64("_s"), F.lit(prefilter_buckets))
         hot = (
@@ -361,10 +352,8 @@ def _dup_window_occurrences(
             .filter(F.col("_bn") >= 2)
             .select("_b")
         )
-        if broadcast_hot:
-            hot = F.broadcast(hot)
         pre = (
-            occ.withColumn("_b", b).join(hot, "_b").drop("_b")
+            occ.withColumn("_b", b).join(F.broadcast(hot), "_b").drop("_b")
             .withColumn("_w", F.md5("_s")).drop("_s")
         )
         occ = pre.localCheckpoint(eager=True)
@@ -387,7 +376,6 @@ def duplicated_window_stats(
     w: int = 5,
     *,
     prefilter_buckets: "int | str | None" = None,
-    broadcast_hot: bool = True,
     metrics_sink: "list | None" = None,
 ) -> DataFrame:
     """Cross-document repeated-substring signal — the statistic behind
@@ -438,7 +426,6 @@ def duplicated_window_stats(
     dup = _dup_window_occurrences(
         exploded,
         prefilter_buckets=prefilter_buckets,
-        broadcast_hot=broadcast_hot,
         metrics_sink=metrics_sink,
     )
     dups_per_doc = dup.groupBy(id_col).agg(
@@ -471,7 +458,6 @@ def excise_duplicated_windows(
     w: int = 5,
     *,
     prefilter_buckets: "int | str | None" = None,
-    broadcast_hot: bool = True,
     metrics_sink: "list | None" = None,
 ) -> DataFrame:
     """Substring-level dedup, the cleaning step behind
@@ -501,7 +487,6 @@ def excise_duplicated_windows(
         _dup_window_occurrences(
             win_pos,
             prefilter_buckets=prefilter_buckets,
-            broadcast_hot=broadcast_hot,
             metrics_sink=metrics_sink,
         )
         .select(

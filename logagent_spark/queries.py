@@ -410,28 +410,12 @@ def q_dedup_exact_stats(spark, sf_dir):
     )
 
 
-SQL_DEDUP_EXACT = r"""
-SELECT count(*) AS n_rows,
-       count(DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))) AS n_unique
-FROM documents
-"""
-
-
 def q_dedup_exact_keep(spark, sf_dir):
     """Exact dedup winners: smallest doc_id per normalized content hash
     (min-by aggregation + left-semi join — one shuffle on the uniform
     hash, no window sort)."""
     docs = _t(spark, sf_dir, "documents")
     return dd.dedup_exact(docs, "doc_id", "text").select("doc_id", "lang")
-
-
-SQL_DEDUP_EXACT_KEEP = r"""
-SELECT doc_id, lang FROM documents
-WHERE doc_id IN (
-  SELECT min(doc_id) FROM documents
-  GROUP BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-)
-"""
 
 
 def q_text_stats(spark, sf_dir):
@@ -2016,11 +2000,6 @@ def q_file_collector_lines(spark, sf_dir):
     )
 
 
-SQL_FILE_COLLECTOR_LINES = """
-SELECT event_id, event_type, 'logagent-spark' AS device_id FROM events
-"""
-
-
 def q_dir_collector_whole_files(spark, sf_dir):
     """dir collector (collector.go:275-324) as a batch round-trip: one
     file per lang whose body is every document's text in doc_id order,
@@ -2059,13 +2038,6 @@ def q_dir_collector_whole_files(spark, sf_dir):
         F.col("message"),
         F.col("device_id"),
     )
-
-
-SQL_DIR_COLLECTOR_WHOLE_FILES = """
-SELECT lang, string_agg(text, chr(10) ORDER BY doc_id) AS message,
-       'logagent-spark' AS device_id
-FROM documents GROUP BY lang
-"""
 
 
 def q_degradation_sample(spark, sf_dir):

@@ -480,6 +480,29 @@ def test_connected_components_paths_agree_on_mixed_graph(spark):
     assert small == dist and len(small) == 41 + 6 + 5
 
 
+def test_connected_components_threshold_counts_raw_pairs(spark,
+                                                       monkeypatch):
+    """The small-graph threshold counts RAW pairs, repeats and reversed
+    pairs included: a duplicate-heavy list over `small_graph_edges` takes
+    the distributed loop even though its distinct undirected edges fit
+    under it — and still equals union-find on the same pairs."""
+    distinct = [(0, 1), (1, 2), (2, 3), (10, 11), (11, 12), (20, 21)]
+    raw = distinct * 3 + [(b, a) for a, b in distinct] * 2 + [(3, 0)]
+    assert len(raw) > 12 >= len({frozenset(p) for p in raw})
+    want = dedup._union_find_components(raw)
+    pairs = spark.createDataFrame(raw, "a long, b long")
+
+    def no_fast_path(_pairs):
+        raise AssertionError("took the union-find fast path")
+
+    monkeypatch.setattr(dedup, "_union_find_components", no_fast_path)
+    got = {r["id"]: r["component"]
+           for r in dedup.connected_components(
+               pairs, small_graph_edges=12).collect()}
+    assert got == want
+    assert set(got.values()) == {0, 10, 20}
+
+
 def test_minhash_config_must_come_in_pairs(spark):
     """Banding math couples num_hashes and bands: passing exactly one
     raises instead of silently discarding it (ADVICE r3)."""

@@ -10,7 +10,7 @@ import ast
 import inspect
 from pathlib import Path
 
-from logagent_spark.operators import dedup, similarity
+from logagent_spark.operators import dedup, similarity, textstats
 from logagent_spark.plans.checkpoint import CheckpointedRunner
 from logagent_spark.plans.pipeline import CompiledPipeline
 
@@ -26,6 +26,8 @@ GUARDED = {
     "write_sinks": (CompiledPipeline.write_sinks, True),
     "CompiledPipeline": (CompiledPipeline, False),
     "CheckpointedRunner": (CheckpointedRunner, False),
+    "duplicated_window_stats": (textstats.duplicated_window_stats, False),
+    "excise_duplicated_windows": (textstats.excise_duplicated_windows, False),
 }
 
 
@@ -60,4 +62,5 @@ def test_harness_calls_bind_to_product_signatures():
     assert not failures, "\n".join(failures)
     # the walk really reaches the harness's calls
     assert {"embedding_candidate_pairs", "kmeans_refine", "knn_join_ivf",
-            "CompiledPipeline", "CheckpointedRunner"} <= seen
+            "CompiledPipeline", "CheckpointedRunner",
+            "duplicated_window_stats", "excise_duplicated_windows"} <= seen

@@ -184,20 +184,50 @@ def test_regex_underscored_group_names(spark, strategy):
     assert rows[1]["client_ip"] is None
 
 
-def test_regex_no_match_keeps_preexisting_string_column(spark):
-    """Go leaves the row untouched on no-match (task.go:227-236): a
-    pre-existing string column must survive unmatched rows instead of
-    being overwritten with NULL."""
+KEEP_EXISTING_PARSERS = {
+    "regex": ParserSpec(mode="regex", regex=r"match (?P<num>\d+)"),
+    "grok": ParserSpec(mode="grok", patterns={
+        "num": r"match (?P<num>\d+)",
+        "word": r"^(?P<word>[a-z]+)$",
+    }),
+}
+KEEP_EXISTING_MESSAGES = [
+    "match 1",          # matched (grok: won by `num`, which lacks `word`)
+    "no digits here",   # unmatched
+    None,               # NULL message: the parser is a no-op
+    "wordonly",         # grok: won by `word`, which lacks `num`
+]
+
+
+@pytest.mark.parametrize("strategy", ["native", "grok"])
+@pytest.mark.parametrize("mode", ["regex", "grok"])
+def test_regex_no_match_keeps_preexisting_string_column(spark, mode,
+                                                        strategy):
+    """Go leaves the row untouched where the parser writes nothing
+    (task.go:227-236): pre-existing string columns named like an output
+    must survive unmatched rows, NULL messages and — in a grok
+    dictionary — groups the winning pattern lacks, instead of being
+    overwritten with NULL. Every mode x strategy equals the oracle."""
+    parser = KEEP_EXISTING_PARSERS[mode]
+    old = ("num", "word", "grok_pattern")
     df = spark.createDataFrame(
-        [(0, "match 1", "old0"), (1, "no digits here", "old1")],
-        "id long, message string, num string",
+        [(i, m, *(f"old_{c}{i}" for c in old))
+         for i, m in enumerate(KEEP_EXISTING_MESSAGES)],
+        "id long, message string, num string, word string, "
+        "grok_pattern string",
     )
-    spec = PipelineSpec(parser=ParserSpec(mode="regex",
-                                          regex=r"match (?P<num>\d+)"))
-    rows = {r["id"]: r for r in
-            CompiledPipeline(spec).transform(df).frame.collect()}
-    assert rows[0]["num"] == "1"        # matched: overwritten
-    assert rows[1]["num"] == "old1"     # unmatched: kept
+    pipe = CompiledPipeline(PipelineSpec(parser=parser),
+                            regex_strategy=strategy)
+    got = {r["id"]: r.asDict() for r in pipe.transform(df).frame.collect()}
+    for i, m in enumerate(KEEP_EXISTING_MESSAGES):
+        want = {c: f"old_{c}{i}" for c in old}
+        if m is not None:
+            want["message"] = m
+        oracle.parse_row(parser, want)
+        assert {c: got[i][c] for c in old} == {c: want[c] for c in old}, (
+            mode, strategy, m)
+    assert got[0]["num"] == "1"              # matched: overwritten
+    assert got[1]["num"] == "old_num1"       # unmatched: kept
 
 
 def test_csv_short_row_keeps_preexisting_string_column(spark):
