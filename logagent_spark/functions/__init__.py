@@ -9,6 +9,7 @@ plans behave identically whether the hosting session enables ANSI SQL.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -100,11 +101,21 @@ def json_escape_string(col: Column) -> Column:
     return F.concat(F.lit('"'), c, F.lit('"'))
 
 
-def fail_reason(pred_ok: Column, reason: str) -> Column:
-    """Map a validator predicate to a drop-reason Column: NULL when the
-    row passes, the reason string when it fails. A NULL predicate is a
-    failure (Go: type-assert miss / missing key => error)."""
-    return F.when(~F.coalesce(pred_ok, F.lit(False)), F.lit(reason))
+@dataclass
+class CompiledStep:
+    """One compiled operator of the parse -> validate -> rewrite chain
+    (the reference composes them all through one processor contract,
+    task.go:378-392): projections applied in order (a None expression
+    drops that column), the schema updates they introduce, and an
+    optional ``failed`` predicate that drops the row under ``reason``.
+    A step that compiles to a no-op against the schema still carries
+    its reason label, so the pipeline's reason list depends on the spec
+    alone."""
+
+    columns: list[tuple[str, Column | None]] = field(default_factory=list)
+    schema_updates: dict[str, T.DataType] = field(default_factory=dict)
+    failed: Column | None = None
+    reason: str | None = None
 
 
 def first_reason(*reasons: Column) -> Column:

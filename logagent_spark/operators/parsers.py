@@ -17,10 +17,11 @@ Reproduces logagent's agent/task/task.go:201-254:
   for that row. ``%{NAME:field}`` references expand first (both modes).
 * ``jsonify`` — ``json.Unmarshal`` merged into the row. Schema-first:
   the spec declares columns+types; compiled to one ``from_json`` +
-  flatten. A corrupt document is a parse error => row dropped from all
-  sinks and counted (task.go:104-111). Go yields float64 for all JSON
-  numbers — declare ``double`` for Go-parity (`number` validators then
-  fail, matching validator.go:69-83).
+  flatten (the ``jsonify`` kernel, shared with the jsonify rewrite). A
+  corrupt document is a parse error => row dropped from all sinks and
+  counted (task.go:104-111). Go yields float64 for all JSON numbers —
+  declare ``double`` for Go-parity (`number` validators then fail,
+  matching validator.go:69-83).
 
 ``regex`` and ``grok`` share ONE kernel per engine, picked by
 ``regex_strategy``:
@@ -33,16 +34,21 @@ Reproduces logagent's agent/task/task.go:201-254:
   off the match object.
 
 Go leaves the row untouched where a parser yields nothing — a short csv
-split, an unmatched regex/grok row, a NULL message (task.go:216-236).
-``_keep_existing`` applies that rule once for csv, regex and grok: an
-output column that already exists as a STRING column keeps its value
-there.
+split, an unmatched regex/grok row, a NULL message, a key the JSON
+document lacks (task.go:216-250). ``_keep_existing`` applies that rule
+once for every parser: an output column that already exists with the
+output's own type keeps its value there.
+
+The parser compiles to the ``CompiledStep`` that global validators and
+rewrites also return (projections, schema updates, an optional
+``failed`` predicate and its drop reason); only jsonify can fail, under
+``parse_error:jsonify``, and it names that reason even when a non-string
+``message`` makes it a no-op.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -52,6 +58,7 @@ from pyspark.sql import types as T
 
 from logagent_spark.config import ParserSpec
 from logagent_spark.functions import (
+    CompiledStep,
     escaped_split,
     go_regex_groups,
     is_string,
@@ -62,30 +69,25 @@ from logagent_spark.functions.grok import expand_grok
 
 Schema = dict[str, T.DataType]
 
-
-@dataclass
-class CompiledParser:
-    """Projections to apply (in order), an optional parse-error reason
-    Column, and the schema updates the parser introduces."""
-
-    columns: list[tuple[str, Column]] = field(default_factory=list)
-    error: Column | None = None
-    schema_updates: dict[str, T.DataType] = field(default_factory=dict)
+JSONIFY_REASON = "parse_error:jsonify"
 
 
 def compile_parser(
     spec: ParserSpec, schema: Schema, *, regex_strategy: str = "native"
-) -> CompiledParser:
+) -> CompiledStep:
     if not spec.mode:
-        return CompiledParser()
+        return CompiledStep()
     if "message" not in schema or not is_string(schema["message"]):
-        # non-string message: every parser is a no-op (task.go:216, 231, 249)
-        return CompiledParser()
+        # non-string message: every parser is a no-op (task.go:216, 231,
+        # 249); jsonify still names the reason it can drop rows for
+        return CompiledStep(
+            reason=JSONIFY_REASON if spec.mode == "jsonify" else None
+        )
     msg = F.col("message")
 
     if spec.mode == "csv":
         parts = escaped_split(msg, spec.delimiters or ",", len(spec.columns))
-        return _keep_existing(CompiledParser(
+        return _keep_existing(CompiledStep(
             columns=[(name, F.get(parts, i))
                      for i, name in enumerate(spec.columns)],
             schema_updates={name: T.StringType() for name in spec.columns},
@@ -103,41 +105,13 @@ def compile_parser(
         )
 
     if spec.mode == "jsonify":
-        corrupt = "_corrupt"
-        struct_type = T.StructType(
-            [
-                T.StructField(c, type_by_name(spec.types.get(c, "string")), True)
-                for c in spec.columns
-            ]
-            + [T.StructField(corrupt, T.StringType(), True)]
-        )
-        parsed = F.from_json(
-            msg, struct_type, {"columnNameOfCorruptRecord": corrupt}
-        )
-        # malformed OR non-object input populates the corrupt-record field
-        # (Go: Unmarshal of a non-object into map[string]interface{} errors);
-        # NULL message passes through untouched (no parse attempt).
-        err = F.when(
-            parsed.getField(corrupt).isNotNull(), F.lit("parse_error:jsonify")
-        )
-        tmp = "_jsonify_parsed"
-        cols: list[tuple[str, Column]] = [(tmp, parsed)]
-        for c in spec.columns:
-            new = F.col(tmp).getField(c)
-            if c in schema:
-                # Unmarshal merges: a key absent from the document keeps the
-                # pre-existing value. (JSON-null and absent both map to NULL
-                # here — documented divergence, SURVEY.md §2.2.)
-                old_dt, new_dt = schema[c], struct_type[c].dataType
-                if old_dt == new_dt:
-                    new = F.coalesce(new, F.col(c))
-            cols.append((c, new))
-        cols.append((tmp, None))  # sentinel: drop the temp struct
-        updates = {
-            f.name: f.dataType
-            for f in struct_type.fields
-            if f.name != corrupt
-        }
+        # Unmarshal merges: a key absent from the document keeps the
+        # pre-existing value. (JSON-null and absent both map to NULL
+        # here — documented divergence, SURVEY.md §2.2.)
+        step = _keep_existing(jsonify(
+            msg, {c: spec.types.get(c, "string") for c in spec.columns},
+            "", JSONIFY_REASON, tmp="_jsonify_parsed",
+        ), schema)
         if spec.attrs:
             # dynamic-key overflow (SURVEY §1.4): the reference merges
             # EVERY top-level key into the row (task.go:244-250); the
@@ -151,34 +125,57 @@ def compile_parser(
                 F.from_json(msg, map_t),
                 lambda k, _: ~k.isin(*spec.columns),
             )
-            cols.append((spec.attrs, overflow))
-            updates[spec.attrs] = map_t
-        return CompiledParser(
-            columns=cols,
-            error=err,
-            schema_updates=updates,
-        )
+            step.columns.append((spec.attrs, overflow))
+            step.schema_updates[spec.attrs] = map_t
+        return step
 
     raise ValueError(f"unsupported parser mode `{spec.mode}`")
 
 
-def _keep_existing(parsed: CompiledParser, schema: Schema) -> CompiledParser:
+def jsonify(
+    src: Column, types: dict[str, str], prefix: str, reason: str, *, tmp: str
+) -> CompiledStep:
+    """The one JSON kernel (jsonify parser and rewrite): ONE ``from_json``
+    of `src` into the declared top-level keys, parsed into the temp
+    struct `tmp` and flattened into columns ``prefix + key``. Malformed
+    OR non-object input populates the corrupt-record field (Go:
+    Unmarshal of a non-object into map[string]interface{} errors) and
+    fails the step under `reason`; a NULL source passes through
+    untouched (no parse attempt)."""
+    corrupt = "_corrupt"
+    fields = [T.StructField(k, type_by_name(t), True) for k, t in types.items()]
+    parsed = F.from_json(
+        src,
+        T.StructType(fields + [T.StructField(corrupt, T.StringType(), True)]),
+        {"columnNameOfCorruptRecord": corrupt},
+    )
+    return CompiledStep(
+        columns=[(tmp, parsed)]
+        + [(prefix + f.name, F.col(tmp).getField(f.name)) for f in fields]
+        + [(tmp, None)],  # sentinel: drop the temp struct
+        schema_updates={prefix + f.name: f.dataType for f in fields},
+        failed=parsed.getField(corrupt).isNotNull(),
+        reason=reason,
+    )
+
+
+def _keep_existing(step: CompiledStep, schema: Schema) -> CompiledStep:
     """Go's "leave the row untouched" rule: an output that already exists
-    as a STRING column becomes ``coalesce(extracted, col)``. Exact because
-    a parser yields NULL only where Go writes nothing — a matched
-    regex/grok row gives "" or a value for each of its own groups, never
-    NULL. (A pre-existing non-string column is still overwritten with
-    NULL — columnar schemas are uniform; documented divergence, same
-    family as the jsonify merge note.)"""
+    with the output's own type becomes ``coalesce(extracted, col)``.
+    Exact because a parser yields NULL only where Go writes nothing — a
+    matched regex/grok row gives "" or a value for each of its own
+    groups, never NULL; a jsonify key is NULL only when the document
+    lacks it. (A pre-existing column of another type is still
+    overwritten — columnar schemas are uniform; documented divergence.)"""
     keep = {
-        name for name in parsed.schema_updates
-        if name in schema and is_string(schema[name])
+        name for name, dt in step.schema_updates.items()
+        if schema.get(name) == dt
     }
-    parsed.columns = [
+    step.columns = [
         (name, F.coalesce(expr, F.col(name)) if name in keep else expr)
-        for name, expr in parsed.columns
+        for name, expr in step.columns
     ]
-    return parsed
+    return step
 
 
 def _dictionary(
@@ -198,7 +195,7 @@ def _dictionary(
 
 def _columns_kernel(
     patterns: dict[str, str], name_col: str | None
-) -> CompiledParser:
+) -> CompiledStep:
     """Dictionary compiled to pure Column expressions (JVM, whole-stage
     codegen): `name_col` (when set) is a when-chain of rlike guards in
     dictionary order; each group column is a when-chain over ALL
@@ -233,7 +230,7 @@ def _columns_kernel(
              else F.lit(None).cast(T.StringType()))
             for _, m, jpat, groups in guarded
         ])))
-    return CompiledParser(
+    return CompiledStep(
         columns=cols,
         schema_updates={name: T.StringType() for name, _ in cols},
     )
@@ -241,7 +238,7 @@ def _columns_kernel(
 
 def _udf_kernel(
     patterns: dict[str, str], name_col: str | None
-) -> CompiledParser:
+) -> CompiledStep:
     """Dictionary compiled to ONE vectorized pandas UDF over Arrow
     batches (the BASELINE north-star path): each pattern runs only on the
     rows no earlier pattern matched, and the struct it returns carries
@@ -289,7 +286,7 @@ def _udf_kernel(
 
     tmp = "_grokdict_parsed"
     outputs = out_type.fieldNames()
-    return CompiledParser(
+    return CompiledStep(
         columns=[(tmp, grok_dict(F.col("message")))]
         + [(c, F.col(tmp).getField(c)) for c in outputs]
         + [(tmp, None)],

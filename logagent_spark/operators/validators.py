@@ -25,7 +25,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logagent_spark.config import ValidatorSpec
-from logagent_spark.functions import fail_reason, is_double, is_long, is_string
+from logagent_spark.functions import (
+    CompiledStep,
+    is_double,
+    is_long,
+    is_string,
+    to_java_regex,
+)
 
 Schema = dict[str, T.DataType]
 
@@ -58,22 +64,35 @@ def compile_validator(
     NULL results count as failure — callers must wrap with
     ``F.coalesce(pred, F.lit(False))`` or rely on filter(null)=drop.
     `attrs_col` names the configured dynamic-key overflow map (threaded
-    from the ParserSpec); unset, the schema is scanned for it.
+    from the ParserSpec); unset, only a map column literally named
+    "attrs" serves.
     """
-    col_name, mode = spec.column, spec.mode
-    dt = schema.get(col_name)
-    if dt is None:
-        # not a declared column: if the pipeline carries a dynamic-key
-        # overflow map (jsonify Attrs extension), validate against it —
-        # the reference's rows hold ALL json keys, so validators must
-        # see the undeclared ones too
-        overflow = _overflow_map_col(schema, attrs_col)
-        if overflow is not None:
-            return _attrs_validator(spec, overflow)
+    dt = schema.get(spec.column)
+    if dt is not None:
+        return _check(spec, F.col(spec.column), dt)
+    # not a declared column: if the pipeline carries a dynamic-key
+    # overflow map (jsonify Attrs extension), validate against it — the
+    # reference's rows hold ALL json keys, so validators must see the
+    # undeclared ones too
+    overflow = _overflow_map_col(schema, attrs_col)
+    if overflow is None:
         # column can never exist => every row fails (validator.go:16-18)
         return F.lit(False)
-    c = F.col(col_name)
+    # The map is stringly-typed (every JSON scalar keeps its JSON text),
+    # so its values check as a string column: string modes behave exactly
+    # like Go on string-valued keys; numeric modes compile to False (Go:
+    # JSON numbers are float64, `.(int)` always fails — validator.go:69-83);
+    # `type string` passes for any present key (documented divergence: a
+    # numeric JSON value is indistinguishable from its decimal string here).
+    return _check(
+        spec, F.element_at(F.col(overflow), F.lit(spec.column)), T.StringType()
+    )
 
+
+def _check(spec: ValidatorSpec, c: Column, dt: T.DataType) -> Column:
+    """The one validator dispatcher: `spec`'s predicate over the value
+    Column `c` of static type `dt`."""
+    mode = spec.mode
     if mode == "required":
         return c.isNotNull()
     if mode == "type":
@@ -102,42 +121,7 @@ def compile_validator(
     if mode == "regex":
         if not is_string(dt):
             return F.lit(False)
-        from logagent_spark.functions import to_java_regex
-
         return c.rlike(to_java_regex(spec.regex))
-    raise ValueError(f"unsupported validation mode `{mode}`")
-
-
-def _attrs_validator(spec: ValidatorSpec, attrs_col: str) -> Column:
-    """Validator over the dynamic-key overflow map (configured name,
-    map<string,string> — parsers.py jsonify Attrs extension).
-
-    The map is stringly-typed (every JSON scalar keeps its JSON text),
-    so: string modes (required/value/regex/length) behave exactly like
-    Go on string-valued keys; numeric modes compile to False (Go: JSON
-    numbers are float64, `.(int)` always fails — validator.go:69-83);
-    `type string` passes for any present key (documented divergence: a
-    numeric JSON value is indistinguishable from its decimal string
-    here)."""
-    v = F.element_at(F.col(attrs_col), F.lit(spec.column))
-    mode = spec.mode
-    if mode == "required":
-        return v.isNotNull()
-    if mode == "type":
-        return v.isNotNull() if spec.type == "string" else F.lit(False)
-    if mode == "value":
-        return v == F.lit(spec.value)
-    if mode in ("number", "maxvalue", "minvalue"):
-        return F.lit(False)
-    if mode in ("maxlength", "minlength"):
-        ln = F.octet_length(v)
-        if mode == "maxlength":
-            return ln <= F.lit(spec.number)
-        return ln >= F.lit(spec.number)
-    if mode == "regex":
-        from logagent_spark.functions import to_java_regex
-
-        return v.rlike(to_java_regex(spec.regex))
     raise ValueError(f"unsupported validation mode `{mode}`")
 
 
@@ -154,15 +138,18 @@ def compile_gate(
     return pred
 
 
-def compile_global_reasons(
+def compile_global_validators(
     specs: list[ValidatorSpec], schema: Schema, *, attrs_col: str | None = None
-) -> list[Column]:
-    """Ordered drop-reason Columns for global validators
-    (validator.go:206-233: first failure wins)."""
+) -> list[CompiledStep]:
+    """One step per global validator, in order (validator.go:206-233:
+    first failure wins): a NULL predicate is a failure (Go: type-assert
+    miss / missing key => error)."""
     return [
-        fail_reason(
-            compile_validator(s, schema, attrs_col=attrs_col),
-            f"validator:{s.mode}:{s.column}",
+        CompiledStep(
+            failed=~F.coalesce(
+                compile_validator(s, schema, attrs_col=attrs_col), F.lit(False)
+            ),
+            reason=f"validator:{s.mode}:{s.column}",
         )
         for s in specs
     ]

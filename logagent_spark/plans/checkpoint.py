@@ -26,6 +26,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -122,6 +123,7 @@ class CheckpointedRunner:
         of them — used by tests to simulate a mid-run kill)."""
         files = list_input_files(input_path)
         chunks = make_chunks(files, self.n_chunks)
+        self._drop_stale_chunks(len(chunks))
         committed = self.committed_chunks()
         reports: list[ChunkReport] = []
         done = 0
@@ -142,6 +144,19 @@ class CheckpointedRunner:
             reports.append(self._run_chunk(spark, cid, chunk_files))
             done += 1
         return reports
+
+    def _drop_stale_chunks(self, n_chunks: int) -> None:
+        """Forget chunk ids the current chunking no longer has (the chunk
+        count went down since the last run): their manifests and data
+        would otherwise stay in `totals()` and `output_frame()`. The
+        manifest goes first, so a kill in between leaves only an
+        uncommitted data dir, as a chunk killed mid-write does."""
+        for cid in self.committed_chunks():
+            if cid >= n_chunks:
+                os.remove(self._manifest_path(cid))
+        for d in glob.glob(os.path.join(self.out_dir, "data", "chunk=*")):
+            if int(d.rsplit("=", 1)[1]) >= n_chunks:
+                shutil.rmtree(d)
 
     @staticmethod
     def _manifest_valid(manifest: dict, chunk_files: list[str]) -> bool:
@@ -174,13 +189,12 @@ class CheckpointedRunner:
         out = self.pipe.multiplexed(result, keep=self.keep)
 
         # metrics piggy-back on the write action: no second scan
-        metrics = [F.count(F.lit(1)).alias("rows_out")]
-        for name in self.pipe.sink_names():
-            metrics.append(
-                F.sum(F.when(F.col(SINK_COL) == name, 1).otherwise(0))
-                .alias(f"sink:{name}")
-            )
-        for reason in self.pipe.known_reasons():
+        metrics = [
+            F.sum(F.when(F.col(SINK_COL) == name, 1).otherwise(0))
+            .alias(f"sink:{name}")
+            for name in self.pipe.sink_names()
+        ]
+        for reason in result.reasons:
             metrics.append(
                 F.sum(
                     F.when(
@@ -204,7 +218,7 @@ class CheckpointedRunner:
         }
         drop_counts = {
             r: int(got.get(f"drop:{r}", 0) or 0)
-            for r in self.pipe.known_reasons()
+            for r in result.reasons
         }
         seconds = time.monotonic() - t0
 

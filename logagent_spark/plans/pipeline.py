@@ -15,9 +15,17 @@ Spark-first re-expression:
 
   * The fused closure is a chain of Column projections — Catalyst's
     whole-stage codegen IS the fusion engine; we only build expressions.
+  * The parser, each global validator and each rewrite compile to ONE
+    step type (``CompiledStep``: projections, schema updates, an optional
+    ``failed`` predicate and its reason label); a lookup rewrite yields
+    the same step beside its join. Each drop reason is named once, by the
+    step that can emit it.
   * Drop accounting is a single ``_drop_reason`` column: the FIRST failing
-    operator's reason in config order (``coalesce`` of per-operator reason
-    expressions) — one pass, no second scan, no UDF.
+    step's reason in config order (``coalesce`` of the ``when(failed,
+    reason)`` columns stashed as the chain is built) — one pass, no
+    second scan, no UDF. ``TransformResult.reasons`` lists every label in
+    that order, including those of steps that compile to a no-op against
+    the schema, so per-reason counters fit in one ``observe``.
   * The handler fan-out is a MULTIPLEX: every row computes an array of
     ``struct(sink, rendered)`` for the sinks whose validator gate passes,
     then one ``explode``. One scan, one write job (``partitionBy(sink)``),
@@ -42,13 +50,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from logagent_spark.config import PipelineSpec
-from logagent_spark.functions import first_reason, type_by_name
+from logagent_spark.functions import CompiledStep, first_reason, type_by_name
 from logagent_spark.operators.parsers import compile_parser
 from logagent_spark.operators.rewrites import compile_rewrite
 from logagent_spark.operators.template import compile_template
 from logagent_spark.operators.validators import (
     compile_gate,
-    compile_global_reasons,
+    compile_global_validators,
 )
 
 Schema = dict[str, T.DataType]
@@ -63,7 +71,7 @@ DEAD_SINK = "_dead_letter"
 class TransformResult:
     frame: DataFrame          # all post-rewrite columns + _drop_reason
     schema: Schema            # logical schema of the data columns
-    reasons: list[str] = field(default_factory=list)
+    reasons: list[str] = field(default_factory=list)  # every drop label
 
 
 class CompiledPipeline:
@@ -84,112 +92,51 @@ class CompiledPipeline:
     # ------------------------------------------------------------------
     def transform(self, df: DataFrame) -> TransformResult:
         schema: Schema = {f.name: f.dataType for f in df.schema.fields}
-        reason_cols: list[Column] = []
-        n_reason = 0
+        reasons: list[str] = []
+        reason_cols: list[str] = []
 
-        def stash_reason(err: Column) -> None:
-            # materialize the reason at THIS point of the chain so later
-            # rewrites of the same column can't perturb it
-            nonlocal n_reason, df
-            name = f"_reason_{n_reason}"
-            n_reason += 1
-            df = df.withColumn(name, err)
-            reason_cols.append(F.col(name))
-
-        def apply_columns(cols: list[tuple[str, Column | None]]) -> None:
+        def apply(step: CompiledStep) -> None:
             nonlocal df
-            for name, expr in cols:
-                if expr is None:
-                    df = df.drop(name)
-                else:
-                    df = df.withColumn(name, expr)
+            if step.reason is not None:
+                reasons.append(step.reason)
+            if step.failed is not None:
+                # materialize the reason at THIS point of the chain —
+                # before the step's own projections overwrite anything,
+                # so neither they nor later rewrites can perturb it
+                name = f"_reason_{len(reason_cols)}"
+                df = df.withColumn(
+                    name, F.when(step.failed, F.lit(step.reason))
+                )
+                reason_cols.append(name)
+            for name, expr in step.columns:
+                df = df.drop(name) if expr is None else df.withColumn(name, expr)
+            schema.update(step.schema_updates)
 
         # parser (task.go:201-254)
-        parsed = compile_parser(
+        apply(compile_parser(
             self.spec.parser, schema, regex_strategy=self.regex_strategy
-        )
-        if parsed.error is not None:
-            # error evaluated against the pre-parse message column: add
-            # BEFORE the projections overwrite anything
-            stash_reason(parsed.error)
-        apply_columns(parsed.columns)
-        schema.update(parsed.schema_updates)
-
+        ))
         # global validators run BEFORE rewrites (task.go:63-65); the
         # configured overflow-map name rides along so validators on
         # undeclared columns resolve against it whatever it is called
-        for err in compile_global_reasons(
+        for step in compile_global_validators(
             self.spec.validators, schema,
             attrs_col=self.spec.parser.attrs or None,
         ):
-            stash_reason(err)
-
+            apply(step)
         # rewrites in config order (task.go:256-376)
         for rw in self.spec.rewrites:
-            compiled = compile_rewrite(rw, schema)
-            if compiled.lookup is not None:
-                df, schema, miss_reason = self._apply_lookup(
-                    df, schema, compiled.lookup
-                )
-                if miss_reason is not None:
-                    stash_reason(miss_reason)
-                continue
-            if compiled.error is not None:
-                stash_reason(compiled.error)
-            apply_columns(compiled.columns)
-            schema.update(compiled.schema_updates)
+            if rw.mode == "lookup":
+                df, step = _apply_lookup(df, schema, rw.lookup)
+                apply(step)
+            else:
+                apply(compile_rewrite(rw, schema))
 
-        df = df.withColumn(DROP_COL, first_reason(*reason_cols))
-        df = df.drop(*[f"_reason_{i}" for i in range(n_reason)])
-        return TransformResult(frame=df, schema=schema)
-
-    # ------------------------------------------------------------------
-    def _apply_lookup(
-        self, df: DataFrame, schema: Schema, lk: dict[str, Any]
-    ) -> tuple[DataFrame, Schema, Column | None]:
-        """Broadcast-join enrichment (the north-star generalization of the
-        `mapping` rewrite — agent/task/task.go:282-300 re-expressed as a
-        broadcast hash join; never a shuffle on the big side)."""
-        key = lk["key"]
-        on_miss = lk.get("on_miss", "drop")
-        out_cols: dict[str, str] = dict(lk["output"])  # newcol -> type name
-
-        spark = df.sparkSession
-        if "table" in lk:
-            # dedupe driver-side: a dropDuplicates here would put a
-            # Sort+Exchange+SortAggregate sub-job under the broadcast
-            # build of EVERY plan (and every streaming micro-batch) to
-            # deduplicate a config literal
-            seen: dict[Any, dict] = {}
-            for row in lk["table"]:
-                seen.setdefault(row[key], row)
-            lookup_df = spark.createDataFrame(
-                list(seen.values()),
-                schema=T.StructType(
-                    [T.StructField(key, schema.get(key, T.StringType()), True)]
-                    + [
-                        T.StructField(c, type_by_name(t), True)
-                        for c, t in out_cols.items()
-                    ]
-                ),
-            ).select(key, *[c for c in out_cols])
-        else:
-            lookup_df = spark.read.parquet(lk["path"]).select(
-                key, *[c for c in out_cols]
-            ).dropDuplicates([key])
-
-        joined = df.join(F.broadcast(lookup_df), on=key, how="left")
-        miss = None
-        if on_miss == "drop":
-            probe = next(iter(out_cols))
-            miss = F.when(
-                F.col(key).isNotNull() & F.col(probe).isNull(),
-                F.lit(f"lookup_miss:{key}"),
-            )
-        new_schema = dict(schema)
-        for c, t in out_cols.items():
-            new_schema[c] = type_by_name(t)
-        return joined, new_schema, miss
+        df = df.withColumn(
+            DROP_COL, first_reason(*[F.col(c) for c in reason_cols])
+        )
+        df = df.drop(*reason_cols)
+        return TransformResult(frame=df, schema=schema, reasons=reasons)
 
     # ------------------------------------------------------------------
     # stage 2: router / fan-out
@@ -338,24 +285,6 @@ class CompiledPipeline:
     def sink_names(self) -> list[str]:
         return [h.sink_name(i) for i, h in enumerate(self.spec.handlers)]
 
-    def known_reasons(self) -> list[str]:
-        """Every drop reason this spec can emit, in operator order —
-        enumerable at compile time, so per-reason counters can be computed
-        inside a single `observe` pass."""
-        reasons: list[str] = []
-        if self.spec.parser.mode == "jsonify":
-            reasons.append("parse_error:jsonify")
-        for v in self.spec.validators:
-            reasons.append(f"validator:{v.mode}:{v.column}")
-        for rw in self.spec.rewrites:
-            if rw.mode == "mapping":
-                reasons.append(f"mapping_miss:{rw.column}")
-            elif rw.mode == "jsonify":
-                reasons.append(f"parse_error:jsonify_rewrite:{rw.column}")
-            elif rw.mode == "lookup" and rw.lookup.get("on_miss", "drop") == "drop":
-                reasons.append(f"lookup_miss:{rw.lookup['key']}")
-        return reasons
-
     def dead_letter(self, result: TransformResult) -> DataFrame:
         """Rows dropped by parse errors / global validators / mapping
         misses, with their first-failure reason (the reference logs these,
@@ -410,3 +339,49 @@ class CompiledPipeline:
         spark = routed.sparkSession
         routed = routed.coalesce(2 * spark.sparkContext.defaultParallelism)
         routed.write.mode("overwrite").partitionBy(SINK_COL).parquet(out_dir)
+
+
+def _apply_lookup(
+    df: DataFrame, schema: Schema, lk: dict[str, Any]
+) -> tuple[DataFrame, CompiledStep]:
+    """Broadcast-join enrichment (the north-star generalization of the
+    `mapping` rewrite — agent/task/task.go:282-300 re-expressed as a
+    broadcast hash join; never a shuffle on the big side): the joined
+    frame, and the step carrying the output columns' types and, with
+    ``on_miss: drop``, the miss predicate."""
+    key = lk["key"]
+    out_cols: dict[str, str] = dict(lk["output"])  # newcol -> type name
+
+    spark = df.sparkSession
+    if "table" in lk:
+        # dedupe driver-side: a dropDuplicates here would put a
+        # Sort+Exchange+SortAggregate sub-job under the broadcast
+        # build of EVERY plan (and every streaming micro-batch) to
+        # deduplicate a config literal
+        seen: dict[Any, dict] = {}
+        for row in lk["table"]:
+            seen.setdefault(row[key], row)
+        lookup_df = spark.createDataFrame(
+            list(seen.values()),
+            schema=T.StructType(
+                [T.StructField(key, schema.get(key, T.StringType()), True)]
+                + [
+                    T.StructField(c, type_by_name(t), True)
+                    for c, t in out_cols.items()
+                ]
+            ),
+        ).select(key, *[c for c in out_cols])
+    else:
+        lookup_df = spark.read.parquet(lk["path"]).select(
+            key, *[c for c in out_cols]
+        ).dropDuplicates([key])
+
+    joined = df.join(F.broadcast(lookup_df), on=key, how="left")
+    step = CompiledStep(
+        schema_updates={c: type_by_name(t) for c, t in out_cols.items()}
+    )
+    if lk.get("on_miss", "drop") == "drop":
+        probe = next(iter(out_cols))
+        step.failed = F.col(key).isNotNull() & F.col(probe).isNull()
+        step.reason = f"lookup_miss:{key}"
+    return joined, step

@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from bench import PIPELINE_SPEC
 from logagent_spark.config import PipelineSpec
 from logagent_spark.datagen import WAF_REGEX, write_pages
 from logagent_spark.plans.checkpoint import CheckpointedRunner
@@ -40,9 +41,9 @@ def input_dir(spark, tmp_path_factory):
     return str(p)
 
 
-def _runner(pipe, out):
+def _runner(pipe, out, n_chunks=4):
     return CheckpointedRunner(
-        pipe, out, n_chunks=4, source_adapter=from_pages,
+        pipe, out, n_chunks=n_chunks, source_adapter=from_pages,
         keep=["url", "lang", "warc_ts"],
     )
 
@@ -168,3 +169,63 @@ def test_changed_input_invalidates_committed_chunk(spark, tmp_path):
     for cid, r in by_id.items():
         if cid != chunk_of_victim:
             assert r.resumed                        # others untouched
+
+
+def test_fewer_chunks_forget_stale_chunk_ids(spark, tmp_path):
+    """Re-running into the same output with a smaller chunk count drops
+    the chunk ids the new chunking no longer has, so totals and the
+    output frame count every input row once."""
+    pipe = CompiledPipeline(PipelineSpec.from_dict(SPEC))
+    pages = str(tmp_path / "pages")
+    write_pages(spark, pages, 800, seed=23, n_hosts=20, partitions=8)
+    out = str(tmp_path / "out")
+    assert len(_runner(pipe, out, n_chunks=8).run(spark, pages)) == 8
+
+    runner = _runner(pipe, out, n_chunks=4)
+    assert len(runner.run(spark, pages)) == 4
+    got = runner.totals()
+    assert got["chunks"] == 4 and got["rows_in"] == 800
+    assert sorted(glob.glob(os.path.join(out, "data", "chunk=*"))) == [
+        os.path.join(out, "data", f"chunk={i}") for i in range(4)]
+    routed_and_dead = (sum(got["sink_counts"].values())
+                       + sum(got["drop_counts"].values()))
+    assert runner.output_frame(spark).count() == routed_and_dead
+
+
+LOOKUP_ROWS = [{"level": "info", "sev": "1", "geo": "US"}]
+REASONS_SPEC = {
+    "Parser": {"Mode": "jsonify", "Columns": ["level", "payload"],
+               "Attrs": "attrs"},
+    "Validators": [
+        {"Mode": "required", "Column": "user"},
+        {"Mode": "required", "Column": "user"},
+    ],
+    "Rewrites": [
+        {"Mode": "mapping", "Column": "no_such_col", "Mapping": {"a": "b"}},
+        {"Mode": "jsonify", "Column": "payload", "Types": {"a": "long"}},
+        {"Mode": "lookup", "Lookup": {"key": "level", "table": LOOKUP_ROWS,
+                                      "output": {"sev": "string"},
+                                      "on_miss": "keep"}},
+        {"Mode": "lookup", "Lookup": {"key": "level", "table": LOOKUP_ROWS,
+                                      "output": {"geo": "string"},
+                                      "on_miss": "drop"}},
+    ],
+    "Handlers": [{"Mode": "stream", "Name": "all", "Template": "${level}"}],
+}
+
+
+@pytest.mark.parametrize("spec, want", [
+    (PIPELINE_SPEC, ["validator:minlength:message", "lookup_miss:lang"]),
+    (SPEC, ["mapping_miss:lang"]),
+    # a mapping on a missing column compiles to a no-op but keeps its
+    # label; an on_miss "keep" lookup can never drop a row
+    (REASONS_SPEC, ["parse_error:jsonify", "validator:required:user",
+                    "validator:required:user", "mapping_miss:no_such_col",
+                    "parse_error:jsonify_rewrite:payload",
+                    "lookup_miss:level"]),
+], ids=["bench", "checkpoint", "jsonify_attrs"])
+def test_transform_reasons_name_every_drop_label(spark, pages_sdf, spec, want):
+    """The runner's per-reason counters come from this list: every label
+    the spec can emit, once per step, in operator order."""
+    pipe = CompiledPipeline(PipelineSpec.from_dict(spec))
+    assert pipe.transform(from_pages(pages_sdf)).reasons == want

@@ -24,6 +24,12 @@ GUARDED = {
     "kmeans_refine": (similarity.kmeans_refine, False),
     "knn_join_ivf": (similarity.knn_join_ivf, False),
     "write_sinks": (CompiledPipeline.write_sinks, True),
+    "routed": (CompiledPipeline.routed, True),
+    "multiplexed": (CompiledPipeline.multiplexed, True),
+    "dead_letter": (CompiledPipeline.dead_letter, True),
+    "sink_counts": (CompiledPipeline.sink_counts, False),
+    "drop_counts": (CompiledPipeline.drop_counts, False),
+    "totals": (CheckpointedRunner.totals, True),
     "CompiledPipeline": (CompiledPipeline, False),
     "CheckpointedRunner": (CheckpointedRunner, False),
     "duplicated_window_stats": (textstats.duplicated_window_stats, False),
@@ -63,4 +69,6 @@ def test_harness_calls_bind_to_product_signatures():
     # the walk really reaches the harness's calls
     assert {"embedding_candidate_pairs", "kmeans_refine", "knn_join_ivf",
             "CompiledPipeline", "CheckpointedRunner",
-            "duplicated_window_stats", "excise_duplicated_windows"} <= seen
+            "duplicated_window_stats", "excise_duplicated_windows",
+            "routed", "multiplexed", "dead_letter", "sink_counts",
+            "drop_counts", "totals"} <= seen

@@ -4,6 +4,8 @@ regex search."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,13 +49,44 @@ VALIDATORS = [
 ]
 
 
+# the same `s` values as undeclared keys of the dynamic-key overflow map
+# (jsonify Attrs extension): a NULL value is an absent key
+ATTRS_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType(), False),
+    T.StructField("attrs", T.MapType(T.StringType(), T.StringType())),
+])
+ATTRS_ROWS = [
+    {"id": r["id"], "attrs": {} if r["s"] is None else {"s": r["s"]}}
+    for r in ROWS
+]
+NUMERIC_MODES = {"number", "maxvalue", "minvalue"}
+
+
+def _passes(df, pred) -> dict[int, bool]:
+    pred = F.coalesce(pred, F.lit(False))
+    return {r["id"]: r["ok"] for r in df.select("id", pred.alias("ok")).collect()}
+
+
 @pytest.mark.parametrize("vspec", VALIDATORS, ids=lambda v: f"{v.mode}:{v.column}:{v.type}{v.value}{v.number}{v.regex}")
 def test_validator_parity(spark, vspec):
     schema_map = {f.name: f.dataType for f in SCHEMA.fields}
     df = spark.createDataFrame(ROWS, schema=SCHEMA)
-    pred = F.coalesce(compile_validator(vspec, schema_map), F.lit(False))
-    got = {r["id"]: r["ok"] for r in df.select("id", pred.alias("ok")).collect()}
+    got = _passes(df, compile_validator(vspec, schema_map))
     for row in ROWS:
         msg = {k: v for k, v in row.items() if v is not None}
         want = oracle.validate_row(vspec, msg)
         assert got[row["id"]] == want, (vspec, row)
+
+    # one dispatcher: this validator on column `s` passes the same rows
+    # whether `s` is the typed string column or a key of the overflow map
+    on_s = dataclasses.replace(vspec, column="s")
+    attrs_map = {f.name: f.dataType for f in ATTRS_SCHEMA.fields}
+    typed = _passes(df, compile_validator(on_s, schema_map))
+    over_map = _passes(
+        spark.createDataFrame(ATTRS_ROWS, schema=ATTRS_SCHEMA),
+        compile_validator(on_s, attrs_map, attrs_col="attrs"),
+    )
+    assert over_map == typed, on_s
+    if on_s.mode in NUMERIC_MODES or (
+            on_s.mode == "type" and on_s.type != "string"):
+        assert not any(over_map.values()), on_s
