@@ -2,12 +2,13 @@
 (apps/agent/main.go:18-98), batch-native.
 
     python -m logagent_spark -f config.json --input /data/pages \\
-        --out /data/out [--source pages|text|whole|none] [--chunks 8]
-        [--cpus 32] [--resume]
+        --out /data/out [--source pages|html|text|none] [--chunks 8]
+        [--cpus 32] [--keep url,lang] [--grok]
 
 Each task in the config compiles to a pipeline and runs through the
-checkpointed runner; a re-invocation with --resume skips committed
-chunks (the reference's pidfile/offset lifecycle, done as data).
+checkpointed runner. Every run skips the chunks a previous run into the
+same --out committed, so re-running a killed command resumes it (the
+reference's pidfile/offset lifecycle, done as data).
 """
 
 from __future__ import annotations

@@ -13,9 +13,17 @@ input-chunk level, "the offset file done right" (SURVEY.md §7 M7):
     sinks in ONE job under ``{out}/data/chunk=<id>/sink=<name>/``;
   * metrics for the chunk (rows in/routed per sink/dropped per reason,
     wall time, input fingerprint) are gathered DURING the write via
-    ``DataFrame.observe`` — zero extra scans — and committed as a JSON
-    manifest by atomic rename. The manifest doubles as the lineage
-    record (which input files produced which output partition);
+    ``DataFrame.observe`` — zero extra jobs, zero extra scans; ``rows_in``
+    is observed on the input frame before the source adapter — and
+    committed as a JSON manifest by atomic rename. The manifest doubles
+    as the lineage record (which input files produced which output
+    partition);
+  * ``IN_FLIGHT`` = 2 chunks run at once, on driver threads that inherit
+    the caller's job group, so one chunk's driver-side steps overlap the
+    other's tasks. A kill therefore loses at most 2 chunks. A manifest's
+    ``seconds`` is that chunk's own wall time, which overlaps its
+    neighbour's, so ``totals()["seconds"]`` is summed chunk time, not
+    the run's elapsed time;
   * a restart lists committed manifests and skips those chunks; a chunk
     killed mid-write is simply re-run (its data dir is overwritten), so
     the protocol is idempotent and exactly-once at chunk granularity.
@@ -27,11 +35,13 @@ import glob
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +51,10 @@ from logagent_spark.plans.pipeline import (
     SINK_COL,
     CompiledPipeline,
 )
+
+# chunks run at once: a chunk's driver-side steps (footer read, plan
+# compile, broadcast build, commit, manifest) overlap the other's tasks
+IN_FLIGHT = 2
 
 
 def list_input_files(input_path: str) -> list[str]:
@@ -120,30 +134,70 @@ class CheckpointedRunner:
         max_chunks: int | None = None,
     ) -> list[ChunkReport]:
         """Process all uncommitted chunks (optionally at most `max_chunks`
-        of them — used by tests to simulate a mid-run kill)."""
+        of them — used by tests to simulate a mid-run kill), up to
+        `IN_FLIGHT` at a time. Reports come back in chunk-id order."""
         files = list_input_files(input_path)
         chunks = make_chunks(files, self.n_chunks)
         self._drop_stale_chunks(len(chunks))
         committed = self.committed_chunks()
-        reports: list[ChunkReport] = []
-        done = 0
+        reports: dict[int, ChunkReport] = {}
+        pending: list[tuple[int, list[str]]] = []
         for cid, chunk_files in enumerate(chunks):
             if cid in committed and self._manifest_valid(
                 committed[cid], chunk_files
             ):
                 m = committed[cid]
-                reports.append(ChunkReport(
+                reports[cid] = ChunkReport(
                     chunk_id=cid, files=m["files"], rows_in=m["rows_in"],
                     sink_counts=m["sink_counts"],
                     drop_counts=m["drop_counts"], seconds=m["seconds"],
                     resumed=True,
-                ))
+                )
                 continue
-            if max_chunks is not None and done >= max_chunks:
+            if max_chunks is not None and len(pending) >= max_chunks:
                 break
-            reports.append(self._run_chunk(spark, cid, chunk_files))
-            done += 1
-        return reports
+            pending.append((cid, chunk_files))
+        reports.update(self._run_pending(spark, pending))
+        return [reports[cid] for cid in sorted(reports)]
+
+    def _run_pending(
+        self, spark: SparkSession, pending: list[tuple[int, list[str]]]
+    ) -> dict[int, ChunkReport]:
+        """Run `pending` chunks in id order on `IN_FLIGHT` driver threads.
+        `InheritableThread` carries the caller's local properties (job
+        group, scheduler pool) to every chunk's jobs. After a failure no
+        chunk starts; the chunks in flight finish and commit, then the
+        first error re-raises."""
+        lock = threading.Lock()
+        todo = iter(pending)
+        done: dict[int, ChunkReport] = {}
+        errors: list[BaseException] = []
+
+        def worker() -> None:
+            while True:
+                with lock:
+                    item = None if errors else next(todo, None)
+                if item is None:
+                    return
+                try:
+                    report = self._run_chunk(spark, *item)
+                except BaseException as e:
+                    with lock:
+                        errors.append(e)
+                    return
+                done[report.chunk_id] = report
+
+        threads = [
+            InheritableThread(target=worker)
+            for _ in range(min(IN_FLIGHT, len(pending)))
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        if errors:
+            raise errors[0]
+        return done
 
     def _drop_stale_chunks(self, n_chunks: int) -> None:
         """Forget chunk ids the current chunking no longer has (the chunk
@@ -179,9 +233,10 @@ class CheckpointedRunner:
         self, spark: SparkSession, cid: int, files: list[str]
     ) -> ChunkReport:
         t0 = time.monotonic()
-        df = spark.read.parquet(*files)
-        # parquet count() is served from row-group metadata — no data read
-        rows_in = df.count()
+        # rows_in rides the write job too: no count job per chunk
+        obs_in = Observation(f"chunk_{cid}_in")
+        df = spark.read.parquet(*files).observe(
+            obs_in, F.count(F.lit(1)).alias("rows_in"))
         if self.source_adapter is not None:
             df = self.source_adapter(df)
 
@@ -212,6 +267,7 @@ class CheckpointedRunner:
         # per-task commit and per-file writer overhead recurs PER CHUNK
         self.pipe.write_sinks(out, data_dir)
 
+        rows_in = int(obs_in.get.get("rows_in", 0) or 0)
         got = obs.get
         sink_counts = {
             n: int(got.get(f"sink:{n}", 0) or 0) for n in self.pipe.sink_names()

@@ -45,9 +45,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from logagent_spark.config import PipelineSpec
 from logagent_spark.functions import CompiledStep, first_reason, type_by_name
@@ -361,16 +364,26 @@ def _apply_lookup(
         seen: dict[Any, dict] = {}
         for row in lk["table"]:
             seen.setdefault(row[key], row)
+        struct = T.StructType(
+            [T.StructField(key, schema.get(key, T.StringType()), True)]
+            + [T.StructField(c, type_by_name(t), True)
+               for c, t in out_cols.items()]
+        )
+        # an Arrow table plans as a LocalTableScan; a list would go
+        # through parallelize, whose PythonRDD starts Python workers to
+        # broadcast a config constant. Rows get what a list gets: the
+        # type check, then the string coercion and internal values
+        verify = _make_type_verifier(struct)
+        convert = _create_converter(struct)
+        rows = []
+        for row in seen.values():
+            verify(row)
+            rows.append(dict(zip(struct.names,
+                                 struct.toInternal(convert(row)))))
         lookup_df = spark.createDataFrame(
-            list(seen.values()),
-            schema=T.StructType(
-                [T.StructField(key, schema.get(key, T.StringType()), True)]
-                + [
-                    T.StructField(c, type_by_name(t), True)
-                    for c, t in out_cols.items()
-                ]
-            ),
-        ).select(key, *[c for c in out_cols])
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(struct)),
+            schema=struct,
+        )
     else:
         lookup_df = spark.read.parquet(lk["path"]).select(
             key, *[c for c in out_cols]

@@ -6,6 +6,9 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
+import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +16,12 @@ from pyspark.sql import functions as F
 from bench import PIPELINE_SPEC
 from logagent_spark.config import PipelineSpec
 from logagent_spark.datagen import WAF_REGEX, write_pages
-from logagent_spark.plans.checkpoint import CheckpointedRunner
+from logagent_spark.plans.checkpoint import (
+    CheckpointedRunner,
+    ChunkReport,
+    list_input_files,
+    make_chunks,
+)
 from logagent_spark.plans.pipeline import DEAD_SINK, CompiledPipeline
 from logagent_spark.sources import from_pages
 
@@ -75,17 +83,156 @@ def test_kill_and_resume_matches_single_shot(spark, input_dir, tmp_path):
 
     # sink contents byte-identical between the two runs
     for sink in ("errors", "all"):
-        a = sorted(
-            r["rendered"]
-            for r in r_full.output_frame(spark)
-            .filter(F.col("sink") == sink).select("rendered").collect()
-        )
-        b = sorted(
-            r["rendered"]
-            for r in r_kill.output_frame(spark)
-            .filter(F.col("sink") == sink).select("rendered").collect()
-        )
-        assert a == b, sink
+        assert _rendered(spark, r_full, sink) == _rendered(
+            spark, r_kill, sink), sink
+
+
+def _rendered(spark, runner, sink) -> list[str]:
+    return sorted(
+        r["rendered"]
+        for r in runner.output_frame(spark)
+        .filter(F.col("sink") == sink).select("rendered").collect()
+    )
+
+
+def test_kill_with_chunks_in_flight_resumes_to_single_shot(
+        spark, input_dir, tmp_path):
+    """Two chunks run at once: the source adapter meets itself on two
+    threads, then fails on the chunk holding a chosen file. `run` raises,
+    only the chunks that finished commit a manifest, no chunk starts
+    after the failure, and a fresh runner resumes to the output and
+    totals of a single-shot run."""
+    pipe = CompiledPipeline(PipelineSpec.from_dict(SPEC))
+    chunk_of = {
+        os.path.basename(f): cid
+        for cid, files in enumerate(
+            make_chunks(list_input_files(input_dir), 4))
+        for f in files
+    }
+    victim = 1
+    lock = threading.Lock()
+    started: list[int] = []
+    threads: set[int] = set()
+    both_in_flight = threading.Barrier(2, timeout=60)
+
+    def adapter(df):
+        cid = chunk_of[os.path.basename(df.inputFiles()[0])]
+        with lock:
+            started.append(cid)
+            threads.add(threading.get_ident())
+            first_two = len(started) <= 2
+        if first_two:
+            both_in_flight.wait()
+        if cid == victim:
+            raise RuntimeError("killed mid-run")
+        return from_pages(df)
+
+    out = str(tmp_path / "kill")
+    killed = CheckpointedRunner(
+        pipe, out, n_chunks=4, source_adapter=adapter,
+        keep=["url", "lang", "warc_ts"])
+    with pytest.raises(RuntimeError, match="killed mid-run"):
+        killed.run(spark, input_dir)
+    assert len(threads) >= 2
+    assert victim in started[:2]
+    assert set(killed.committed_chunks()) == set(started) - {victim}
+    assert len(started) < 4
+
+    resumed = _runner(pipe, out)
+    reports = resumed.run(spark, input_dir)
+    assert [r.chunk_id for r in reports] == [0, 1, 2, 3]
+    assert {r.chunk_id for r in reports if r.resumed} == (
+        set(started) - {victim})
+
+    full = _runner(pipe, str(tmp_path / "full"))
+    full.run(spark, input_dir)
+    got, want = resumed.totals(), full.totals()
+    for k in ("chunks", "rows_in", "sink_counts", "drop_counts"):
+        assert got[k] == want[k], k
+    for sink in ("errors", "all"):
+        assert _rendered(spark, resumed, sink) == _rendered(
+            spark, full, sink), sink
+
+
+def test_chunk_threads_take_each_chunk_once(spark, tmp_path, monkeypatch):
+    """The chunk threads share one iterator of pending chunks: under a
+    tiny switch interval every chunk still runs exactly once, and a
+    failure stops the run before the rest of the chunks start."""
+    runner = _runner(CompiledPipeline(PipelineSpec.from_dict(SPEC)),
+                     str(tmp_path / "stress"))
+    calls: list[int] = []
+    fail_at = None
+
+    def fake_chunk(spark, cid, files):
+        calls.append(cid)
+        if cid == fail_at:
+            raise RuntimeError("chunk failed")
+        return ChunkReport(cid, files, 0, {}, {}, 0.0)
+
+    monkeypatch.setattr(runner, "_run_chunk", fake_chunk)
+    pending = [(cid, []) for cid in range(300)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        assert sorted(runner._run_pending(spark, pending)) == list(range(300))
+        assert sorted(calls) == list(range(300))
+        calls.clear()
+        fail_at = 100
+        with pytest.raises(RuntimeError, match="chunk failed"):
+            runner._run_pending(spark, pending)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(calls) == len(set(calls))
+    assert set(range(101)) <= set(calls) and len(calls) < 300
+
+
+def test_chunk_jobs_run_in_the_callers_job_group(spark, input_dir, tmp_path):
+    """Chunk threads inherit the caller's local properties: every job a
+    run starts, each chunk's write job included, lands in the caller's
+    job group."""
+    pipe = CompiledPipeline(PipelineSpec.from_dict(SPEC))
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("g", "chunk jobs")
+    try:
+        reports = _runner(pipe, str(tmp_path / "grp")).run(spark, input_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(reports) == 4
+    assert len(st.getJobIdsForGroup("g")) >= len(reports)
+    assert set(st.getJobIdsForGroup(None)) <= ungrouped
+
+
+def test_rows_in_needs_no_count_job(spark, input_dir, tmp_path, monkeypatch):
+    """rows_in is observed on the write job: a run with `count` made
+    unusable still reports every input row."""
+    def no_count(self):
+        raise AssertionError("the runner started a count job")
+
+    monkeypatch.setattr(type(spark.range(1)), "count", no_count)
+    runner = _runner(CompiledPipeline(PipelineSpec.from_dict(SPEC)),
+                     str(tmp_path / "nocount"))
+    reports = runner.run(spark, input_dir)
+    monkeypatch.undo()
+    assert sum(r.rows_in for r in reports) == 2000
+    assert runner.totals()["rows_in"] == 2000
+
+
+def test_empty_chunk_reports_zero_rows_in(spark, tmp_path):
+    pipe = CompiledPipeline(PipelineSpec.from_dict(SPEC))
+    pages = str(tmp_path / "pages")
+    write_pages(spark, pages, 200, seed=29, n_hosts=10, partitions=1)
+    empty = str(tmp_path / "empty")
+    spark.read.parquet(pages).limit(0).write.parquet(empty)
+    part = glob.glob(os.path.join(empty, "part-*.parquet"))[0]
+    shutil.copy(part, os.path.join(pages, "part-99999-empty.parquet"))
+    runner = _runner(pipe, str(tmp_path / "out"), n_chunks=2)
+    reports = runner.run(spark, pages)
+    assert [len(r.files) for r in reports] == [1, 1]
+    assert [r.rows_in for r in reports] == [200, 0]
+    assert reports[1].sink_counts == {"errors": 0, "all": 0}
+    assert runner.totals()["rows_in"] == 200
 
 
 def test_manifest_lineage_fields(spark, input_dir, tmp_path):

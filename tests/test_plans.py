@@ -170,6 +170,19 @@ def test_inline_lookup_builds_without_shuffle(spark, pages_path):
     assert "SortAggregate" not in phys, phys
 
 
+def test_inline_lookup_broadcasts_a_local_table(spark, pages_path):
+    """An inline lookup literal is a local relation: the broadcast is
+    built over a LocalTableScan on the driver, and no RDD scan (whose
+    PythonRDD would start Python workers) appears anywhere in the plan."""
+    pipe = CompiledPipeline(PipelineSpec.from_dict(LOOKUP_SPEC))
+    res = pipe.transform(from_pages(spark.read.parquet(pages_path)))
+    lines = _plan(res.frame).splitlines()
+    at = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(at) == 1, lines
+    assert "+- LocalTableScan" in lines[at[0] + 1], lines
+    assert not any("ExistingRDD" in ln for ln in lines), lines
+
+
 def test_embedding_near_dup_plan_has_arrow_scorer_and_no_vector_buckets(spark):
     """The banded-LSH near-dup plan is one band-key MapInPandas pass and
     one grouped Arrow scorer per (band, key) bucket: no pair join

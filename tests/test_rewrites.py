@@ -153,6 +153,116 @@ def test_lookup_path_enrich(spark, tmp_path):
     }
 
 
+KEYS_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType(), False),
+    T.StructField("message", T.StringType()),
+    T.StructField("ks", T.StringType()),
+    T.StructField("kl", T.LongType()),
+    T.StructField("kd", T.DoubleType()),
+    T.StructField("kb", T.BooleanType()),
+])
+KEYS_ROWS = [
+    (0, "m", "a", 1, 0.5, True),
+    (1, "m", "b", 2, 1.5, False),
+    (2, "m", "zz", 9, 9.5, None),     # misses; NULL boolean key
+    (3, "m", None, None, None, True),  # NULL keys pass
+]
+TYPED_OUT = {"str": "string", "long": "long", "dbl": "double",
+             "bool": "boolean"}
+
+
+def _typed_lookup(key, prefix, on_miss, table):
+    """A lookup on `key` whose outputs are `<prefix>_str/long/dbl/bool`;
+    `table` rows are (key, str, long, double, bool) tuples."""
+    names = [key] + [f"{prefix}_{t}" for t in TYPED_OUT]
+    return RewriteSpec(mode="lookup", lookup={
+        "key": key, "on_miss": on_miss,
+        "table": [dict(zip(names, r)) for r in table],
+        "output": {f"{prefix}_{t}": n for t, n in TYPED_OUT.items()},
+    })
+
+
+def test_lookup_table_typed_keys_outputs_nulls_and_duplicates(spark):
+    """Inline tables keyed on string, long, double and boolean columns,
+    with outputs of all four types: the first row of a duplicated key
+    wins, a table row with NULL outputs enriches with NULLs (and, with
+    `on_miss: drop`, drops the row when the first output is NULL), a
+    NULL key in the table or in the data never matches, and the first
+    failing lookup in config order names the drop."""
+    spec = PipelineSpec(rewrites=[
+        _typed_lookup("ks", "s", "keep", [
+            ("a", "A", 10, 1.25, True),
+            ("a", "A2", 11, 2.25, False),          # duplicate: first wins
+            ("b", None, None, None, None),
+        ]),
+        _typed_lookup("kl", "l", "drop", [
+            (1, "one", -1, 0.25, False),
+            (2, "two", 2, None, None),
+            (None, "nullkey", 0, 0.0, True),       # never matches
+        ]),
+        _typed_lookup("kd", "d", "drop", [
+            (0.5, "half", 5, 2.5, True),
+            (1.5, None, 3, None, None),            # NULL probe: a miss
+        ]),
+        _typed_lookup("kb", "b", "drop", [
+            (True, "yes", 1, 1.0, True),
+            (True, "yes2", 2, 2.0, False),         # duplicate: first wins
+            (False, "no", 0, 0.0, False),
+        ]),
+    ])
+    res = CompiledPipeline(spec).transform(
+        spark.createDataFrame(KEYS_ROWS, schema=KEYS_SCHEMA))
+    assert res.reasons == ["lookup_miss:kl", "lookup_miss:kd",
+                           "lookup_miss:kb"]
+    cols = [f"{p}_{t}" for p in "sldb" for t in TYPED_OUT] + [DROP_COL]
+    assert [res.schema[c] for c in cols[:4]] == [
+        T.StringType(), T.LongType(), T.DoubleType(), T.BooleanType()]
+    got = {r["id"]: tuple(r[c] for c in cols) for r in res.frame.collect()}
+    none4 = (None,) * 4
+    assert got == {
+        0: ("A", 10, 1.25, True) + ("one", -1, 0.25, False)
+           + ("half", 5, 2.5, True) + ("yes", 1, 1.0, True) + (None,),
+        1: none4 + ("two", 2, None, None) + (None, 3, None, None)
+           + ("no", 0, 0.0, False) + ("lookup_miss:kd",),
+        2: none4 * 4 + ("lookup_miss:kl",),
+        3: none4 * 3 + ("yes", 1, 1.0, True) + (None,),
+    }
+
+
+def test_lookup_table_string_columns_coerce_like_create_dataframe(spark):
+    """A non-str value in a string key or output column is coerced as
+    `createDataFrame` coerces it: Python `str`, except booleans, which
+    read `true`/`false`. So a table key 200 matches the string "200"."""
+    spec = PipelineSpec(rewrites=[RewriteSpec(mode="lookup", lookup={
+        "key": "lang", "on_miss": "keep", "output": {"tag": "string"},
+        "table": [{"lang": 200, "tag": True}, {"lang": 1e20, "tag": 1.5},
+                  {"lang": False, "tag": [1, 2]}],
+    })])
+    frame = spark.createDataFrame(
+        [("200",), ("1e+20",), ("false",), ("1.0E20",)], "lang string")
+    got = {r["lang"]: r["tag"]
+           for r in CompiledPipeline(spec).transform(frame).frame.collect()}
+    assert got == {"200": "true", "1e+20": "1.5", "false": "[1, 2]",
+                   "1.0E20": None}
+
+
+@pytest.mark.parametrize("key, row", [
+    ("lang", {"lang": "en", "rank": "ten"}),
+    ("lang", {"lang": "en", "rank": 1.5}),
+    ("lang", {"lang": "en", "rank": True}),
+    ("n", {"n": "1", "rank": 10}),
+], ids=["str_for_long", "double_for_long", "bool_for_long", "str_long_key"])
+def test_lookup_table_value_of_wrong_type_is_rejected(spark, key, row):
+    """A table value that a non-string column cannot hold fails the
+    transform, before any job runs, rather than turning into NULL."""
+    spec = PipelineSpec(rewrites=[RewriteSpec(mode="lookup", lookup={
+        "key": key, "table": [row], "output": {"rank": "long"},
+    })])
+    pipe = CompiledPipeline(spec)
+    with pytest.raises(TypeError):
+        pipe.transform(spark.createDataFrame(ROWS, schema=SCHEMA))
+
+
 def test_lookup_without_table_or_path_is_a_spec_error():
     """A lookup must name its source: without `table` or `path` the spec
     is rejected at validation, not with a KeyError at transform time."""
