@@ -8,28 +8,32 @@ Scale design (the whole point — 10^12 docs):
     pairs shuffle, never the documents;
   * MinHash+LSH: signatures are computed scan-side as pure Column
     expressions (array_min over xxhash64 of shingles — JVM, no UDF);
-    banding explodes to (band, band_hash) keys and groupBys — candidate
-    generation is ONE shuffle of b rows/doc of ~24 bytes each. Exact
-    Jaccard verification runs only on candidate pairs (tiny);
-  * SimHash: one vectorized pandas UDF (numpy bit-twiddling per Arrow
-    batch) because 64 per-bit conditional sums as Columns would bloat
-    codegen; near-dup pairs via banded key join on 16-bit chunks
-    (Hamming<=3 => at least one of 4 chunks equal — pigeonhole);
+    banding explodes to b (band, key) rows per doc of ~24 bytes each.
+    Exact Jaccard verification runs only on candidate pairs (tiny);
+  * SimHash: signatures come from one Arrow pass (numpy bit-twiddling
+    per batch) because 64 per-bit conditional sums as Columns would
+    bloat codegen; banding on 4×16-bit chunks (Hamming<=3 => at least
+    one of 4 chunks equal — pigeonhole), exact hamming per pair;
   * embedding near-dup: random-hyperplane LSH with seeded literal
-    hyperplanes — banded sign-bit keys from one Arrow/numpy pass, cosine
-    check within buckets only (one grouped applyInArrow call per bucket,
-    behind a (band, key) exchange with an explicit partition count:
-    pair work is quadratic in bucket rows, so AQE's byte-sized
-    coalescing of that small shuffle would leave one core scoring).
+    hyperplanes — banded sign-bit keys from one Arrow/numpy pass, exact
+    cosine per pair.
+
+The three LSH families share one pair kernel (`_lsh_pairs`): banded
+(band, key, id[, payload]) rows shuffle ONCE on (band, key), buckets of
+fewer than 2 or more than `max_bucket_size` rows drop in the JVM, and
+one grouped Arrow emitter pairs each surviving bucket's ids strictly
+a < b in fixed-size tiles, scoring each pair with the family's hook.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -138,62 +142,30 @@ def minhash_candidates(
     shingle_k: int = 5,
     max_bucket_size: int = 4096,
 ) -> DataFrame:
-    """LSH banding -> candidate near-duplicate pairs (a < b).
+    """LSH banding -> candidate near-duplicate pairs (a, b): every a < b
+    (strict) pair of non-NULL ids sharing a band bucket of
+    2..`max_bucket_size` rows, once (`_lsh_pairs`); equal ids never pair.
 
-    Shuffle cost: bands rows per doc of (band_id, band_hash, id) — the
-    banded hash is uniform, so no skew; the self-join never happens
-    (pairs are built by collecting ids per bucket, and buckets are tiny
-    by construction). `max_bucket_size` guards the degenerate buckets a
-    real corpus produces (every empty/boilerplate doc shares one
-    signature and would emit O(n^2) pairs): oversized buckets are
+    Shuffle cost: bands rows per doc of (band, key, id) — the banded
+    hash is uniform, so no skew; no self-join ever happens. The cap is
+    applied in the JVM, before any id reaches Python. It guards the
+    degenerate buckets a real corpus produces (every empty/boilerplate
+    doc shares one signature and would emit O(n^2) pairs): they are
     exact-duplicate clusters in disguise — handle them with
     `exact_duplicates`, not pairwise Jaccard."""
     rows_per_band = num_hashes // bands
     sig = minhash_signature_from_shingles(
         shingles_from_tokens(F.col("_tk"), shingle_k), num_hashes
     )
-    banded = df.select(
+    signed = df.select(
         F.col(id_col).alias("_id"),
         tokens(F.col(text_col)).alias("_tk"),
-    ).select(F.col("_id"), sig.alias("_sig")).select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(
-                        *[
-                            F.col("_sig").getItem(b * rows_per_band + r)
-                            for r in range(rows_per_band)
-                        ]
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("_bb"),
-    ).select("_id", "_bb.band", "_bb.bucket")
-
-    buckets = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list("_id")).alias("ids")
-    ).filter(
-        (F.size("ids") > 1) & (F.size("ids") <= max_bucket_size)
-    )
-
-    # pairs within each bucket, deduped across bands
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ids"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("ids"), i + 2, F.size("ids")),
-                        lambda b: F.struct(a.alias("a"), b.alias("b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b").distinct()
-    return pairs
+    ).select(F.col("_id"), sig.alias("_sig"))
+    return _lsh_pairs(_banded(signed, [
+        F.xxhash64(*[F.col("_sig")[b * rows_per_band + r]
+                     for r in range(rows_per_band)])
+        for b in range(bands)
+    ], "_id"), max_bucket_size)
 
 
 def jaccard_pairs(
@@ -467,25 +439,27 @@ def simhash_udf(num_bits: int = 64):
 
     @F.pandas_udf(T.LongType())
     def _simhash(s: pd.Series) -> pd.Series:
-        out = np.zeros(len(s), dtype=np.int64)
-        weights = np.uint64(1) << np.arange(num_bits, dtype=np.uint64)
-        for i, text in enumerate(s):
-            if text is None:
-                continue
-            toks = text.lower().split()
-            if not toks:
-                continue
-            hs = np.frombuffer(
-                b"".join(_md5_8(t) for t in toks), dtype="<u8"
-            )
-            bits = ((hs[:, None] >> np.arange(num_bits, dtype=np.uint64)) & 1)
-            # signed arithmetic: uint64 would wrap when ones < half
-            votes = bits.sum(axis=0).astype(np.int64) * 2 - len(hs)
-            sig = (weights[votes > 0]).sum(dtype=np.uint64)
-            out[i] = np.int64(sig)
-        return pd.Series(out)
+        return pd.Series(_simhash_values(s, num_bits))
 
     return _simhash
+
+
+def _simhash_values(texts, num_bits: int = 64) -> np.ndarray:
+    """int64 SimHash per text (0 for NULL or token-less text)."""
+    out = np.zeros(len(texts), dtype=np.int64)
+    weights = np.uint64(1) << np.arange(num_bits, dtype=np.uint64)
+    for i, text in enumerate(texts):
+        if text is None:
+            continue
+        toks = text.lower().split()
+        if not toks:
+            continue
+        hs = np.frombuffer(b"".join(_md5_8(t) for t in toks), dtype="<u8")
+        bits = ((hs[:, None] >> np.arange(num_bits, dtype=np.uint64)) & 1)
+        # signed arithmetic: uint64 would wrap when ones < half
+        votes = bits.sum(axis=0).astype(np.int64) * 2 - len(hs)
+        out[i] = np.int64((weights[votes > 0]).sum(dtype=np.uint64))
+    return out
 
 
 def _md5_8(s: str) -> bytes:
@@ -508,50 +482,35 @@ def simhash_near_duplicates(
     df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3,
     max_bucket_size: int = 4096,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: pigeonhole banding on 4×16-bit chunks
-    (hamming<=3 over 64 bits => at least one chunk identical), then exact
-    hamming check within buckets. Oversized buckets (identical-signature
-    boilerplate clusters) are capped — see `minhash_candidates`."""
-    sh = with_simhash(df, text_col).select(
-        F.col(id_col).alias("_id"), F.col("simhash")
-    )
-    chunks = sh.select(
-        "_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright("simhash", c * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"),
-            )
-            for c in range(4)
-        ])).alias("_c"),
-    ).select("_id", "simhash", "_c.chunk", "_c.key")
-    buckets = chunks.groupBy("chunk", "key").agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("_id").alias("id"), F.col("simhash").alias("sh")))
-        ).alias("items")
-    ).filter(
-        (F.size("items") > 1) & (F.size("items") <= max_bucket_size)
-    )
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("items"),
-                    lambda a, i: F.transform(
-                        F.slice(F.col("items"), i + 2, F.size("items")),
-                        lambda b: F.struct(
-                            a["id"].alias("a"), b["id"].alias("b"),
-                            a["sh"].alias("sha"), b["sh"].alias("shb"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.a", "p.b", "p.sha", "p.shb").distinct()
-    hamming = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
-    return pairs.select(
-        "a", "b", hamming.alias("hamming")
+    """Near-dup pairs (a, b, hamming) by SimHash: pigeonhole banding on
+    4×16-bit chunks (hamming<=3 over 64 bits => at least one chunk
+    identical), then the exact hamming of each candidate pair. Pairs and
+    the JVM-side cap follow `minhash_candidates`' rule; an id repeated
+    with different texts gives one row per distinct hamming."""
+    def sign(batches):
+        for b in batches:
+            yield pa.record_batch(
+                [b[0], pa.array(_simhash_values(b[1].to_pylist()))],
+                names=["_id", "_sh"])
+
+    sh = df.select(id_col, text_col).mapInArrow(sign, T.StructType([
+        T.StructField("_id", df.schema[id_col].dataType),
+        T.StructField("_sh", T.LongType())]))
+    chunks = [F.shiftright("_sh", c * 16).bitwiseAND(F.lit(0xFFFF))
+              for c in range(4)]
+    return _lsh_pairs(
+        _banded(sh, chunks, "_id", "_sh"), max_bucket_size, _hamming_score,
+        (T.StructField("hamming", T.IntegerType()),),
     ).filter(F.col("hamming") <= max_hamming)
+
+
+def _hamming_score(tbl: pa.Table):
+    """`_lsh_pairs` hook for SimHash: the hamming distance of the two
+    signatures (`_sh`)."""
+    sh = tbl["_sh"].to_numpy()
+    return lambda ii, jj: [pa.array(np.unpackbits(
+        (sh[ii] ^ sh[jj]).view(np.uint8)).reshape(-1, 64).sum(
+            axis=1, dtype=np.int32))]
 
 
 # ---------------------------------------------------------------------------
@@ -605,7 +564,8 @@ def _hyperplane_band_keys_pandas(
     complement int32 of its sign bits: the wrap is a bijection, and
     bucket equality is all banding needs. The band explode rides the
     same pass: one (id, emb, band, key) row per band comes straight out
-    of Arrow."""
+    of Arrow. NULL-id rows drop first: a NULL in a batch turns a long id
+    column into float64 in pandas, which rounds ids above 2^53."""
     planes = np.asarray(planes, dtype=np.float64)
     dim = planes.shape[1]
     n_chunks = len(chunks)
@@ -638,7 +598,8 @@ def _hyperplane_band_keys_pandas(
                 "key": keys.reshape(-1),
             })
 
-    return df.select(id_col, emb_col).mapInPandas(go, schema)
+    return df.select(id_col, emb_col).filter(
+        F.col(id_col).isNotNull()).mapInPandas(go, schema)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -672,42 +633,22 @@ def embedding_candidate_pairs(
 
     The band keys come from one Arrow/numpy pass
     (`_hyperplane_band_keys_pandas`), and the embeddings ride that band
-    explode once: each (band, key) bucket scores ALL its pairs in one
-    grouped applyInArrow call (sequential folds over dimensions,
-    vectorized across the pairs; a/b are Arrow `take`s of the sorted
-    ids), so no per-pair join ever materializes vectors. The cos values
-    are bit-identical to the `cosine()` Column fold and the DuckDB
-    oracle's fold (same rounding sequence; pinned by test_dedup).
-    Degenerate buckets (near-constant embedding clusters, exact-dup
-    clusters in disguise) are capped by a per-group length check at
-    `max_bucket_size` rows.
-
-    The (band, key) rows are hash-repartitioned to
-    `spark.sql.shuffle.partitions` partitions (AQE's pre-coalescing
-    count) before the grouped scorer. Pair work grows with the square of
-    bucket rows while AQE sizes a shuffle by its bytes, so AQE would
-    coalesce this ~1 MB shuffle into one partition and one core would
-    score every bucket. An explicit partition count is never coalesced,
-    and it already satisfies the groupBy's distribution, so no second
-    exchange appears.
+    explode once into the pair kernel (`_lsh_pairs`), so no per-pair
+    join ever materializes vectors. Pairs and the JVM-side cap follow
+    `minhash_candidates`' rule; an id repeated with different vectors
+    gives one row per distinct cos. cos (`_cos_score`) is bit-identical
+    to the `cosine()` Column fold and the DuckDB oracle's fold (same
+    rounding sequence; pinned by test_dedup).
     """
-    with_keys = _hyperplane_band_keys_pandas(
+    rows = _hyperplane_band_keys_pandas(
         df, id_col, emb_col,
         seeded_planes(n_planes, dim, seed),
         plane_chunks(n_planes, n_chunks),
     )
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    scored = with_keys.repartition(parts, "band", "key").groupBy(
-        "band", "key"
-    ).applyInArrow(
-        _score_bucket_pairs_arrow(max_bucket_size),
-        T.StructType([
-            T.StructField("a", df.schema[id_col].dataType),
-            T.StructField("b", df.schema[id_col].dataType),
-            T.StructField("cos", T.DoubleType()),
-        ]),
+    return _lsh_pairs(
+        rows, max_bucket_size, _cos_score,
+        (T.StructField("cos", T.DoubleType()),),
     )
-    return scored.distinct()
 
 
 def _fold_cos_pair(va, vb):
@@ -791,69 +732,111 @@ def _seq_dot_and_norm2(e: np.ndarray, qmat: np.ndarray):
     return dot, n2
 
 
-def _score_bucket_pairs_arrow(max_bucket_size: int):
-    """applyInArrow scorer for one LSH bucket: all pairs (a < b, strict)
-    with the sequential-fold cosine (bit-identical to `_fold_cos_pair`).
-    Groups of fewer than 2 rows or over the cap emit nothing (the
-    degenerate-bucket guard). Ids are sorted with Arrow's stable sort
-    (NULLs last) and the a/b columns are `take`s of that sorted array,
-    so no per-pair Python object is made. A NULL element reads as NaN,
-    as it does after any Arrow-to-numpy transfer, and a NaN cos is
-    returned as NULL."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _cos_score(tbl: pa.Table):
+    """`_lsh_pairs` hook for hyperplane LSH: the cosine of the two
+    vectors (`_e`) as sequential folds over dimensions, vectorized across
+    the pairs and bit-identical to `_fold_cos_pair`, which scores every
+    pair of a bucket holding a NULL, ragged or empty vector. A NULL
+    element reads as NaN, as after any Arrow-to-numpy transfer; a NaN
+    cos is returned as NULL."""
+    emb = tbl["_e"].combine_chunks()
+    n = len(emb)
+    off = emb.offsets.to_numpy()
+    vals = emb.values.to_numpy(zero_copy_only=False)
+    lens = np.diff(off)
+    if emb.null_count or lens[0] == 0 or (lens != lens[0]).any():
+        null = emb.is_null().to_numpy(zero_copy_only=False)
+        vecs = [None if null[k] else vals[off[k]:off[k + 1]]
+                for k in range(n)]
+        return lambda ii, jj: [pa.array(
+            [_fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)],
+            pa.float64(), from_pandas=True,
+        )]
+    e = np.asarray(vals[off[0]:off[-1]], dtype=np.float64).reshape(n, lens[0])
+    en = np.sqrt(_seq_norm2(e))
 
-    def score(tbl: "pa.Table") -> "pa.Table":
-        n = tbl.num_rows
-        id_type = tbl.schema.field("_id").type
-        if n < 2 or n > max_bucket_size:
-            return pa.table({
-                "a": pa.array([], id_type), "b": pa.array([], id_type),
-                "cos": pa.array([], pa.float64()),
-            })
-        tbl = tbl.take(pc.sort_indices(tbl["_id"]))
-        ids = tbl["_id"].combine_chunks()
-        emb = tbl["_e"].combine_chunks()
-        # equal ids (NULLs included) share a dense rank; they never pair
-        rank = pc.rank(ids, tiebreaker="dense").to_numpy()
-        ii, jj = np.triu_indices(n, k=1)
-        keep = rank[ii] != rank[jj]
-        ii, jj = ii[keep], jj[keep]
-        off = emb.offsets.to_numpy()
-        vals = emb.values.to_numpy(zero_copy_only=False)
-        lens = np.diff(off)
-        if emb.null_count == 0 and lens[0] > 0 and (lens == lens[0]).all():
-            e = np.asarray(vals[off[0]:off[-1]], dtype=np.float64)
-            cols = e.reshape(n, lens[0]).T
-            # sequential left folds over dimensions (vectorized across
-            # the kept pairs): one rounded multiply + one rounded add
-            # per step, the exact expr/DuckDB rounding sequence
-            dot = np.zeros(len(ii), dtype=np.float64)
-            n2 = np.zeros(n, dtype=np.float64)
-            for col in cols:
-                dot += col[ii] * col[jj]
-                n2 += col * col
-            en = np.sqrt(n2)
-            na, nb = en[ii], en[jj]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos_vals = np.where((na > 0) & (nb > 0), dot / (na * nb), 0.0)
-            cos = pa.array(cos_vals, pa.float64(), mask=np.isnan(cos_vals))
-        else:
-            null = emb.is_null().to_numpy(zero_copy_only=False)
-            vecs = [
-                None if null[k] else vals[off[k]:off[k + 1]]
-                for k in range(n)
-            ]
-            cos = pa.array(
-                [_fold_cos_pair(vecs[i], vecs[j]) for i, j in zip(ii, jj)],
-                pa.float64(), from_pandas=True,
-            )
-        return pa.table({
-            "a": ids.take(pa.array(ii)), "b": ids.take(pa.array(jj)),
-            "cos": cos,
-        })
+    def score(ii, jj):
+        dot = np.zeros(len(ii), dtype=np.float64)
+        for col in e.T:
+            dot += col[ii] * col[jj]
+        na, nb = en[ii], en[jj]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where((na > 0) & (nb > 0), dot / (na * nb), 0.0)
+        return [pa.array(cos, pa.float64(), mask=np.isnan(cos))]
 
     return score
+
+
+# ---------------------------------------------------------------------------
+# banded-LSH pair kernel (MinHash, SimHash and hyperplane LSH)
+
+PAIR_TILE = 1 << 16  # pairs per emitted Arrow batch
+
+
+def _lsh_pairs(
+    rows: DataFrame, max_bucket_size: int,
+    score=lambda tbl: lambda ii, jj: [], fields: tuple = (),
+) -> DataFrame:
+    """(band, key, _id[, payload...]) rows -> distinct (a, b[, *fields]):
+    every a < b (strict) pair of non-NULL ids sharing a (band, key)
+    bucket of 2..`max_bucket_size` rows (NULL-id rows drop first).
+
+    The rows hash-repartition ONCE on (band, key) to an explicit
+    `spark.sql.shuffle.partitions` count: AQE sizes a shuffle by bytes
+    and would coalesce this small one onto one core, while pair work
+    grows with the square of bucket rows. A windowed count over
+    (band, key) shares the sort the grouped emitter needs, so buckets
+    outside 2..`max_bucket_size` drop in the JVM before any row reaches
+    Python. The emitter sorts each bucket's ids and yields its pairs in
+    tiles of `PAIR_TILE`, so its output memory is bounded by the tile,
+    not by n^2. `score(tbl)` is the family's hook: given the bucket's
+    id-sorted Arrow table it returns `f(ii, jj) -> [arrays]`, the
+    `fields` of the pairs at those row positions."""
+    parts = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+    kept = (
+        rows.filter(F.col("_id").isNotNull())
+        .repartition(parts, "band", "key")
+        .withColumn("_n", size)
+        .filter(F.col("_n").between(2, max_bucket_size))
+        .drop("_n")
+    )
+    id_t = rows.schema["_id"].dataType
+    schema = T.StructType(
+        [T.StructField("a", id_t), T.StructField("b", id_t), *fields]
+    )
+    tile = PAIR_TILE  # bound here: the emitter runs in Python workers
+
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
+        tbl = pa.Table.from_batches(list(batches))
+        tbl = tbl.take(pc.sort_indices(tbl["_id"]))
+        ids = tbl["_id"].combine_chunks()
+        n = len(ids)
+        # row i pairs with rows hi[i]..n-1, the ids strictly above its
+        # own; its pairs end at position end[i] of the bucket's pair list
+        rank = pc.rank(ids, tiebreaker="dense").to_numpy()
+        hi = np.searchsorted(rank, rank, side="right")
+        end = np.cumsum(n - hi)
+        pair_cols = score(tbl)
+        for start in range(0, int(end[-1]), tile):
+            pos = np.arange(start, min(start + tile, int(end[-1])))
+            ii = np.searchsorted(end, pos, side="right")
+            jj = n - end[ii] + pos
+            yield pa.record_batch(
+                [ids.take(ii), ids.take(jj), *pair_cols(ii, jj)],
+                names=schema.names)
+
+    return kept.groupBy("band", "key").applyInArrow(emit, schema).distinct()
+
+
+def _banded(df: DataFrame, keys: list, *cols: str) -> DataFrame:
+    """One (band, key, *cols) row per band: band b's key is keys[b]."""
+    return df.select(*cols, F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"), k.alias("key"))
+        for b, k in enumerate(keys)
+    ])).alias("_b")).select("_b.band", "_b.key", *cols)
 
 
 def suggest_minhash_config(

@@ -175,11 +175,17 @@ def rewrite_row(spec: RewriteSpec, msg: Row) -> None:
         msg[spec.key] = delim.join(vals)
     elif mode == "lookup":
         key = spec.lookup["key"]
-        table = {r[key]: r for r in spec.lookup["table"]}
+        table: dict = {}
+        for r in spec.lookup["table"]:
+            table.setdefault(r[key], r)  # first row of a key wins
         on_miss = spec.lookup.get("on_miss", "drop")
         v = msg.get(key)
         hit = table.get(v) if v is not None else None
-        if hit is None and v is not None and on_miss == "drop":
+        # the engine's miss predicate: a non-NULL key whose FIRST output
+        # comes back NULL, so a hit with a NULL first output is a miss
+        probe = next(iter(spec.lookup["output"]))
+        if (v is not None and on_miss == "drop"
+                and (hit is None or hit.get(probe) is None)):
             raise RowError(f"lookup_miss:{key}")
         for out in spec.lookup["output"]:
             if hit is not None:

@@ -524,9 +524,9 @@ def _cos_key(c):
 def test_embedding_candidate_pairs_edge_scores(spark, id_type):
     """The complete (a, b, cos) set over edge vectors: NULL, ragged,
     NULL-element, literal-NaN, zero and inf vectors, an id repeated with
-    the same vector and one repeated with a different vector. Pairs are
-    the a < b (strict) pairs sharing a band-key bucket of 2..cap rows,
-    once each. cos is `_fold_cos_pair` of the two vectors, and a NaN cos
+    the same vector, one repeated with a different vector, and a NULL id.
+    Pairs are the a < b (strict) pairs of non-NULL ids sharing a band-key
+    bucket of 2..cap rows, once each. cos is `_fold_cos_pair` of the two vectors, and a NaN cos
     reads back as NULL (a NULL element reaches the scorer as NaN and,
     like a literal NaN, scores 0.0; a ragged pair is NULL)."""
     dim, n_planes, n_chunks = 8, 6, 2
@@ -544,19 +544,22 @@ def test_embedding_candidate_pairs_edge_scores(spark, id_type):
         ("d_same", rows[3][1]),
         ("d_diff", rows[5][1]),
         ("d_diff", rng.randn(dim).tolist()),
+        (None, rows[3][1]),
     ]
     if id_type == "long":
-        code = {n: i for i, n in enumerate(sorted({n for n, _ in rows}))}
-        rows = [(code[n], v) for n, v in rows]
+        code = {n: i for i, n in
+                enumerate(sorted({n for n, _ in rows if n is not None}))}
+        rows = [(code.get(n), v) for n, v in rows]
     df = spark.createDataFrame(rows, f"vid {id_type}, emb array<double>")
 
-    # bucket membership by row, from the band-key pass
+    # bucket membership by row, from the band-key pass; NULL ids drop
+    # before buckets are sized
     planes = dedup.seeded_planes(n_planes, dim, 42)
     chunks = dedup.plane_chunks(n_planes, n_chunks)
     buckets: dict = {}
     for r in dedup._hyperplane_band_keys_pandas(
         spark.createDataFrame(
-            [(i, v) for i, (_, v) in enumerate(rows)],
+            [(i, v) for i, (n, v) in enumerate(rows) if n is not None],
             "row long, emb array<double>"),
         "row", "emb", planes, chunks,
     ).collect():
@@ -588,3 +591,194 @@ def test_embedding_candidate_pairs_edge_scores(spark, id_type):
     cos = [c for _, _, c in want]
     assert None in cos and 0.0 in cos
     assert any(isinstance(c, float) and c != 0.0 for c in cos)
+
+
+# ---------------------------------------------------------------------------
+# the banded-LSH pair kernel behind all three families
+
+LSH_FAMILIES = ["minhash", "simhash", "hyperplane"]
+_MH_HASHES, _MH_BANDS = 32, 16
+_HP_DIM, _HP_PLANES, _HP_CHUNKS = 8, 24, 2
+
+
+def _payloads(family, n, seed=0):
+    """n payloads (texts, or vectors for hyperplane) over disjoint
+    vocabularies, except that payload 1 is a near-dup of payload 0."""
+    rng = np.random.RandomState(seed)
+    if family == "hyperplane":
+        vs = rng.randn(n, _HP_DIM)
+        vs[1] = vs[0] + 1e-3 * rng.randn(_HP_DIM)
+        return [v.tolist() for v in vs]
+    texts = [" ".join(f"w{i}x{j}" for j in range(40)) for i in range(n)]
+    texts[1] = texts[0].replace("w0x39", "changed")
+    return texts
+
+
+def _band_keys(spark, family, payloads):
+    """{payload index: [(band, key), ...]} under each family's banding."""
+    if family == "simhash":
+        return {
+            i: [(c, (_py_simhash(t) >> (16 * c)) & 0xFFFF) for c in range(4)]
+            for i, t in enumerate(payloads)
+        }
+    if family == "minhash":
+        r = _MH_HASHES // _MH_BANDS
+        sig = spark.createDataFrame(
+            list(enumerate(payloads)), "row long, text string"
+        ).select("row", dedup.minhash_signature(
+            F.col("text"), _MH_HASHES).alias("s"))
+        keys = sig.select("row", *[
+            F.xxhash64(*[F.col("s")[b * r + k] for k in range(r)]).alias(f"k{b}")
+            for b in range(_MH_BANDS)
+        ])
+        return {x["row"]: [(b, x[f"k{b}"]) for b in range(_MH_BANDS)]
+                for x in keys.collect()}
+    out: dict = {}
+    for x in dedup._hyperplane_band_keys_pandas(
+        spark.createDataFrame(list(enumerate(payloads)),
+                              "row long, emb array<double>"),
+        "row", "emb", dedup.seeded_planes(_HP_PLANES, _HP_DIM, 42),
+        dedup.plane_chunks(_HP_PLANES, _HP_CHUNKS),
+    ).collect():
+        out.setdefault(x["_id"], []).append((x["band"], x["key"]))
+    return out
+
+
+def _pairs(spark, family, id_type, rows, payloads, cap):
+    """The family's entry point over (id, payload index) rows."""
+    if family == "hyperplane":
+        df = spark.createDataFrame([(i, payloads[p]) for i, p in rows],
+                                   f"id {id_type}, p array<double>")
+        return dedup.embedding_candidate_pairs(
+            df, "id", "p", dim=_HP_DIM, n_planes=_HP_PLANES,
+            n_chunks=_HP_CHUNKS, max_bucket_size=cap)
+    df = spark.createDataFrame([(i, payloads[p]) for i, p in rows],
+                               f"id {id_type}, p string")
+    if family == "minhash":
+        return dedup.minhash_candidates(
+            df, "id", "p", num_hashes=_MH_HASHES, bands=_MH_BANDS,
+            max_bucket_size=cap)
+    return dedup.simhash_near_duplicates(
+        df, "id", "p", max_hamming=64, max_bucket_size=cap)
+
+
+def _self_join(family, rows, payloads, keys, cap):
+    """The reference: a < b over non-NULL ids sharing a (band, key)
+    bucket of 2..cap rows, with the family's score -> (set of output
+    rows, bucket sizes)."""
+    buckets: dict = {}
+    for x, (i, p) in enumerate(rows):
+        if i is not None:
+            for bk in keys[p]:
+                buckets.setdefault(bk, []).append(x)
+    want = set()
+    for m in buckets.values():
+        if not 2 <= len(m) <= cap:
+            continue
+        for x, y in itertools.combinations(m, 2):
+            (ia, pa), (ib, pb) = sorted([rows[x], rows[y]], key=lambda t: t[0])
+            if ia == ib:
+                continue
+            if family == "minhash":
+                want.add((ia, ib))
+            elif family == "simhash":
+                h = (_py_simhash(payloads[pa]) ^ _py_simhash(payloads[pb]))
+                want.add((ia, ib, bin(h & ((1 << 64) - 1)).count("1")))
+            else:
+                want.add((ia, ib,
+                          dedup._fold_cos_pair(payloads[pa], payloads[pb])))
+    return want, [len(m) for m in buckets.values()]
+
+
+def _as_ids(rows, id_type):
+    """Long ids above 2^53, which a float64 cannot hold."""
+    if id_type == "string":
+        return rows
+    code = {n: (1 << 53) + 2 * k + 1 for k, n in
+            enumerate(sorted({n for n, _ in rows if n is not None}))}
+    return [(code.get(n), p) for n, p in rows]
+
+
+@pytest.mark.parametrize("id_type", ["string", "long"])
+@pytest.mark.parametrize("family", LSH_FAMILIES)
+def test_lsh_pairs_id_rule(spark, family, id_type):
+    """One id rule for MinHash, SimHash and hyperplane LSH: the output is
+    exactly the a < b (strict) pairs of non-NULL ids sharing a band
+    bucket of 2..cap rows, each row once. A NULL id never pairs, an id
+    repeated with the same payload never pairs with itself, and one
+    repeated with a different payload pairs once per payload's score."""
+    cap = 4
+    rows = _as_ids([
+        ("a", 0), ("b", 0), (None, 0),          # NULL id in a bucket
+        ("c", 1),                               # near-dup of payload 0
+        ("d", 2), ("d", 2), ("e", 2), ("j", 2),  # repeated id, at the cap
+        ("f", 3), ("f", 4), ("h", 3), ("i", 4),  # id with two payloads
+        ("k1", 5), ("k2", 5), ("k3", 5), ("k4", 5), ("k5", 5),  # over cap
+        ("s1", 6), ("s1", 6),                   # one id: no pair at all
+        ("s2", 7),
+    ], id_type)
+    payloads = _payloads(family, 8)
+    want, sizes = _self_join(family, rows, payloads,
+                             _band_keys(spark, family, payloads), cap)
+    assert cap in sizes and max(sizes) > cap
+    got = [tuple(r) for r in
+           _pairs(spark, family, id_type, rows, payloads, cap).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+@pytest.mark.parametrize("family", LSH_FAMILIES)
+def test_lsh_pairs_tiled_bucket_equals_untiled(spark, family, monkeypatch):
+    """A bucket at the cap emitted in tiles of 3 pairs (tile edges fall
+    inside one id's run of partners and across a repeated id) gives the
+    untiled reference's pair set."""
+    cap = 6
+    rows = [(1, 0), (2, 0), (3, 0), (3, 0), (4, 0), (5, 0),
+            (6, 2), (7, 2), (8, 3)]
+    payloads = _payloads(family, 4)
+    want, sizes = _self_join(family, rows, payloads,
+                             _band_keys(spark, family, payloads), cap)
+    assert cap in sizes and len(want) > 3
+    monkeypatch.setattr(dedup, "PAIR_TILE", 3)
+    got = [tuple(r) for r in
+           _pairs(spark, family, "long", rows, payloads, cap).collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+
+
+def _emitter_input_rows(df) -> int:
+    """Rows entering the pair emitter of df's executed plan: the row
+    count of the first node under FlatMapGroupsInArrow that counts its
+    output."""
+    from logagent_spark.plans.metrics import _walk
+
+    p = df._jdf.queryExecution().executedPlan()
+    if p.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        p = p.executedPlan()
+    nodes: list = []
+    _walk(p, nodes)
+    at = [k for k, (name, _) in enumerate(nodes)
+          if name == "FlatMapGroupsInArrowExec"]
+    assert len(at) == 1
+    for _, n in nodes[at[0] + 1:]:
+        if n.metrics().contains("numOutputRows"):
+            return int(n.metrics().apply("numOutputRows").value())
+    raise AssertionError("no row count under the emitter")
+
+
+@pytest.mark.parametrize("family", LSH_FAMILIES)
+def test_lsh_pairs_skewed_bucket_never_reaches_python(spark, family):
+    """20k identical items share one bucket per band. With a small cap,
+    the JVM drops those buckets: the planted near-dup pair survives, and
+    the rows entering the Python emitter are exactly the band rows of the
+    2..cap buckets."""
+    cap, n_hot = 8, 20_000
+    payloads = _payloads(family, 3)
+    rows = [(i, 2) for i in range(n_hot)] + [(n_hot, 0), (n_hot + 1, 1)]
+    want, sizes = _self_join(family, rows, payloads,
+                             _band_keys(spark, family, payloads), cap)
+    assert {(a, b) for a, b, *_ in want} == {(n_hot, n_hot + 1)}
+    out = _pairs(spark, family, "long", rows, payloads, cap)
+    assert {tuple(r) for r in out.collect()} == want
+    assert _emitter_input_rows(out) == sum(
+        s for s in sizes if 2 <= s <= cap)

@@ -205,43 +205,60 @@ def test_embedding_near_dup_plan_has_arrow_scorer_and_no_vector_buckets(spark):
     assert "collect_list" not in plan
 
 
-def test_embedding_scorer_exchange_is_not_coalesced(spark):
-    """Pair work grows with the square of bucket rows, so the scorer's
-    (band, key) shuffle must keep its explicit partition count (the
-    spark.sql.shuffle.partitions setting, one per task slot on this
-    session): after the run, the final adaptive plan has exactly one
-    hashpartitioning(band, key, n) exchange, read by the Arrow scorer
-    without an AQE coalescing read in between, and no pandas grouped
-    scorer."""
-    import re
-
+def _lsh_pairs_frame(spark, family):
+    """50 rows through one LSH family's pair entry point."""
     import numpy as np
 
-    from logagent_spark.operators.dedup import embedding_candidate_pairs
+    from logagent_spark.operators import dedup
+
+    if family == "hyperplane":
+        rng = np.random.RandomState(0)
+        rows = [(i, rng.randn(16).tolist()) for i in range(50)]
+        df = spark.createDataFrame(rows, "vid long, emb array<double>")
+        return dedup.embedding_candidate_pairs(df, "vid", "emb", dim=16)
+    rows = [(i, " ".join(f"w{i % 7}x{j}" for j in range(12)))
+            for i in range(50)]
+    df = spark.createDataFrame(rows, "vid long, text string")
+    if family == "minhash":
+        return dedup.minhash_candidates(df, "vid", "text")
+    return dedup.simhash_near_duplicates(df, "vid", "text")
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "hyperplane"])
+def test_embedding_scorer_exchange_is_not_coalesced(spark, family):
+    """One pair kernel behind all three LSH families. Pair work grows
+    with the square of bucket rows, so the (band, key) shuffle must keep
+    its explicit partition count (the spark.sql.shuffle.partitions
+    setting, one per task slot on this session): after the run, the
+    final adaptive plan has exactly one hashpartitioning(band, key, n)
+    exchange, read by the single Arrow emitter without an exchange or an
+    AQE coalescing read in between. The bucket-size filter sits between
+    them, so oversized buckets drop in the JVM; no bucket is collected
+    into a list, and no pandas grouped scorer or Python eval runs."""
+    import re
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    rng = np.random.RandomState(0)
-    rows = [(i, rng.randn(16).tolist()) for i in range(50)]
-    df = spark.createDataFrame(rows, "vid long, emb array<double>")
-    out = embedding_candidate_pairs(df, "vid", "emb", dim=16)
+    out = _lsh_pairs_frame(spark, family)
     out.collect()
     plan = _plan(out)
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0].splitlines()
     band_key = re.compile(
-        r"Exchange hashpartitioning\(band#\d+, key#\d+, (\d+)\)")
+        r"Exchange hashpartitioning\(band#\d+L?, key#\d+L?, (\d+)\)")
     exchanges = [i for i, line in enumerate(final) if band_key.search(line)]
     assert len(exchanges) == 1
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert n == spark.sparkContext.defaultParallelism
     assert band_key.search(final[exchanges[0]]).group(1) == str(n)
-    scorer = [i for i, line in enumerate(final)
-              if "FlatMapGroupsInArrow" in line]
-    assert len(scorer) == 1 and scorer[0] < exchanges[0]
-    between = final[scorer[0] + 1:exchanges[0]]
+    emitter = [i for i, line in enumerate(final)
+               if "FlatMapGroupsInArrow" in line]
+    assert len(emitter) == 1 and emitter[0] < exchanges[0]
+    between = final[emitter[0] + 1:exchanges[0]]
     assert not any("Exchange" in line or "AQEShuffleRead" in line
                    for line in between)
-    assert "FlatMapGroupsInPandas" not in plan
+    assert any("Filter" in line and "_n#" in line for line in between)
+    for banned in ("collect_list", "FlatMapGroupsInPandas", "EvalPython"):
+        assert banned not in plan
 
 
 def test_native_grok_dictionary_is_jvm_only(spark, pages_path):

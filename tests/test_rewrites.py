@@ -153,6 +153,28 @@ def test_lookup_path_enrich(spark, tmp_path):
     }
 
 
+@pytest.mark.parametrize("on_miss", ["keep", "drop"])
+def test_lookup_twin_first_row_wins_and_null_output_misses(spark, on_miss):
+    """The oracle's lookup twin agrees with the engine on a table with a
+    duplicated key and a key whose output is NULL: the FIRST row of a key
+    wins, and under `on_miss: drop` a hit whose first output is NULL is a
+    miss (`lookup_miss:<key>`), like a key absent from the table."""
+    spec = PipelineSpec(rewrites=[RewriteSpec(mode="lookup", lookup={
+        "key": "lang",
+        "table": [{"lang": "en", "o": "first"},
+                  {"lang": "en", "o": "second"},
+                  {"lang": "de", "o": None}],
+        "output": {"o": "string"}, "on_miss": on_miss,
+    })])
+    got, want = _run_both(spark, spec)
+    _assert_parity(got, want, ["lang", "o"])
+    miss = "lookup_miss:lang" if on_miss == "drop" else None
+    assert {i: (g["o"], g[DROP_COL]) for i, g in got.items()} == {
+        0: ("first", None), 1: (None, miss), 2: (None, miss),
+        3: (None, None), 4: ("first", None),
+    }
+
+
 KEYS_SCHEMA = T.StructType([
     T.StructField("id", T.LongType(), False),
     T.StructField("message", T.StringType()),
