@@ -36,6 +36,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from logagent_spark.operators.textstats import (
     shingles,
@@ -333,10 +334,18 @@ def connected_components(
             [(r["a"], r["b"]) for r in pairs_ck.collect()]
         )
         id_t = pairs.schema["a"].dataType
+        schema = T.StructType([T.StructField("id", id_t),
+                               T.StructField("component", id_t)])
+        # an Arrow table plans as a LocalTableScan with statistics, so
+        # dedup_cluster's anti join broadcasts it from the first plan; a
+        # list plans as a stats-less ExistingRDD scan, whose sort-merge
+        # join shuffles every document before AQE switches to broadcast
         return spark.createDataFrame(
-            list(comp.items()),
-            T.StructType([T.StructField("id", id_t),
-                          T.StructField("component", id_t)]),
+            pa.Table.from_pydict(
+                {"id": list(comp), "component": list(comp.values())},
+                schema=to_arrow_schema(schema),
+            ),
+            schema=schema,
         )
     edges = (
         pairs_ck.select(F.col("a").alias("x"), F.col("b").alias("y"))

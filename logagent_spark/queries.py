@@ -795,20 +795,19 @@ SQL_EMBEDDING_NEAR_DUP = _sql_embedding_near_dup()
 
 def q_rate_limit_admit(spark, sf_dir):
     """Leaky-bucket rate limit (reference tail/ratelimiter) keyed by
-    event_type, batch twin of the stateful streaming operator — routed
-    through the hot-key-safe CHUNKED path (the production default: a
-    Zipf-hot key's per-task input is bounded by rows/chunk, not its full
-    history; the unchunked form survives only as the oracle twin). The
-    chunk count auto-sizes with data volume, so at gate scale this
-    collapses to one chunk of the SAME code path; multi-chunk state
-    carry on a Zipf fixture is pytest-pinned equal to the unchunked
-    operator (test_ratelimit: chunked==unchunked, NULL-ts routing). The
-    oracle replays the same event-time-ordered recurrence as a DuckDB
-    recursive CTE (one recursion step = one row per key)."""
-    from logagent_spark.streaming.ratelimit import rate_limited_batch_chunked
+    event_type, through the one batch operator: a hash exchange on the
+    key, a (key, ts, event_id) sort within partitions and an
+    iterator-form grouped Arrow emitter that carries each key's
+    (fill, last_us) from one Arrow batch to the next, so a Zipf-hot key
+    streams through its task instead of landing in one frame. Carry
+    across tiny batches is pytest-pinned against the simulation core
+    (test_ratelimit: hot key, ts ties, NULL ts). The oracle replays the
+    same event-time-ordered recurrence as a DuckDB recursive CTE (one
+    recursion step = one row per key)."""
+    from logagent_spark.streaming.ratelimit import rate_limited_batch
 
     ev = _t(spark, sf_dir, "events")
-    out = rate_limited_batch_chunked(
+    out = rate_limited_batch(
         ev, "event_type", "ts", size=5, leak_interval_s=3600.0,
         payload_cols=["event_id"], order_cols=["ts", "event_id"],
     )

@@ -1,7 +1,7 @@
 """Leaky-bucket rate limiting as a custom stateful streaming operator.
 
 The reference ships a leaky bucket on its tail collector
-(/root/reference/tail/ratelimiter/leakybucket.go:8-53, wired at
+(tail/ratelimiter/leakybucket.go:8-53, wired at
 tail/tail.go:266-284): fill leaks continuously at one unit per
 ``LeakInterval``; ``Pour`` rejects a message when ``fill + amount``
 would exceed ``Size`` — and rejection still advances ``Lastupdate``
@@ -15,41 +15,44 @@ distributed engine, in event time:
     shuffle is the groupBy on the key; state volume is O(distinct keys),
     independent of throughput — this scales to 10^12 rows because state
     never holds rows, only two numbers per host;
-  * batch: the same simulation under plain ``applyInPandas`` (the whole
-    history of a key is present, so no engine state is needed);
-  * the simulation core is pure Python over numpy arrays and doubles as
-    the test oracle — streaming, batch, and oracle share one function,
-    so they cannot drift.
+  * batch: one hash exchange on the key, one sort on (key, event time)
+    within partitions, and an iterator-form grouped ``applyInArrow``
+    whose emitter walks a key's Arrow batches in order and carries the
+    same two numbers from one batch to the next — a Zipf-hot key streams
+    through its task batch by batch, never materialized as one group;
+  * both call one pour step over epoch-µs timestamps, which wraps the
+    pure-Python simulation core ``simulate_bucket``; the core doubles as
+    the test oracle, so streaming, batch and oracle cannot drift.
 
 Rows are processed in event-time order within a key (the reference
 processes in arrival order; event time is the deterministic analog —
 SURVEY.md §2.7 late-data note). Rejected rows are flagged, not silently
 dropped, so drop accounting can ride the usual counters.
 
-NULL event-time rows cannot be placed on the time axis: all three twins
+NULL event-time rows cannot be placed on the time axis: both twins
 admit them unconditionally and leave bucket state untouched (they are
-neither a pour nor a leak), so chunked/unchunked/streaming agree even on
-dirty inputs.
+neither a pour nor a leak), so batch and streaming agree even on dirty
+inputs.
 
 The carried per-key state is ``(fill: float, last_us: int)``; the
 microsecond conversion uses ``round`` — ``int()`` truncation could land
 a resumed ``last_us`` one full microsecond low when the float
-seconds→µs round-trip comes back 1 ulp under, diverging resumed leak
-math from the unchunked twin.
+seconds→µs round-trip comes back 1 ulp under, diverging the leak math
+of a key split across batches from one pass over the key.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = [
-    "simulate_bucket", "rate_limited", "rate_limited_batch",
-    "rate_limited_batch_chunked",
-]
+__all__ = ["simulate_bucket", "rate_limited", "rate_limited_batch"]
 
 
 def simulate_bucket(
@@ -88,6 +91,31 @@ def simulate_bucket(
     return admitted, fill, float(last_ts)
 
 
+def _pour(
+    us: np.ndarray,
+    valid: np.ndarray,
+    size: float,
+    leak_interval_s: float,
+    fill: float,
+    last_us: int | None,
+) -> tuple[np.ndarray, float, int | None]:
+    """Pour an event-time ordered run of epoch-µs timestamps into a
+    bucket holding (fill, last_us): `simulate_bucket` over the rows
+    where `valid` holds; the others (NULL event time) are admitted and
+    touch no state. Returns (admitted for ALL rows, fill, last_us) —
+    last_us passes through unchanged when no timed row arrives."""
+    admitted = np.ones(len(us), dtype=bool)
+    timed = us[valid]
+    if len(timed):
+        adm, fill, last_ts = simulate_bucket(
+            timed / 1e6, size, leak_interval_s, fill,
+            None if last_us is None else last_us / 1e6,
+        )
+        admitted[valid] = adm
+        last_us = round(last_ts * 1e6)
+    return admitted, float(fill), last_us
+
+
 _STATE_SCHEMA = T.StructType([
     T.StructField("fill", T.DoubleType()),
     T.StructField("last_us", T.LongType()),
@@ -100,35 +128,6 @@ def _out_schema(df: DataFrame, cols: list[str]) -> T.StructType:
         [by_name[c] for c in cols]
         + [T.StructField("admitted", T.BooleanType(), False)]
     )
-
-
-def _ts_us(series: pd.Series) -> np.ndarray:
-    return series.astype("datetime64[us]").astype("int64").to_numpy()
-
-
-def _simulate_with_nulls(
-    pdf: pd.DataFrame,
-    ts_col: str,
-    size: float,
-    leak_interval_s: float,
-    fill: float,
-    last_us: int | None,
-) -> tuple[np.ndarray, float, int | None]:
-    """Run simulate_bucket over the non-NULL-ts rows of an event-time
-    sorted frame; NULL-ts rows are admitted unconditionally and do not
-    touch bucket state. Returns (admitted for ALL rows, fill, last_us)
-    — last_us passes through unchanged when no timed rows arrive."""
-    null_mask = pdf[ts_col].isna().to_numpy()
-    admitted = np.ones(len(pdf), dtype=bool)
-    us = _ts_us(pdf.loc[~null_mask, ts_col])
-    if len(us):
-        adm, fill, last_ts = simulate_bucket(
-            us / 1e6, size, leak_interval_s, fill,
-            None if last_us is None else last_us / 1e6,
-        )
-        admitted[~null_mask] = adm
-        last_us = round(last_ts * 1e6)
-    return admitted, float(fill), last_us
 
 
 def rate_limited(
@@ -144,7 +143,8 @@ def rate_limited(
     """Streaming leaky bucket per key. Input must be a streaming
     DataFrame; output appends every row with an `admitted` flag (filter
     on it to reproduce the reference's drop). `order_cols` breaks
-    event-time ties deterministically (default: stable on ts only)."""
+    event-time ties deterministically (default: stable on ts only);
+    NULLs sort first, as in the batch twin's Spark sort."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     cols = [key_col, ts_col, *(payload_cols or [])]
@@ -153,13 +153,13 @@ def rate_limited(
 
     def func(key, pdf_iter, state):
         pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values(sort_cols, kind="stable", ignore_index=True)
-        if state.exists:
-            fill, last_us = state.get
-        else:
-            fill, last_us = 0.0, None
-        admitted, fill, last_us = _simulate_with_nulls(
-            pdf, ts_col, size, leak_interval_s, fill, last_us
+        pdf = pdf.sort_values(sort_cols, kind="stable", na_position="first",
+                              ignore_index=True)
+        fill, last_us = state.get if state.exists else (0.0, None)
+        ts = pdf[ts_col].to_numpy(dtype="datetime64[us]")
+        admitted, fill, last_us = _pour(
+            ts.view("int64"), ~np.isnat(ts), size, leak_interval_s,
+            fill, last_us,
         )
         # state schema wants a LongType; 0 with fill==0.0 is the same
         # empty bucket as "never seen" (leak is a no-op at fill 0)
@@ -188,172 +188,40 @@ def rate_limited_batch(
     payload_cols: list[str] | None = None,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Batch twin: a key's full history is in its group, so the same
-    simulation runs statelessly under applyInPandas. One shuffle on the
-    key; per-group work is linear and the state is two scalars.
-    `order_cols` breaks event-time ties deterministically (pass the
-    payload id for a reproducible admitted set when timestamps can
-    collide).
-
-    Hot-key caveat: one Zipf-hot key serializes its full history into a
-    single Python worker; use `rate_limited_batch_chunked` when a key's
-    history exceeds one task's comfort."""
+    """Batch twin: ONE hash exchange on the key, one sort on (key,
+    `order_cols` or ts) within partitions, then an iterator-form grouped
+    `applyInArrow` that the exchange and the sort already satisfy (no
+    second shuffle or sort). Its emitter pours a key's Arrow batches in
+    order and carries (fill, last_us) from one batch to the next, the
+    way the streaming twin carries them across micro-batches; it never
+    holds more than one batch, so a Zipf-hot key's history streams
+    through its task in `spark.sql.execution.arrow.maxRecordsPerBatch`
+    slices. `order_cols` breaks event-time ties deterministically (pass
+    the payload id for a reproducible admitted set when timestamps can
+    collide); NULLs sort first."""
     cols = [key_col, ts_col, *(payload_cols or [])]
-    out_schema = _out_schema(df, cols)
-    sort_cols = order_cols or [ts_col]
+    names = [*cols, "admitted"]
 
-    def func(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="stable", ignore_index=True)
-        admitted, _, _ = _simulate_with_nulls(
-            pdf, ts_col, size, leak_interval_s, 0.0, None
-        )
-        out = pdf[cols].copy()
-        out["admitted"] = admitted
-        return out
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        fill, last_us = 0.0, None
+        for batch in batches:
+            ts = batch.column(ts_col)
+            admitted, fill, last_us = _pour(
+                ts.cast(pa.int64()).fill_null(0).to_numpy(),
+                ts.is_valid().to_numpy(zero_copy_only=False),
+                size, leak_interval_s, fill, last_us,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, pa.array(admitted)], names=names
+            )
 
-    return df.select(*cols).groupBy(key_col).applyInPandas(func, out_schema)
-
-
-def rate_limited_batch_chunked(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    *,
-    size: float,
-    leak_interval_s: float,
-    payload_cols: list[str] | None = None,
-    order_cols: list[str] | None = None,
-    num_chunks: int | None = None,
-    rows_per_chunk: int = 1_000_000,
-) -> DataFrame:
-    """Hot-key-safe batch twin: the event-time axis splits into
-    `num_chunks` global ranges; chunks run sequentially (mirroring the
-    streaming twin's micro-batches), each as ONE parallel applyInPandas
-    over keys with the previous chunk's (fill, last_us) state joined in.
-    A Zipf-hot key's per-task input is bounded by its rows/chunk instead
-    of its full history; the inter-chunk state is O(distinct keys) tiny
-    frames.
-
-    `num_chunks=None` (default) auto-sizes from the input: ceil(rows /
-    rows_per_chunk) capped at 64 — a worst-case single-key input still
-    bounds each Python task at ~rows_per_chunk rows, while small inputs
-    collapse to ONE chunk and skip the per-chunk driver-job overhead
-    (each chunk costs a sequential Spark job; paying 8 of them on a
-    10k-row input was pure fixed cost).
-
-    The inter-chunk state never touches the driver: it lives as a keyed
-    DataFrame ``(key, fill, last_us)`` cogrouped into the next chunk's
-    ``applyInPandas`` (keys absent from a chunk keep their row via a
-    left-anti carry-over), ``localCheckpoint``-ed per chunk to truncate
-    lineage. At 10^7-10^8 distinct keys the state is just a skinny
-    distributed table — no O(keys) dict in the driver or in task
-    closures.
-
-    Identical output to `rate_limited_batch` (the simulation core is
-    resumable by construction — the streaming operator already relies on
-    that across micro-batches)."""
-    cols = [key_col, ts_col, *(payload_cols or [])]
-    out_schema = _out_schema(df, cols)
-    out_plus_state = T.StructType(
-        list(out_schema.fields)
-        + [T.StructField("fill", T.DoubleType()),
-           T.StructField("last_us", T.LongType())]
+    return (
+        df.select(*cols)
+        .repartition(key_col)
+        .sortWithinPartitions(key_col, *(order_cols or [ts_col]))
+        .groupBy(key_col)
+        .applyInArrow(emit, _out_schema(df, cols))
     )
-    sort_cols = order_cols or [ts_col]
-    key_field = next(f for f in df.schema.fields if f.name == key_col)
-    state_schema = T.StructType([key_field, *_STATE_SCHEMA.fields])
-
-    # global event-time chunk boundaries (approx quantiles are fine: the
-    # split only balances work, never changes results). NTZ timestamps
-    # (what parquet gives) cannot cast to DOUBLE in Spark 4 — go through
-    # unix_micros; the session TZ is UTC so NTZ->LTZ cast is identity.
-    def _t_sec(c):
-        return F.unix_micros(c.cast("timestamp")) / F.lit(1e6)
-
-    if num_chunks is None:
-        n_rows = df.count()
-        num_chunks = max(1, min(64, -(-n_rows // rows_per_chunk)))
-
-    if num_chunks == 1:
-        # one chunk of the same code path IS the unchunked operator
-        # (state starts empty, nothing carries): skip the empty state
-        # frame, the cogroup, the per-chunk localCheckpoint job and the
-        # persist — pure fixed cost at small volume (r7, measured
-        # interleaved; identity pinned in test_ratelimit)
-        return rate_limited_batch(
-            df, key_col, ts_col, size=size,
-            leak_interval_s=leak_interval_s, payload_cols=payload_cols,
-            order_cols=order_cols,
-        )
-
-    qs = [i / num_chunks for i in range(1, num_chunks)]
-    bounds = (
-        df.select(_t_sec(F.col(ts_col)).alias("_t"))
-        .approxQuantile("_t", qs, 0.001)
-        if num_chunks > 1 else []
-    )
-
-    def func(key, pdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="stable", ignore_index=True)
-        if len(spdf):
-            fill = float(spdf["fill"].iloc[0])
-            lu = spdf["last_us"].iloc[0]
-            last = None if pd.isna(lu) else int(lu)
-        else:
-            fill, last = 0.0, None
-        admitted, fill, last = _simulate_with_nulls(
-            pdf, ts_col, size, leak_interval_s, fill, last
-        )
-        out = pdf[cols].copy()
-        out["admitted"] = admitted
-        # every row carries the chunk-final state so the next chunk's
-        # state frame is one first() per key; last_us stays NULL for
-        # keys that have only NULL-ts rows so far. A key with zero rows
-        # this chunk emits zero rows here and keeps its state via the
-        # left-anti carry below.
-        out["fill"] = fill
-        out["last_us"] = last
-        return out
-
-    def run_chunk(chunk_df: DataFrame, state_df: DataFrame) -> DataFrame:
-        return (
-            chunk_df.select(*cols).groupBy(key_col)
-            .cogroup(state_df.groupBy(key_col))
-            .applyInPandas(func, out_plus_state)
-        )
-
-    t = _t_sec(F.col(ts_col))
-    pieces: list[DataFrame] = []
-    # key -> (fill, last_us) as a DISTRIBUTED keyed frame, never a
-    # driver dict: O(distinct keys) must not grow the driver or the
-    # task closures (host/url keys reach 10^7+ at corpus scale)
-    state_df = df.sparkSession.createDataFrame([], state_schema)
-    edges = [float("-inf"), *dict.fromkeys(bounds), float("inf")]
-    first = True
-    for lo, hi in zip(edges, edges[1:]):
-        in_range = (t > F.lit(lo)) & (t <= F.lit(hi))
-        # NULL-ts rows fail every range predicate; route them to the
-        # first chunk so they are admitted (not silently dropped),
-        # matching the unchunked twin
-        chunk = df.filter(in_range | F.lit(first) & t.isNull())
-        first = False
-        with_state = run_chunk(chunk, state_df).persist()
-        pieces.append(with_state.select(*cols, "admitted"))
-        new_states = with_state.groupBy(key_col).agg(
-            F.first("fill").alias("fill"),
-            F.first("last_us").alias("last_us"),
-        )
-        carried = state_df.join(
-            new_states.select(key_col), key_col, "left_anti"
-        )
-        # eager localCheckpoint: materializes this chunk's state and
-        # truncates the per-chunk lineage (CLAUDE.md iterative-loop rule)
-        state_df = new_states.unionByName(carried).localCheckpoint(eager=True)
-
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def admitted_counts(limited: DataFrame, key_col: str) -> DataFrame:

@@ -1,7 +1,7 @@
 """Interleaved A/B for the r7 fixed-overhead cuts on the driver-scale
 gates: (1) census "auto" prefilter resolving to exact below the
 crossover, (2) curation_pipeline checkpointing the exact-dedup
-survivors, (3) the rate limiter's single-chunk fast path."""
+survivors."""
 import os
 import sys
 import time
@@ -12,68 +12,14 @@ sys.path.insert(0, REPO)
 import bench  # noqa: E402
 import logagent_spark.queries as q  # noqa: E402
 from logagent_spark.operators import textstats  # noqa: E402
-from logagent_spark.streaming import ratelimit as rl  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 ROUNDS = int(os.environ.get("AB_ROUNDS", "3"))
 
 
-def old_single_chunk(df, key_col, ts_col, **kw):
-    """The pre-r7 one-chunk path: cogroup with an empty state frame +
-    per-chunk localCheckpoint (copied from the r6 code)."""
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    size = kw["size"]; leak = kw["leak_interval_s"]
-    cols = [key_col, ts_col, *(kw.get("payload_cols") or [])]
-    out_schema = rl._out_schema(df, cols)
-    out_plus_state = T.StructType(
-        list(out_schema.fields)
-        + [T.StructField("fill", T.DoubleType()),
-           T.StructField("last_us", T.LongType())]
-    )
-    sort_cols = kw.get("order_cols") or [ts_col]
-    key_field = next(f for f in df.schema.fields if f.name == key_col)
-    state_schema = T.StructType([key_field, *rl._STATE_SCHEMA.fields])
-
-    def func(key, pdf, spdf):
-        pdf = pdf.sort_values(sort_cols, kind="stable", ignore_index=True)
-        if len(spdf):
-            fill = float(spdf["fill"].iloc[0])
-            lu = spdf["last_us"].iloc[0]
-            import pandas as pd
-            last = None if pd.isna(lu) else int(lu)
-        else:
-            fill, last = 0.0, None
-        admitted, fill, last = rl._simulate_with_nulls(
-            pdf, ts_col, size, leak, fill, last
-        )
-        out = pdf[cols].copy()
-        out["admitted"] = admitted
-        out["fill"] = fill
-        out["last_us"] = last
-        return out
-
-    state_df = df.sparkSession.createDataFrame([], state_schema)
-    with_state = (
-        df.select(*cols).groupBy(key_col)
-        .cogroup(state_df.groupBy(key_col))
-        .applyInPandas(func, out_plus_state)
-    ).persist()
-    piece = with_state.select(*cols, "admitted")
-    new_states = with_state.groupBy(key_col).agg(
-        F.first("fill").alias("fill"), F.first("last_us").alias("last_us")
-    )
-    carried = state_df.join(new_states.select(key_col), key_col, "left_anti")
-    new_states.unionByName(carried).localCheckpoint(eager=True)
-    return piece
-
-
 def main():
     spark = bench._session(32)
     spark.read.parquet(f"{SF}/documents.parquet").count()
-    spark.read.parquet(f"{SF}/events.parquet").count()
 
     def dup_new():
         q.q_text_dup_windows(spark, SF).write.format("noop") \
@@ -105,21 +51,10 @@ def main():
     def cur_old():
         q.q_curation_pipeline(spark, SF, persist_intermediate=False).count()
 
-    kwrl = dict(size=5, leak_interval_s=3600.0, payload_cols=["event_id"],
-                order_cols=["ts", "event_id"])
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-
-    def rl_new():
-        rl.rate_limited_batch_chunked(ev, "event_type", "ts", **kwrl).count()
-
-    def rl_old():
-        old_single_chunk(ev, "event_type", "ts", **kwrl).count()
-
     for label, new_fn, old_fn in [
         ("text_dup_windows", dup_new, dup_old),
         ("text_excise_windows", exc_new, exc_old),
         ("curation_pipeline", cur_new, cur_old),
-        ("rate_limit", rl_new, rl_old),
     ]:
         new_t, old_t = [], []
         for _ in range(ROUNDS):

@@ -183,6 +183,27 @@ def test_inline_lookup_broadcasts_a_local_table(spark, pages_path):
     assert not any("ExistingRDD" in ln for ln in lines), lines
 
 
+def test_dedup_cluster_broadcasts_local_components(spark):
+    """Small-graph components are a local table with statistics, so the
+    anti join broadcasts them from the first plan: no RDD scan, and the
+    document side reaches the join without an Exchange (a stats-less
+    ExistingRDD scan planned a sort-merge join, which shuffled every
+    document before AQE switched to a broadcast)."""
+    from logagent_spark.operators import dedup
+
+    docs = spark.range(2000).select(
+        F.col("id").alias("doc_id"), F.repeat(F.lit("x"), 100).alias("text")
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "a long, b long")
+    out = dedup.dedup_cluster(docs, pairs, "doc_id")
+    kept = {r["doc_id"] for r in out.collect()}
+    assert kept == set(range(2000)) - {2, 3, 9}
+    plan = _plan(out)
+    assert "ExistingRDD" not in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan, plan
+
+
 def test_embedding_near_dup_plan_has_arrow_scorer_and_no_vector_buckets(spark):
     """The banded-LSH near-dup plan is one band-key MapInPandas pass and
     one grouped Arrow scorer per (band, key) bucket: no pair join

@@ -6,6 +6,8 @@ boundaries (state must persist between triggers)."""
 from __future__ import annotations
 
 import os
+import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,38 +76,41 @@ def test_batch_matches_core(spark, events):
     assert counts["a.com"]["n_admitted"] < counts["a.com"]["n_total"]
 
 
-def test_streaming_state_persists_across_triggers(spark, events, tmp_path):
-    """Split the input into two time-ordered files; one file per trigger.
-    The bucket fill must carry over: streaming result == batch result on
-    the full input."""
-    in_dir, out_tbl = str(tmp_path / "in"), "rl_stream_out"
-    early = events.filter(F.col("ts") < F.timestamp_seconds(F.lit(3)))
-    late = events.filter(F.col("ts") >= F.timestamp_seconds(F.lit(3)))
-    early.coalesce(1).write.parquet(os.path.join(in_dir, "f=0"))
-    late.coalesce(1).write.parquet(os.path.join(in_dir, "f=1"))
-
+def _stream_limited(spark, parts, tmp_path, name, **kw):
+    """Run the streaming twin over `parts` written as one parquet file
+    each, one file per trigger; returns the memory sink's rows."""
+    in_dir = str(tmp_path / f"{name}_in")
+    for k, part in enumerate(parts):
+        part.coalesce(1).write.parquet(os.path.join(in_dir, f"f={k}"))
     stream = (
         spark.readStream.schema("host string, ts timestamp, msg_id long")
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir + "/f=*")
     )
-    limited = rate_limited(
-        stream, "host", "ts", size=3, leak_interval_s=2.0,
-        payload_cols=["msg_id"],
-    )
     q = (
-        limited.writeStream.outputMode("append")
-        .format("memory").queryName(out_tbl)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        rate_limited(stream, "host", "ts", payload_cols=["msg_id"], **kw)
+        .writeStream.outputMode("append")
+        .format("memory").queryName(name)
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.processAllAvailable()
     q.stop()
+    return spark.table(name).collect()
 
+
+def test_streaming_state_persists_across_triggers(spark, events, tmp_path):
+    """Split the input into two time-ordered files; one file per trigger.
+    The bucket fill must carry over: streaming result == batch result on
+    the full input."""
+    early = events.filter(F.col("ts") < F.timestamp_seconds(F.lit(3)))
+    late = events.filter(F.col("ts") >= F.timestamp_seconds(F.lit(3)))
     stream_rows = {
         (r["host"], r["msg_id"]): r["admitted"]
-        for r in spark.table(out_tbl).collect()
+        for r in _stream_limited(spark, [early, late], tmp_path,
+                                 "rl_stream_out", size=3,
+                                 leak_interval_s=2.0)
     }
     batch_rows = {
         (r["host"], r["msg_id"]): r["admitted"]
@@ -118,6 +123,27 @@ def test_streaming_state_persists_across_triggers(spark, events, tmp_path):
     # sanity: the split boundary actually cut host a.com's burst in two,
     # so equality proves fill survived the trigger boundary
     assert any(not adm for adm in batch_rows.values())
+
+
+def test_null_order_col_sorts_first_in_both_twins(spark, tmp_path):
+    """A NULL in an order column sorts first in both twins, so ts ties
+    broken by a NULL id admit the same rows: here the NULL-id pour at
+    t=0 is admitted and msg 3 is rejected (NULLs last would flip both)."""
+    ev = spark.createDataFrame(
+        [("a", 0, None), ("a", 0, 1), ("a", 0, 2), ("a", 0, 3),
+         ("a", 9, 4)], "host string, sec long, msg_id long",
+    ).select("host", F.timestamp_seconds("sec").alias("ts"), "msg_id")
+    kw = dict(size=3, leak_interval_s=100.0, order_cols=["ts", "msg_id"])
+    want = [(None, True), (1, True), (2, True), (3, False), (4, False)]
+
+    def pairs(rows):
+        return sorted(((r["msg_id"], r["admitted"]) for r in rows),
+                      key=lambda p: -1 if p[0] is None else p[0])
+
+    assert pairs(rate_limited_batch(
+        ev, "host", "ts", payload_cols=["msg_id"], **kw).collect()) == want
+    assert pairs(_stream_limited(spark, [ev], tmp_path, "rl_null_id",
+                                 **kw)) == want
 
 
 # ---------------------------------------------------------------------------
@@ -150,28 +176,9 @@ except ImportError:  # pragma: no cover
     pass
 
 
-def test_chunked_batch_matches_unchunked(spark, events):
-    """The hot-key-safe chunked twin must admit exactly the same rows as
-    the single-pass batch operator (state carries across chunks the way
-    the streaming twin carries it across micro-batches)."""
-    from logagent_spark.streaming.ratelimit import rate_limited_batch_chunked
-
-    kw = dict(size=3, leak_interval_s=2.0, payload_cols=["msg_id"],
-              order_cols=["ts", "msg_id"])
-    plain = {(r["host"], r["msg_id"]): r["admitted"]
-             for r in rate_limited_batch(events, "host", "ts", **kw).collect()}
-    chunked = {(r["host"], r["msg_id"]): r["admitted"]
-               for r in rate_limited_batch_chunked(
-                   events, "host", "ts", num_chunks=5, **kw).collect()}
-    assert plain == chunked and len(chunked) == events.count()
-
-
 def test_null_ts_rows_admitted_and_stateless(spark, events):
-    """NULL event-time rows: admitted unconditionally, bucket state
-    untouched, and chunked == unchunked even with nulls present (the
-    chunk range predicates would otherwise silently drop them)."""
-    from logagent_spark.streaming.ratelimit import rate_limited_batch_chunked
-
+    """NULL event-time rows: admitted unconditionally and bucket state
+    untouched (they sort first within their key, ahead of every pour)."""
     nulls = spark.createDataFrame(
         [("a.com", None, 900), ("c.com", None, 901)],
         "host string, sec long, msg_id long",
@@ -180,17 +187,14 @@ def test_null_ts_rows_admitted_and_stateless(spark, events):
     kw = dict(size=3, leak_interval_s=2.0, payload_cols=["msg_id"],
               order_cols=["ts", "msg_id"])
 
-    plain = {(r["host"], r["msg_id"]): r["admitted"]
-             for r in rate_limited_batch(ev, "host", "ts", **kw).collect()}
-    chunked = {(r["host"], r["msg_id"]): r["admitted"]
-               for r in rate_limited_batch_chunked(
-                   ev, "host", "ts", num_chunks=4, **kw).collect()}
-    assert plain == chunked and len(chunked) == ev.count()
-    assert plain[("a.com", 900)] and plain[("c.com", 901)]
+    got = {(r["host"], r["msg_id"]): r["admitted"]
+           for r in rate_limited_batch(ev, "host", "ts", **kw).collect()}
+    assert len(got) == ev.count()
+    assert got[("a.com", 900)] and got[("c.com", 901)]
     # state untouched: a.com's timed rows admit exactly as without nulls
     base = {(r["host"], r["msg_id"]): r["admitted"]
             for r in rate_limited_batch(events, "host", "ts", **kw).collect()}
-    assert all(plain[k] == v for k, v in base.items())
+    assert all(got[k] == v for k, v in base.items())
 
 
 def test_simulate_bucket_clamps_late_data():
@@ -202,19 +206,86 @@ def test_simulate_bucket_clamps_late_data():
     assert last == 100.0
 
 
-def test_auto_single_chunk_takes_fast_path(spark, events):
-    """r7: auto chunk sizing at small volume resolves to ONE chunk and
-    returns the plain batch operator — no cogroup/state machinery in
-    the plan — with output identical to a forced multi-chunk run."""
-    from logagent_spark.streaming.ratelimit import rate_limited_batch_chunked
+def _hot_key_rows():
+    """One hot key with hundreds of rows (second-resolution ts, so many
+    ties, and every 37th ts NULL) plus a few light keys."""
+    rng = random.Random(15)
+    rows = [("hot", None if i % 37 == 0 else rng.randrange(0, 240), i)
+            for i in range(700)]
+    rows += [(f"light{h}", None if i == 3 else rng.randrange(0, 60),
+              1000 + 100 * h + i) for h in range(4) for i in range(12)]
+    return rows
 
-    kw = dict(size=3, leak_interval_s=2.0, payload_cols=["msg_id"],
-              order_cols=["ts", "msg_id"])
-    auto = rate_limited_batch_chunked(events, "host", "ts", **kw)
-    plan = auto._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" not in plan, plan
-    got = {(r["host"], r["msg_id"]): r["admitted"] for r in auto.collect()}
-    multi = {(r["host"], r["msg_id"]): r["admitted"]
-             for r in rate_limited_batch_chunked(
-                 events, "host", "ts", num_chunks=3, **kw).collect()}
-    assert got == multi and len(got) == events.count()
+
+def test_hot_key_state_carries_across_tiny_arrow_batches(spark):
+    """With ~7-row Arrow batches the hot key reaches the emitter in 100
+    batches; every key's admitted sequence must still equal ONE
+    `simulate_bucket` pass over its (ts, msg_id)-ordered non-NULL rows,
+    and its NULL-ts rows are all admitted. A bucket reset at any batch
+    boundary admits rows this pass rejects."""
+    rows = _hot_key_rows()
+    ev = spark.createDataFrame(
+        rows, "host string, sec long, msg_id long"
+    ).select("host", F.timestamp_seconds("sec").alias("ts"), "msg_id")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        out = rate_limited_batch(
+            ev, "host", "ts", size=4, leak_interval_s=1.5,
+            payload_cols=["msg_id"], order_cols=["ts", "msg_id"],
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+    got = {r["msg_id"]: r["admitted"] for r in out}
+    assert len(got) == len(out) == len(rows)
+    for host in {h for h, _, _ in rows}:
+        timed = sorted((s, i) for h, s, i in rows if h == host and s is not None)
+        expect, _, _ = simulate_bucket([s for s, _ in timed], 4, 1.5)
+        assert [got[i] for _, i in timed] == expect.tolist(), host
+        assert all(got[i] for h, s, i in rows if h == host and s is None)
+    hot = [got[i] for h, _, i in rows if h == "hot"]
+    assert 0 < sum(hot) < len(hot) // 2
+
+
+def test_batch_plan_is_one_exchange_one_sort_one_arrow_emitter(spark, events):
+    """One hash exchange on the key, one sort on (key, order cols), and
+    the grouped Arrow emitter right above that sort: the groupBy reuses
+    both, so no second shuffle or sort and no pandas group."""
+    out = rate_limited_batch(
+        events, "host", "ts", size=3, leak_interval_s=2.0,
+        payload_cols=["msg_id"], order_cols=["ts", "msg_id"],
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    lines = [ln.strip(" +-:*") for ln in plan.splitlines()]
+    assert plan.count("Exchange ") == 1, plan
+    assert plan.count("Exchange hashpartitioning(host#") == 1, plan
+    sorts = [ln for ln in lines if ln.startswith("Sort [")]
+    assert len(sorts) == 1, plan
+    assert re.match(r"Sort \[host#\d+ ASC NULLS FIRST, ts#\d+ ASC NULLS FIRST, "
+                    r"msg_id#\d+L ASC NULLS FIRST\], false", sorts[0]), plan
+    # between the emitter and the sort sits only the Project that
+    # prepends the grouping key to the group's columns
+    emit = next(i for i, ln in enumerate(lines)
+                if ln.startswith("FlatMapGroupsInArrow"))
+    sort = lines.index(sorts[0])
+    assert emit < sort, plan
+    assert all(ln.startswith("Project [") for ln in lines[emit + 1:sort]), plan
+    assert "InPandas" not in plan, plan
+
+
+def test_building_the_batch_frame_starts_no_job(spark):
+    """The operator is a lazy plan: building it runs no count, quantile
+    or checkpoint job on the driver."""
+    ev = spark.range(100).select(
+        (F.col("id") % 3).alias("host"),
+        F.timestamp_seconds("id").alias("ts"), F.col("id").alias("msg_id"),
+    )
+    st = spark.sparkContext.statusTracker()
+    before = set(st.getJobIdsForGroup(None))
+    out = rate_limited_batch(
+        ev, "host", "ts", size=3, leak_interval_s=2.0,
+        payload_cols=["msg_id"], order_cols=["ts", "msg_id"],
+    )
+    assert set(st.getJobIdsForGroup(None)) == before
+    assert out.count() == 100
