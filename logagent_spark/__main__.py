@@ -43,6 +43,10 @@ def main(argv: list[str] | None = None) -> int:
                          "pandas-UDF kernel instead of native Column "
                          "expressions")
     args = ap.parse_args(argv)
+    # " url, lang," names url and lang: strip, drop empty and repeated names
+    keep = list(dict.fromkeys(
+        c.strip() for c in (args.keep or "").split(",") if c.strip()
+    )) or None
 
     specs = PipelineSpec.load_config(args.config)
     spark = get_spark("logagent_spark", parallelism=args.cpus)
@@ -65,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
     else:
         adapter = None
 
-    keep = args.keep.split(",") if args.keep else None
     summary = {}
     for spec in specs:
         pipe = CompiledPipeline(

@@ -19,8 +19,6 @@ Everything is numpy-seeded; same seed + n => byte-identical table.
 
 from __future__ import annotations
 
-import datetime as dt
-
 import numpy as np
 import pandas as pd
 
@@ -33,16 +31,6 @@ EMBEDDED_WAF_REGEX = (
 )
 LEVELS = ["INFO", "ERROR", "WARN", "DEBUG"]
 LANGS = ["en", "zh", "de", "fr", "es", "ru", "ja", "xx", "yy"]
-# lookup dim deliberately misses "xx" / "yy" (FIXTURES.md F3)
-LOOKUP_ROWS = [
-    {"lang": "en", "lang_name": "English", "geo": "US", "source": "cc-main"},
-    {"lang": "zh", "lang_name": "Chinese", "geo": "CN", "source": "cc-main"},
-    {"lang": "de", "lang_name": "German", "geo": "DE", "source": "cc-news"},
-    {"lang": "fr", "lang_name": "French", "geo": "FR", "source": "cc-news"},
-    {"lang": "es", "lang_name": "Spanish", "geo": "MX", "source": "cc-main"},
-    {"lang": "ru", "lang_name": "Russian", "geo": "RU", "source": "cc-extra"},
-    {"lang": "ja", "lang_name": "Japanese", "geo": "JP", "source": "cc-extra"},
-]
 
 _WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu "
@@ -137,18 +125,6 @@ def gen_pages(
             "lang": langs,
         }
     )
-
-
-def lookup_df(spark):
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("lang", T.StringType()),
-        T.StructField("lang_name", T.StringType()),
-        T.StructField("geo", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ])
-    return spark.createDataFrame(LOOKUP_ROWS, schema=schema)
 
 
 def pages_df(spark, n: int, seed: int = 42, n_hosts: int = 1000,

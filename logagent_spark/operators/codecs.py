@@ -327,38 +327,3 @@ def decode_wav(data: bytes) -> "tuple[int, np.ndarray]":
         raise ValueError("WAV data length not a frame multiple")
     arr = np.frombuffer(pcm, dtype="<i2").reshape(-1, ch)
     return int(rate), arr
-
-
-# ---------------------------------------------------------------------------
-# resize (decoded arrays; training pipelines normalize image dims)
-
-def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize of (h, w[, c]) via integer index maps —
-    pure fancy indexing, no interpolation error to reason about."""
-    h, w = arr.shape[:2]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return arr[ys][:, xs]
-
-
-def resize_bilinear(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Bilinear resize (align_corners=False convention, edges clamped),
-    float32 math, uint8 rounded result. Fully vectorized: four gathers
-    and a weighted sum."""
-    h, w = arr.shape[:2]
-    img = arr.astype(np.float32)
-    if img.ndim == 2:
-        img = img[:, :, None]
-    yf = np.clip((np.arange(out_h) + 0.5) * h / out_h - 0.5, 0, h - 1)
-    xf = np.clip((np.arange(out_w) + 0.5) * w / out_w - 0.5, 0, w - 1)
-    y0 = np.floor(yf).astype(np.int64)
-    x0 = np.floor(xf).astype(np.int64)
-    y1 = np.minimum(y0 + 1, h - 1)
-    x1 = np.minimum(x0 + 1, w - 1)
-    wy = (yf - y0).astype(np.float32)[:, None, None]
-    wx = (xf - x0).astype(np.float32)[None, :, None]
-    top = img[y0][:, x0] * (1 - wx) + img[y0][:, x1] * wx
-    bot = img[y1][:, x0] * (1 - wx) + img[y1][:, x1] * wx
-    out = top * (1 - wy) + bot * wy
-    out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
-    return out[:, :, 0] if arr.ndim == 2 else out

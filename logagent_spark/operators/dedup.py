@@ -38,11 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from logagent_spark.operators.textstats import (
-    shingles,
-    shingles_from_tokens,
-    tokens,
-)
+from logagent_spark.operators.textstats import shingles_from_tokens, tokens
 
 # ---------------------------------------------------------------------------
 # exact
@@ -54,22 +50,6 @@ def content_hash(col: Column, normalize: bool = True) -> Column:
         else col
     )
     return F.md5(c)
-
-
-def exact_duplicates(
-    df: DataFrame, id_col: str, text_col: str, normalize: bool = True
-) -> DataFrame:
-    """-> (hash, n_dups, doc_ids) for every duplicated content hash."""
-    h = content_hash(F.col(text_col), normalize).alias("content_hash")
-    return (
-        df.select(h, F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.count(F.lit(1)).alias("n_dups"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
 
 
 def dedup_exact(
@@ -91,35 +71,27 @@ def dedup_exact(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 
-def minhash_signature(
-    col: Column, num_hashes: int = 64, shingle_k: int = 5
+def minhash_signature_from_shingles(
+    sh: Column, num_hashes: int = 64
 ) -> Column:
-    """array<long> signature: element i = min over shingles of
-    xxhash64(shingle, seed_i). Pure Column expr — computed scan-side.
+    """array<long> signature of a shingle array Column: element i = min
+    over shingles of xxhash64(shingle, seed_i). Pure Column expr —
+    computed scan-side.
 
     Expression shape matters twice over:
 
     * the shingle array is the OUTER transform argument, so it is
       derived once per row; a naive per-seed expression list re-derives
       it num_hashes times (Catalyst's subexpression elimination does not
-      reach inside lambda bodies — measured ~30× slower);
+      reach inside lambda bodies — measured ~30× slower). Build it from
+      a materialized token column + `textstats.shingles_from_tokens` so
+      the token split runs once per row too;
     * each shingle STRING is hashed exactly once; the num_hashes seeded
       variants rehash the resulting 8-byte long (`xxhash64(h, seed)` —
       the standard universal-rehash MinHash construction), not the
       ~30-byte string. Hashing the string per seed made signature
       generation the hot loop of the whole MinHash pipeline.
     """
-    return minhash_signature_from_shingles(
-        shingles(col, shingle_k), num_hashes
-    )
-
-
-def minhash_signature_from_shingles(
-    sh: Column, num_hashes: int = 64
-) -> Column:
-    """minhash_signature from an already-built shingle array Column —
-    pair with a materialized token column + shingles_from_tokens so the
-    token split runs once per row (see textstats.shingles_from_tokens)."""
     seeds = F.array(*[F.lit(i) for i in range(num_hashes)])
     hs = F.transform(sh, lambda s: F.xxhash64(s))
     per_shingle = F.transform(
@@ -153,7 +125,7 @@ def minhash_candidates(
     degenerate buckets a real corpus produces (every empty/boilerplate
     doc shares one signature and would emit O(n^2) pairs): they are
     exact-duplicate clusters in disguise — handle them with
-    `exact_duplicates`, not pairwise Jaccard."""
+    `dedup_exact`, not pairwise Jaccard."""
     rows_per_band = num_hashes // bands
     sig = minhash_signature_from_shingles(
         shingles_from_tokens(F.col("_tk"), shingle_k), num_hashes
@@ -436,8 +408,9 @@ def dedup_cluster(
 # ---------------------------------------------------------------------------
 # SimHash
 
-def simhash_udf(num_bits: int = 64):
-    """Vectorized SimHash: per Arrow batch, token hashes vote per bit.
+def _simhash_values(texts, num_bits: int = 64) -> np.ndarray:
+    """int64 SimHash per text (0 for NULL or token-less text): token
+    hashes vote per bit.
 
     Token hash = little-endian uint64 of md5(token)[:8] — stable across
     executors/runs (no Python hash() randomization) AND reproducible in
@@ -445,16 +418,6 @@ def simhash_udf(num_bits: int = 64):
     real cross-engine oracle. The per-row numeric work is numpy over the
     whole token block; only the md5 digests are a Python loop (hashlib
     releases the GIL per call)."""
-
-    @F.pandas_udf(T.LongType())
-    def _simhash(s: pd.Series) -> pd.Series:
-        return pd.Series(_simhash_values(s, num_bits))
-
-    return _simhash
-
-
-def _simhash_values(texts, num_bits: int = 64) -> np.ndarray:
-    """int64 SimHash per text (0 for NULL or token-less text)."""
     out = np.zeros(len(texts), dtype=np.int64)
     weights = np.uint64(1) << np.arange(num_bits, dtype=np.uint64)
     for i, text in enumerate(texts):
@@ -481,10 +444,6 @@ def token_hash_u64(s: str) -> int:
     """Python twin of the simhash token hash (little-endian md5[:8];
     DuckDB: ``md5_number_upper``) — the test/driver oracle primitive."""
     return int.from_bytes(_md5_8(s), "little")
-
-
-def with_simhash(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
-    return df.withColumn(out_col, simhash_udf()(F.col(text_col)))
 
 
 def simhash_near_duplicates(
@@ -930,8 +889,7 @@ def suggest_lsh_config(
 
     Returns {n_planes, n_chunks, bits_per_band, expected_recall,
     expected_cand_frac, expected_cand_pairs (when n given)} — feed the
-    first two straight into `embedding_near_duplicates` /
-    `embedding_candidate_pairs`.
+    first two straight into `embedding_candidate_pairs`.
     """
     p_t = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     cap = max_cand_frac
@@ -967,37 +925,3 @@ def suggest_lsh_config(
     if n is not None:
         out["expected_cand_pairs"] = int(min(1.0, cand) * n * (n - 1) / 2)
     return out
-
-
-def embedding_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    emb_col: str,
-    *,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int | None = None,
-    seed: int = 42,
-    n_chunks: int | None = None,
-    max_bucket_size: int = 4096,
-) -> DataFrame:
-    """Near-dup embedding pairs (a, b, cos >= threshold): banded
-    hyperplane LSH candidates + exact cosine. Brute-force all-pairs in
-    queries.py is the exact baseline this approximates.
-
-    With n_planes/n_chunks unset, the config comes from
-    `suggest_lsh_config(threshold)` — sized for recall ~0.9 at the
-    threshold with a bounded random-pair candidate fraction. Explicit
-    small configs (the correctness gate uses 8 planes so its DuckDB
-    oracle stays enumerable) are GATE-ONLY: 8 planes / 4 chunks admits
-    ~68% of all pairs at threshold 0.4 and must not run at corpus
-    scale."""
-    if n_planes is None:
-        cfg = suggest_lsh_config(threshold)
-        n_planes, n_chunks = cfg["n_planes"], cfg["n_chunks"]
-    elif n_chunks is None:
-        n_chunks = 3
-    return embedding_candidate_pairs(
-        df, id_col, emb_col, dim=dim, n_planes=n_planes, seed=seed,
-        n_chunks=n_chunks, max_bucket_size=max_bucket_size,
-    ).filter(F.col("cos") >= threshold)

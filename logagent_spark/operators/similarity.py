@@ -100,7 +100,7 @@ def suggest_ivf_config(
     *,
     max_centroids: int = 4096,
 ) -> dict:
-    """Pick (n_centroids, nprobe) for knn_join_ivf / ivf_topk from the
+    """Pick (n_centroids, nprobe) for knn_join_ivf from the
     corpus size and a top-k recall target — the guard that stops anyone
     shipping the gate default (nprobe 2, measured 0.751 top-k recall)
     against a workload that needs 0.95.
@@ -251,25 +251,6 @@ def ivf_probes(
     return [int(i) for i in order[:nprobe]]
 
 
-def ivf_topk(
-    indexed: DataFrame,
-    emb_col: str,
-    query: list[float],
-    centroids: np.ndarray,
-    *,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    bucket_col: str = "ivf_bucket",
-) -> DataFrame:
-    """Search only the nprobe buckets nearest the query: the filter is a
-    partition-prunable predicate; the exact cosine runs on the pruned
-    fraction only."""
-    probes = ivf_probes(centroids, query, nprobe)
-    pruned = indexed.filter(F.col(bucket_col).isin(probes))
-    return brute_force_topk(pruned, emb_col, query, k=k, id_col=id_col)
-
-
 # ---------------------------------------------------------------------------
 # batched k-NN join (many queries at once)
 
@@ -326,7 +307,7 @@ def knn_join_ivf(
     and the global per-query top-k window shuffles only skinny
     candidate rows. nprobe = len(centroids) is full probe — exact
     brute force, the oracle configuration; partial probe trades recall
-    for scan fraction exactly like ivf_topk. Per-bucket selection under
+    for scan fraction. Per-bucket selection under
     the window's (cos_ppm DESC NULLS LAST, id ASC) order keeps the
     two-phase top-k exact.
 

@@ -26,7 +26,6 @@ STOPWORDS = {
     "es": ["el", "la", "los", "de", "y", "es", "no", "una", "por", "con"],
 }
 
-WORD_SPLIT = " "
 TOKEN_REGEX = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"  # BPE-ish: words + punct marks
 
 
@@ -63,25 +62,6 @@ def punct_ratio(col: Column) -> Column:
     total = F.octet_length(col)
     nonpunct = F.octet_length(F.regexp_replace(col, r"[^\w\s]", ""))
     return F.when(total > 0, (total - nonpunct) / total).otherwise(F.lit(0.0))
-
-
-def mean_word_len(col: Column) -> Column:
-    n = token_count(col)
-    chars = F.length(F.regexp_replace(col, " +", ""))
-    return F.when(n > 0, chars / n).otherwise(F.lit(0.0))
-
-
-def quality_score(col: Column, lang: str = "en") -> Column:
-    """Composite document-quality heuristic in [0,1]: length band,
-    low punctuation noise, healthy mean word length, stopword presence.
-    Weights are fixed, public-heuristic style (C4/Gopher-rule flavored)."""
-    n = token_count(col)
-    len_ok = F.when((n >= 10) & (n <= 100000), F.lit(1.0)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(col) < 0.2, F.lit(1.0)).otherwise(F.lit(0.0))
-    mwl = mean_word_len(col)
-    mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    sw = F.when(stopword_ratio(col, lang) > 0.0, F.lit(1.0)).otherwise(F.lit(0.0))
-    return (len_ok + punct_ok + mwl_ok + sw) / F.lit(4.0)
 
 
 def langid(col: Column, langs: list[str] | None = None) -> Column:
@@ -224,22 +204,6 @@ def min_shingle_fingerprint(col: Column, k: int = 5) -> Column:
     (one stable representative per document; near-identical docs with a
     small head/tail edit still collide)."""
     return F.array_min(F.transform(shingles(col, k), F.md5))
-
-
-def with_text_stats(
-    df: DataFrame, text_col: str = "text", lang: str = "en"
-) -> DataFrame:
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpe_ish_token_count(c).alias("n_bpe_tokens"),
-        F.round(stopword_ratio(c, lang), 6).alias("stopword_ratio"),
-        F.round(punct_ratio(c), 6).alias("punct_ratio"),
-        F.round(quality_score(c, lang), 6).alias("quality"),
-        langid(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
 
 
 def estimate_total_windows(

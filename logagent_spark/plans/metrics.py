@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["shuffle_write_bytes", "shuffle_write_records"]
+__all__ = ["shuffle_write_bytes"]
 
 
 def _walk(node, out):
@@ -51,8 +51,3 @@ def _sum_metric(df: DataFrame, key: str) -> int:
 def shuffle_write_bytes(df: DataFrame) -> int:
     """Total bytes written by every shuffle in df's executed plan."""
     return _sum_metric(df, "shuffleBytesWritten")
-
-
-def shuffle_write_records(df: DataFrame) -> int:
-    """Total records written by every shuffle in df's executed plan."""
-    return _sum_metric(df, "shuffleRecordsWritten")

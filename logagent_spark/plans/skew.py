@@ -8,15 +8,22 @@ in single tasks. Remedies, in preference order:
   1. Don't key on the hot column at all: when the downstream op only
      needs even load (sink writes, parse work), partition by the
      row-unique url hash — `salted_repartition` (uniform by
-     construction, no hot task).
+     construction, no hot task). No production path calls it yet; it
+     stays as the remedy BASELINE.md names, pinned by test_plans and
+     allow-listed in tests/test_reachability.py.
   2. Two-phase aggregation for skewed-key aggregates whose per-key state
      is large (countDistinct, collect_*): pre-aggregate on
      (key, salt-of-value) so the hot key's state splits across
-     `salt_buckets` tasks, then combine — `count_distinct_salted`.
+     `salt_buckets` tasks, then combine — `count_distinct_salted`
+     (the `agg_distinct_salted` gate and perfbench's html_grok_dedup).
      (Plain count/sum does NOT need this: Spark's hash aggregate is
      already map-side partial.)
   3. AQE skew-join splitting (enabled in session.py) for joins where a
      broadcast isn't possible.
+
+Skew is observed, not diagnosed by a side job: a traced run reads the
+largest shuffle partition's share of bytes from the executed plan
+(perfbench's `skew.max_partition_frac`).
 """
 
 from __future__ import annotations
@@ -65,18 +72,4 @@ def count_distinct_salted(
     return (
         partial.groupBy(*keys)
         .agg(F.sum("_partial").cast("long").alias(out_col))
-    )
-
-
-def top_hosts(
-    df: DataFrame, url_col: str = "url", k: int = 20
-) -> DataFrame:
-    """Skew diagnostic: host frequency head (count is partial-agg safe
-    even under skew; this is for observability, not a remedy)."""
-    return (
-        df.select(host_of(F.col(url_col)).alias("host"))
-        .groupBy("host")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("host"))
-        .limit(k)
     )

@@ -22,7 +22,6 @@ from logagent_spark.operators import curation as cu
 from logagent_spark.operators import dedup as dd
 from logagent_spark.operators import similarity as sim
 from logagent_spark.operators import textstats as ts
-from logagent_spark.operators.template import compile_template
 from logagent_spark.operators.validators import compile_gate
 from logagent_spark.plans.pipeline import CompiledPipeline
 
@@ -357,22 +356,6 @@ FROM events GROUP BY event_type
 """
 
 
-def q_template_render(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    schema = {f.name: f.dataType for f in docs.schema.fields}
-    tmpl = "[${lang}] ${source} :: ${text} ${nope}"
-    return docs.select(
-        "doc_id", compile_template(tmpl, schema).alias("rendered")
-    )
-
-
-SQL_TEMPLATE_RENDER = """
-SELECT doc_id,
-       '[' || lang || '] ' || source || ' :: ' || text || ' ${nope}' AS rendered
-FROM documents
-"""
-
-
 def q_syslog_decode(spark, sf_dir):
     from logagent_spark.sources import syslog_decode
 
@@ -633,11 +616,6 @@ FROM j WHERE i::DOUBLE / u >= 0.5
 """
 
 
-def q_dedup_simhash(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return dd.with_simhash(docs, "text").select("doc_id", "simhash")
-
-
 # SimHash rebuilt in SQL: token hash = little-endian uint64 of
 # md5(token)[:8] = DuckDB md5_number_upper; per-bit majority vote; the
 # unsigned signature two's-complements into the BIGINT Spark emits.
@@ -661,12 +639,6 @@ toks AS (
   FROM sig
 )
 """
-
-SQL_DEDUP_SIMHASH = f"""
-WITH {_SQL_SIMHASH_CTE}
-SELECT doc_id, simhash FROM s
-"""
-
 
 def q_dedup_simhash_pairs(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
@@ -1181,49 +1153,6 @@ FROM m
 """
 
 
-def q_tpch_promo_share(spark, sf_dir):
-    """TPC-H Q14-shaped: PROMO parts' share of revenue in a month
-    (broadcast part dim; the ratio of two exact-cent sums is one float
-    division — engine-portable). Completes the star schema: every
-    testdata table now has a driver query."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
-    )
-    part = _t(spark, sf_dir, "part")
-    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    agg = j.agg(
-        F.sum(F.when(F.col("p_type") == "PROMO", _cents(disc))
-              .otherwise(F.lit(0))).alias("promo_c"),
-        F.sum(_cents(disc)).alias("total_c"),
-    )
-    return agg.select(
-        "promo_c", "total_c",
-        _ppm(F.col("promo_c") / F.col("total_c")).alias("promo_share_ppm"),
-    )
-
-
-SQL_TPCH_PROMO_SHARE = """
-WITH j AS (
-  SELECT CASE WHEN p_type = 'PROMO'
-              THEN CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-                        AS BIGINT) ELSE 0 END AS pc,
-         CAST(floor(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)
-           AS tc
-  FROM lineitem, part
-  WHERE l_partkey = p_partkey
-    AND l_shipdate >= TIMESTAMP '1996-03-01'
-    AND l_shipdate < TIMESTAMP '1996-04-01'
-)
-SELECT CAST(sum(pc) AS BIGINT) AS promo_c,
-       CAST(sum(tc) AS BIGINT) AS total_c,
-       CAST(floor((sum(pc)::DOUBLE / sum(tc)::DOUBLE) * 1000000) AS BIGINT)
-         AS promo_share_ppm
-FROM j
-"""
-
-
 def q_agg_percentiles(spark, sf_dir):
     """Exact interpolated percentiles per key (log-latency analytics).
     Spark `percentile` and DuckDB `quantile_cont` share the linear-
@@ -1383,79 +1312,6 @@ FROM events l ASOF LEFT JOIN snaps r
 
 def _cents(col) -> F.Column:
     return F.floor(col * 100).cast("long")
-
-
-def q_tpch_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-shaped pricing summary over lineitem. Money sums in
-    exact integer cents (floor(x*100) per row BEFORE summing) so the
-    aggregate is order-independent and engine-portable — summing raw
-    doubles would make the hash depend on partial-aggregation order."""
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz")
-    )
-    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(_cents(F.col("l_quantity"))).alias("sum_qty_c"),
-        F.sum(_cents(F.col("l_extendedprice"))).alias("sum_base_c"),
-        F.sum(_cents(disc)).alias("sum_disc_c"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-SQL_TPCH_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-         AS sum_qty_c,
-       CAST(sum(CAST(floor(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
-         AS sum_base_c,
-       CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-                     AS BIGINT)) AS BIGINT) AS sum_disc_c,
-       count(*) AS n
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY 1, 2
-"""
-
-
-def q_tpch_top_orders(spark, sf_dir):
-    """TPC-H Q3-shaped: top-10 highest-revenue unshipped BUILDING
-    orders. Dim side (filtered customers) broadcasts; orderBy+limit
-    compiles to TakeOrderedAndProject."""
-    cust = _t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp_ntz")
-    )
-    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    j = (
-        orders.join(F.broadcast(cust),
-                    orders.o_custkey == cust.c_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
-    )
-    rev = j.groupBy("l_orderkey", "o_orderdate").agg(
-        F.sum(_cents(disc)).alias("revenue_c")
-    )
-    return rev.orderBy(
-        F.col("revenue_c").desc(), F.col("l_orderkey")
-    ).limit(10)
-
-
-SQL_TPCH_TOP_ORDERS = """
-SELECT l_orderkey, o_orderdate,
-       CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-                     AS BIGINT)) AS BIGINT) AS revenue_c
-FROM customer, orders, lineitem
-WHERE c_mktsegment = 'BUILDING'
-  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate < TIMESTAMP '1998-01-01'
-  AND l_shipdate > TIMESTAMP '1998-01-01'
-GROUP BY 1, 2
-ORDER BY revenue_c DESC, l_orderkey LIMIT 10
-"""
 
 
 def q_tpch_region_revenue(spark, sf_dir):
@@ -1827,21 +1683,19 @@ WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
 """
 
 
-def q_curation_pipeline(spark, sf_dir, *, persist_intermediate=True):
+def q_curation_pipeline(spark, sf_dir):
     """Capstone: the full training-data curation chain as ONE plan —
     quality filter -> exact dedup (min-id per content hash) -> near-dup
     CLUSTER dedup (MinHash-LSH pairs -> connected components -> keep
     min id). The oracle recomputes every stage in SQL, including the
     transitive closure. Output = the surviving corpus.
 
-    `persist_intermediate=True` (the default since r7 — it is the
-    production form, and measured faster at gate scale too): the
-    exact-dedup survivor set is localCheckpointed once, so the
+    The exact-dedup survivor set is localCheckpointed once, so the
     downstream stages (shingle pairs AND the anti-join) reuse it
-    instead of re-running the quality filter + exact dedup per stage.
-    The checkpoint computes from the parquet inputs inside this query's
-    own build (an execution strategy, not cross-run caching); results
-    are identical either way and the re-scan form stays available."""
+    instead of re-running the quality filter + exact dedup per stage
+    (measured faster at gate scale in r7, OPTIMIZATION_r07.md). The
+    checkpoint computes from the parquet inputs inside this query's own
+    build (an execution strategy, not cross-run caching)."""
     docs = _t(spark, sf_dir, "documents")
     c = F.col("text")
     quality = docs.filter(
@@ -1849,9 +1703,8 @@ def q_curation_pipeline(spark, sf_dir, *, persist_intermediate=True):
         & (ts.punct_ratio(c) < 0.05)
         & (ts.stopword_hits(c, "en") > 0)
     )
-    exact = dd.dedup_exact(quality, "doc_id", "text")
-    if persist_intermediate:
-        exact = exact.localCheckpoint(eager=True)
+    exact = dd.dedup_exact(quality, "doc_id", "text").localCheckpoint(
+        eager=True)
     pairs = dd.minhash_near_duplicates(
         exact, "doc_id", "text", threshold=0.5, num_hashes=32, bands=16
     ).select("a", "b")

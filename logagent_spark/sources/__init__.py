@@ -3,8 +3,6 @@
 from logagent_spark.sources.readers import (  # noqa: F401
     degradation_sample,
     from_pages,
-    read_json_lines,
-    read_pages,
     read_text_lines,
     read_whole_files,
     syslog_decode,

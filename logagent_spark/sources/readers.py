@@ -33,12 +33,6 @@ def _stamp(df: DataFrame, ts_col: str | None) -> DataFrame:
     return out
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """The primary input (BASELINE input_hint): CC-style pages table.
-    `text` becomes the message payload; `warc_ts` is the event time."""
-    return from_pages(spark.read.parquet(path))
-
-
 def from_pages(df: DataFrame) -> DataFrame:
     return _stamp(df.withColumn("message", F.col("text")), "warc_ts")
 
@@ -48,15 +42,6 @@ def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
     return _stamp(
         spark.read.text(path).withColumnRenamed("value", "message"), None
     )
-
-
-def read_json_lines(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """api collector (collector.go:27-80): one JSON document per message.
-    Reads raw text so the jsonify parser (and its drop+count semantics)
-    stays in the engine, exactly as in the reference."""
-    return read_text_lines(spark, path)
 
 
 def read_whole_files(

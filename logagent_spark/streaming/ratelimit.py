@@ -49,7 +49,6 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 __all__ = ["simulate_bucket", "rate_limited", "rate_limited_batch"]
@@ -221,13 +220,4 @@ def rate_limited_batch(
         .sortWithinPartitions(key_col, *(order_cols or [ts_col]))
         .groupBy(key_col)
         .applyInArrow(emit, _out_schema(df, cols))
-    )
-
-
-def admitted_counts(limited: DataFrame, key_col: str) -> DataFrame:
-    """Per-key admit/reject accounting (the reference logs overflow as a
-    cooloff event, tail/tail.go:403-426)."""
-    return limited.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum(F.col("admitted").cast("long")).alias("n_admitted"),
     )

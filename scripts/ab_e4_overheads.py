@@ -1,7 +1,8 @@
-"""Interleaved A/B for the r7 fixed-overhead cuts on the driver-scale
-gates: (1) census "auto" prefilter resolving to exact below the
-crossover, (2) curation_pipeline checkpointing the exact-dedup
-survivors."""
+"""Interleaved A/B for the r7 census "auto" prefilter resolving to exact
+below the crossover, on the driver-scale dup/excise window gates. (The
+curation_pipeline arm measured its exact-dedup checkpoint against the
+re-scan form; that form is gone, and its numbers stay in
+OPTIMIZATION_r07.md.)"""
 import os
 import sys
 import time
@@ -45,16 +46,9 @@ def main():
         finally:
             textstats.AUTO_PREFILTER_MIN_WINDOWS = old
 
-    def cur_new():
-        q.q_curation_pipeline(spark, SF).count()
-
-    def cur_old():
-        q.q_curation_pipeline(spark, SF, persist_intermediate=False).count()
-
     for label, new_fn, old_fn in [
         ("text_dup_windows", dup_new, dup_old),
         ("text_excise_windows", exc_new, exc_old),
-        ("curation_pipeline", cur_new, cur_old),
     ]:
         new_t, old_t = [], []
         for _ in range(ROUNDS):

@@ -1,5 +1,5 @@
-"""Codec-free PNG/BMP/WAV codecs: round trips, spec edge cases, error
-paths, resize. Pure numpy — no Spark session needed."""
+"""Codec-free PNG/BMP/WAV codecs: round trips, spec edge cases and error
+paths. Pure numpy — no Spark session needed."""
 
 from __future__ import annotations
 
@@ -164,31 +164,6 @@ def test_wav_rejects_non_pcm_and_garbage():
         C.decode_wav(b"RIFFxxxxAVI ")
     with pytest.raises(ValueError):
         C.decode_wav(C.encode_wav(s, 8000)[:-3])  # truncated data
-
-
-# ---------------------------------------------------------------------------
-# resize
-
-def test_resize_nearest_exact_block_downscale():
-    a = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    got = C.resize_nearest(a, 2, 2)
-    assert np.array_equal(got, [[0, 2], [8, 10]])
-
-
-def test_resize_bilinear_identity_and_constant():
-    a = RNG.integers(0, 256, (8, 6, 3), dtype=np.uint8)
-    assert np.array_equal(C.resize_bilinear(a, 8, 6), a)
-    flat = np.full((5, 5), 77, dtype=np.uint8)
-    assert np.array_equal(C.resize_bilinear(flat, 9, 3),
-                          np.full((9, 3), 77, dtype=np.uint8))
-
-
-def test_resize_bilinear_midpoint_average():
-    # 2x2 -> upscale center pixels interpolate between the corners
-    a = np.array([[0, 100], [100, 200]], dtype=np.uint8)
-    got = C.resize_bilinear(a, 4, 4).astype(int)
-    assert got[0, 0] == 0 and got[3, 3] == 200
-    assert 40 <= got[1, 1] <= 60  # ~ (0+100+100+200)*w ≈ 50 at center
 
 
 def _png_with(payloads):

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logagent_spark.operators import dedup
+from logagent_spark.operators.textstats import shingles
 
 
 def hyperplane_bits(emb, planes):
@@ -67,12 +68,10 @@ def _jaccard(a, b, k=5):
 
 def test_exact_duplicates_and_dedup(spark, corpus):
     df = spark.createDataFrame(corpus, "doc_id long, text string")
-    groups = dedup.exact_duplicates(df, "doc_id", "text").collect()
-    assert len(groups) == 1
-    assert sorted(groups[0]["doc_ids"]) == [0, 4, 5]  # normalization folds case/space
-
     kept = sorted(r["doc_id"] for r in dedup.dedup_exact(df, "doc_id", "text").collect())
-    assert kept == [0, 1, 2, 3, 6, 7]  # smallest id survives per group
+    # normalization folds case/space: 4 and 5 copy 0, whose smallest id
+    # survives
+    assert kept == [0, 1, 2, 3, 6, 7]
 
 
 def test_minhash_near_duplicates_vs_bruteforce(spark, corpus):
@@ -138,11 +137,11 @@ def test_simhash_near_duplicates(spark, corpus):
     _ = by_id
 
 
-def test_simhash_deterministic(spark, corpus):
-    df = spark.createDataFrame(corpus, "doc_id long, text string")
-    a = {r["doc_id"]: r["simhash"] for r in dedup.with_simhash(df, "text").collect()}
-    b = {r["doc_id"]: r["simhash"] for r in dedup.with_simhash(df, "text").collect()}
-    assert a == b
+def test_simhash_deterministic(corpus):
+    texts = [t for _, t in corpus]
+    a = dedup._simhash_values(texts).tolist()
+    assert a == dedup._simhash_values(texts).tolist()
+    assert a == [_py_simhash(t) for t in texts]
     assert a[0] == a[4]  # same tokens -> same signature
 
 
@@ -156,9 +155,9 @@ def test_embedding_near_duplicates(spark):
     v = base[2] + rng.randn(16) * 0.01
     rows.append((6, (v / np.linalg.norm(v)).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = dedup.embedding_near_duplicates(
-        df, "vec_id", "embedding", dim=16, threshold=0.95, n_planes=8
-    ).collect()
+    got = dedup.embedding_candidate_pairs(
+        df, "vec_id", "embedding", dim=16, n_planes=8
+    ).filter(F.col("cos") >= 0.95).collect()
     pairs = {(r["a"], r["b"]) for r in got}
     assert (2, 6) in pairs
     for r in got:
@@ -303,8 +302,8 @@ def test_suggest_minhash_config():
 
 
 def test_embedding_near_duplicates_auto_config(spark):
-    """Defaults (no explicit planes/chunks) flow through
-    suggest_lsh_config and still find a planted near-dup."""
+    """The config suggest_lsh_config picks for a threshold still finds
+    a planted near-dup."""
     rng = np.random.RandomState(3)
     base = rng.randn(8, 16)
     rows = [(i, (v / np.linalg.norm(v)).tolist())
@@ -312,9 +311,11 @@ def test_embedding_near_duplicates_auto_config(spark):
     v = base[4] + rng.randn(16) * 0.01
     rows.append((8, (v / np.linalg.norm(v)).tolist()))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = dedup.embedding_near_duplicates(
-        df, "vec_id", "embedding", dim=16, threshold=0.95
-    ).collect()
+    cfg = dedup.suggest_lsh_config(0.95)
+    got = dedup.embedding_candidate_pairs(
+        df, "vec_id", "embedding", dim=16, n_planes=cfg["n_planes"],
+        n_chunks=cfg["n_chunks"],
+    ).filter(F.col("cos") >= 0.95).collect()
     assert (4, 8) in {(r["a"], r["b"]) for r in got}
 
 
@@ -625,8 +626,8 @@ def _band_keys(spark, family, payloads):
         r = _MH_HASHES // _MH_BANDS
         sig = spark.createDataFrame(
             list(enumerate(payloads)), "row long, text string"
-        ).select("row", dedup.minhash_signature(
-            F.col("text"), _MH_HASHES).alias("s"))
+        ).select("row", dedup.minhash_signature_from_shingles(
+            shingles(F.col("text"), 5), _MH_HASHES).alias("s"))
         keys = sig.select("row", *[
             F.xxhash64(*[F.col("s")[b * r + k] for k in range(r)]).alias(f"k{b}")
             for b in range(_MH_BANDS)

@@ -1,9 +1,9 @@
 """Standalone oracle gates for queries retired from the 50-row driver
-registry in the r4 consolidation (template render, promo share, per-doc
-simhash, brute-force top-k, plain region revenue, and each half of the
-merged union gates runs there anyway). Retired from the DRIVER window,
-not from verification: same row-count / column / value-hash compare as
-the registry gate, directly against DuckDB at sf0.01."""
+registry in the r4 consolidation that bench.py still calls (plain region
+revenue, brute-force top-k). Retired from the DRIVER window, not from
+verification: same row-count / column / value-hash compare as the
+registry gate, directly against DuckDB at sf0.01. Retired gates with no
+caller left are deleted, not kept here."""
 
 from __future__ import annotations
 
@@ -22,16 +22,9 @@ TABLES = [
 ]
 
 RETIRED = [
-    ("template_render", q.q_template_render, q.SQL_TEMPLATE_RENDER),
-    ("tpch_promo_share", q.q_tpch_promo_share, q.SQL_TPCH_PROMO_SHARE),
     ("tpch_region_revenue", q.q_tpch_region_revenue,
      q.SQL_TPCH_REGION_REVENUE),
-    ("dedup_simhash", q.q_dedup_simhash, q.SQL_DEDUP_SIMHASH),
     ("similarity_topk", q.q_similarity_topk, q.SQL_SIMILARITY_TOPK),
-    # r6: displaced by the corpus-curation gates
-    ("tpch_pricing_summary", q.q_tpch_pricing_summary,
-     q.SQL_TPCH_PRICING),
-    ("tpch_top_orders", q.q_tpch_top_orders, q.SQL_TPCH_TOP_ORDERS),
 ]
 
 

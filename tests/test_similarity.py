@@ -89,14 +89,22 @@ def test_brute_force_topk_matches_numpy(emb_df, emb_np):
     assert got[0] == 0  # the query vector itself is its own nearest
 
 
+def _ivf_topk(indexed, q, cents, *, k, nprobe):
+    """Exact top-k over the nprobe buckets nearest the query."""
+    probes = sim.ivf_probes(cents, q, nprobe)
+    return sim.brute_force_topk(
+        indexed.filter(F.col("ivf_bucket").isin(probes)), "embedding", q,
+        k=k)
+
+
 def test_ivf_full_probe_equals_bruteforce(emb_df, emb_np):
     ids, mat = emb_np
     dim = mat.shape[1]
     cents = sim.seeded_centroids(dim, 8, seed=1)
     indexed = sim.ivf_index(emb_df, "embedding", cents)
     q = mat[3].tolist()
-    got = [r["vec_id"] for r in sim.ivf_topk(
-        indexed, "embedding", q, cents, k=10, nprobe=8).collect()]
+    got = [r["vec_id"] for r in _ivf_topk(
+        indexed, q, cents, k=10, nprobe=8).collect()]
     assert got == _numpy_topk(ids, mat, q, 10)
 
 
@@ -109,8 +117,8 @@ def test_ivf_pruned_recall(emb_df, emb_np):
     for qi in (0, 7, 42):
         q = mat[qi].tolist()
         want = set(_numpy_topk(ids, mat, q, 10))
-        got = {r["vec_id"] for r in sim.ivf_topk(
-            indexed, "embedding", q, cents, k=10, nprobe=4).collect()}
+        got = {r["vec_id"] for r in _ivf_topk(
+            indexed, q, cents, k=10, nprobe=4).collect()}
         recalls.append(len(got & want) / 10)
     indexed.unpersist()
     assert sum(recalls) / len(recalls) >= 0.5  # half the buckets probed
@@ -136,8 +144,7 @@ def test_kmeans_refine_full_probe_invariant(emb_df, emb_np):
     assert np.allclose(np.linalg.norm(cents, axis=1), 1.0)
     indexed = sim.ivf_index(emb_df, "embedding", cents)
     q = mat[3].tolist()
-    full = sim.ivf_topk(indexed, "embedding", q, cents, k=5,
-                        nprobe=len(cents))
+    full = _ivf_topk(indexed, q, cents, k=5, nprobe=len(cents))
     brute = sim.brute_force_topk(emb_df, "embedding", q, k=5)
     assert [r["vec_id"] for r in full.collect()] == \
            [r["vec_id"] for r in brute.collect()]

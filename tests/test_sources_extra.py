@@ -1,16 +1,14 @@
-"""dir collector (whole-file), degradation sampling, database DDL, CLI."""
+"""dir collector (whole-file), degradation sampling, CLI."""
 
 from __future__ import annotations
 
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
-from logagent_spark.config import HandlerSpec
-from logagent_spark.plans.sinks import create_table_sql, register_sink_table
 from logagent_spark.sources import degradation_sample, read_whole_files
 
 
@@ -35,34 +33,9 @@ def test_degradation_sample(spark):
     assert 700 <= n <= 1300  # ~10% of 10k, seeded
 
 
-def test_create_table_sql_from_fields():
-    h = HandlerSpec(mode="database", table="Protection",
-                    fields=["Src_IP varchar(64)", "Dst_Port int"])
-    sql = create_table_sql(h, "/tmp/x")
-    assert sql.startswith(
-        "CREATE TABLE IF NOT EXISTS protection "
-        "(src_ip varchar(64), dst_port int)"
-    )
+def _cli_config(tmp_path):
+    from logagent_spark.datagen import WAF_REGEX
 
-
-def test_register_sink_table_roundtrip(spark, tmp_path):
-    loc = str(tmp_path / "tbl")
-    spark.createDataFrame([("a", 1), ("b", 2)], "src_ip string, dst_port int") \
-        .write.parquet(loc)
-    h = HandlerSpec(mode="database", table="t_reg",
-                    fields=["src_ip string", "dst_port int"])
-    name = register_sink_table(spark, h, loc)
-    got = spark.sql(f"SELECT src_ip, dst_port FROM {name} ORDER BY src_ip")
-    assert [tuple(r) for r in got.collect()] == [("a", 1), ("b", 2)]
-    spark.sql(f"DROP TABLE {name}")
-
-
-@pytest.mark.slow
-def test_cli_end_to_end(spark, tmp_path):
-    from logagent_spark.datagen import WAF_REGEX, write_pages
-
-    inp = str(tmp_path / "pages")
-    write_pages(spark, inp, 500, seed=9, n_hosts=10, partitions=4)
     cfg = tmp_path / "job.json"
     cfg.write_text(json.dumps({
         "tasks": [{
@@ -72,13 +45,45 @@ def test_cli_end_to_end(spark, tmp_path):
             ],
         }],
     }))
+    return str(cfg)
+
+
+@pytest.mark.slow
+def test_cli_end_to_end(spark, tmp_path):
+    from logagent_spark.datagen import write_pages
+
+    inp = str(tmp_path / "pages")
+    write_pages(spark, inp, 500, seed=9, n_hosts=10, partitions=4)
     p = subprocess.run(
-        [sys.executable, "-m", "logagent_spark", "-f", str(cfg),
+        [sys.executable, "-m", "logagent_spark", "-f", _cli_config(tmp_path),
          "--input", inp, "--out", str(tmp_path / "out"),
          "--chunks", "2", "--cpus", "4", "--keep", "url,lang"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parent.parent,
     )
     assert p.returncode == 0, p.stderr[-1500:]
     summary = json.loads(p.stdout[p.stdout.index("{"):])
     assert summary["task_0"]["rows_in"] == 500
     assert summary["task_0"]["sink_counts"]["all"] == 500
+
+
+@pytest.mark.parametrize("keep", [" url, lang,", "url,lang, url,,"])
+def test_cli_keep_strips_names(spark, tmp_path, monkeypatch, capsys, keep):
+    """`--keep` names the columns url and lang: each name is stripped,
+    and empty and repeated names are dropped."""
+    from logagent_spark import __main__ as cli
+    from logagent_spark.datagen import write_pages
+
+    inp = str(tmp_path / "pages")
+    write_pages(spark, inp, 200, seed=9, n_hosts=10, partitions=2)
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    out = tmp_path / "out"
+    assert cli.main(["-f", _cli_config(tmp_path), "--input", inp,
+                     "--out", str(out), "--chunks", "1",
+                     "--keep", keep]) == 0
+    summary = json.loads(capsys.readouterr().out)
+    assert summary["task_0"]["sink_counts"]["all"] == 200
+    cols = spark.read.parquet(str(out / "task_0" / "data")).columns
+    assert "url" in cols and "lang" in cols
+    assert not [c for c in cols if c != c.strip() or not c]
